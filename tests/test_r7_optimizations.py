@@ -2,17 +2,20 @@
 result-identical to the path it replaced (the replaced implementations
 are kept in-tree as reference twins)."""
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
 def test_langid_arrow_gram_counts_match_explode_path(spark):
-    """_langid_gram_counts (Arrow partial counts) == the exploded
-    _char_gram_buckets groupBy count, row for row — the byte-identity
-    claim behind the r7 langid_train rewrite."""
-    from validate_xml_rust_spark.operators.textstats import (
-        _char_gram_buckets,
-        _langid_gram_counts,
+    """gram_bucket_counts over langid's text prep and char grams (Arrow
+    partial counts) == the exploded _char_gram_buckets groupBy count,
+    row for row — the byte-identity claim behind langid_train."""
+    from validate_xml_rust_spark.functions.grambuckets import (
+        char_grams,
+        gram_bucket_counts,
     )
+    from validate_xml_rust_spark.operators.textstats import _char_gram_buckets
     from validate_xml_rust_spark.sources.corpus import lang_corpus
 
     docs = lang_corpus(spark, 200, n_partitions=4)
@@ -24,10 +27,12 @@ def test_langid_arrow_gram_counts_match_explode_path(spark):
         .groupBy("b", "__l")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    new = _langid_gram_counts(
-        docs.filter(F.col("lang").isNotNull()), "text",
-        F.col("lang"), (3, 4, 5), 65536, "langid",
-    ).withColumnRenamed("__carry", "__l")
+    new = gram_bucket_counts(
+        docs.filter(F.col("lang").isNotNull()),
+        F.lower(F.coalesce(F.col("text"), F.lit(""))),
+        lambda t: char_grams(t, (3, 4, 5)), 65536, "langid",
+        key=F.col("lang"),
+    ).withColumnRenamed("__k", "__l")
     diff = (
         old.join(new, ["b", "__l"], "full_outer")
         .filter(~old["__c"].eqNullSafe(new["__c"]))
@@ -136,12 +141,14 @@ def test_curate_fused_narrow_steps_match_sequential_counts(spark):
 
 
 def test_vocab_counts_arrow_matches_exploded_path(spark):
-    """_vocab_counts_arrow == vocab_bucket_counts + groupBy count, row
-    for row (NULL partition ids included) — the r7 vocab_drift rewrite."""
-    from validate_xml_rust_spark.operators.drift import (
-        _vocab_counts_arrow,
-        vocab_bucket_counts,
+    """gram_bucket_counts over vocab_drift's text prep and word unigrams
+    == vocab_bucket_counts + groupBy count, row for row (NULL partition
+    ids included)."""
+    from validate_xml_rust_spark.functions.grambuckets import (
+        gram_bucket_counts,
+        word_grams,
     )
+    from validate_xml_rust_spark.operators.drift import vocab_bucket_counts
     from validate_xml_rust_spark.sources.corpus import synthetic_documents
 
     docs = synthetic_documents(spark, 300, n_partitions=4).withColumn(
@@ -159,15 +166,57 @@ def test_vocab_counts_arrow_matches_exploded_path(spark):
         .agg(F.count(F.lit(1)).alias("__n"))
         .withColumn("__pid", F.coalesce(F.col("__pid"), F.lit(-999)))
     )
-    new = _vocab_counts_arrow(
-        docs, "text", "partition_id", 256, "vocab"
-    ).withColumn("__pid", F.coalesce(F.col("__pid"), F.lit(-999)))
+    new = gram_bucket_counts(
+        docs,
+        F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
+        lambda t: word_grams(t, False), 256, "vocab",
+        key=F.col("partition_id").cast("int"),
+    ).select(
+        F.coalesce(F.col("__k"), F.lit(-999)).alias("__pid"),
+        F.col("b").cast("string").alias("__cat"),
+        F.col("__c").alias("__n"),
+    )
     diff = (
         old.join(new, ["__pid", "__cat"], "full_outer")
         .filter(~old["__n"].eqNullSafe(new["__n"]))
         .count()
     )
     assert diff == 0
+
+
+def test_dsir_arrow_gram_counts_match_explode_path(spark):
+    """gram_bucket_counts over dsir_weights' text prep and word
+    unigrams + bigrams == the exploded _dsir_gram_buckets groupBy count,
+    row for row — NULL, empty and whitespace-only text included."""
+    from validate_xml_rust_spark.functions.grambuckets import (
+        gram_bucket_counts,
+        word_grams,
+    )
+    from validate_xml_rust_spark.operators.curation import _dsir_gram_buckets
+    from validate_xml_rust_spark.sources.corpus import prose_documents
+
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "  \t \n "), (-4, " One  TWO, one two! ")],
+        "doc_id long, text string",
+    )
+    docs = prose_documents(spark, 300, n_partitions=4).unionByName(edge)
+    old = (
+        _dsir_gram_buckets(docs, "text", 4096, "dsir", None)
+        .groupBy("b")
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
+    new = gram_bucket_counts(
+        docs,
+        F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
+        lambda t: word_grams(t, True), 4096, "dsir",
+    )
+    diff = (
+        old.join(new, ["b"], "full_outer")
+        .filter(~old["__c"].eqNullSafe(new["__c"]))
+        .count()
+    )
+    assert diff == 0
+    assert old.count() > 0
 
 
 def test_winnow_pairs_match_selfjoin_reference(spark):
@@ -245,3 +294,40 @@ def test_bigram_strings_match_structs(spark):
     # 9-token doc → 8, 1-token/empty/NULL → 0, "a b" → 1,
     # hy/phen/d/mixed/case/1a2b3c/x → 6, 4×dup → 3
     assert old.count() == new.count() == 8 + 0 + 0 + 0 + 1 + 6 + 3
+
+
+_TOKEN_TEXT = st.text(
+    alphabet=st.one_of(
+        st.sampled_from(
+            list("abcXYZ019 -'.,\t\n\r\x00\x01\x1b\x7f")
+            + ["\u00a0", "\u2003", "\u3000", "\u0130", "\u212a", "\u00df", "Ж"]
+        ),
+        st.characters(codec="utf-8"),
+    ),
+    max_size=24,
+)
+
+
+@settings(max_examples=2, deadline=None)
+@given(texts=st.lists(st.one_of(st.none(), _TOKEN_TEXT), min_size=200, max_size=200))
+def test_tokens_match_python_word_tokens(spark_prop, texts):
+    """Spark tokens() == grambuckets.word_tokens over the JVM-lowered,
+    trimmed text, row for row, and no token holds whitespace — the
+    invariant the Arrow kernels' word grams and _bigram_strings' w1
+    recovery rely on. Uppercase, non-Latin, control bytes and NBSP-style
+    spaces included; one Spark job per example."""
+    from validate_xml_rust_spark.functions.grambuckets import word_tokens
+    from validate_xml_rust_spark.functions.texthash import tokens
+
+    df = spark_prop.createDataFrame(
+        list(enumerate(texts)), "i int, text string"
+    )
+    rows = df.select(
+        "i",
+        tokens(F.col("text")).alias("toks"),
+        F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))).alias("t"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["toks"] == word_tokens(r["t"]), (texts[r["i"]], r["t"])
+        assert not any(ch.isspace() for tok in r["toks"] for ch in tok)

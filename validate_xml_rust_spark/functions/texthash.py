@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 def tokens(text: Column) -> Column:
     """Lowercased word tokens; empty array for null/empty text."""
+    # No token contains a space: lm_perplexity's w1 recovery
+    # (_bigram_strings) and the grambuckets.word_tokens twin depend on it.
     t = F.split(F.lower(F.trim(F.coalesce(text, F.lit("")))), r"[^a-z0-9]+")
     return F.filter(t, lambda x: F.length(x) > 0)
 
@@ -30,13 +32,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(
         F.when(n >= k, sh).otherwise(F.array(F.concat_ws(" ", w)))
     )
-
-
-def shingle_hashes_expr(text: Column, k: int = 3) -> Column:
-    """Distinct string shingles → xxhash64 (pure-expression reference
-    implementation; the concat_ws(slice(...)) per shingle is interpreted
-    and measured ~1.8ms/doc — use ``shingle_hashes`` for volume)."""
-    return F.transform(shingles(text, k), lambda s: F.xxhash64(s))
 
 
 def token_hashes(text: Column) -> Column:
@@ -442,20 +437,6 @@ def minhash_signature_from_text(text: Column, k: int = 3, num_perm: int = 32) ->
         return pd.Series(out)
 
     return mh(token_hashes(text))
-
-
-def minhash_signature_expr(hashes: Column, num_perm: int = 32) -> Column:
-    """Pure-expression MinHash (reference implementation / tiny inputs).
-
-    NOTE: Spark's higher-order array functions (transform/aggregate) are
-    interpreted, not whole-stage-codegen'd — measured ~45ms/doc for 32
-    perms × 400 shingles. Use ``minhash_signature`` (Arrow+numpy) for any
-    real volume; this stays as the cross-check oracle."""
-    perms = F.sequence(F.lit(0), F.lit(num_perm - 1))
-    return F.transform(
-        perms,
-        lambda p: F.array_min(F.transform(hashes, lambda h: F.xxhash64(h, p))),
-    )
 
 
 MINHASH_SEED = 1317

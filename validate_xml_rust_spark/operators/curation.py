@@ -26,10 +26,17 @@ through the broadcast join without materializing.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.functions.grambuckets import (
+    bucket_ids,
+    gram_bucket_counts,
+    word_grams,
+)
 from validate_xml_rust_spark.functions.texthash import shingle_hashes
 
 # 32-bit ticket space for sampling decisions
@@ -250,80 +257,6 @@ def _dsir_gram_buckets(
     ).drop("__g")
 
 
-_DSIR_SPLIT = None  # lazily-compiled [^a-z0-9]+ splitter (module-level)
-
-
-def _dsir_tokens_py(text: str) -> list:
-    """Python twin of texthash.tokens() over ALREADY lowered+trimmed
-    text: split on [^a-z0-9]+ (ASCII classes — identical in Java and
-    Python regex), drop empties."""
-    global _DSIR_SPLIT
-    if _DSIR_SPLIT is None:
-        import re
-
-        _DSIR_SPLIT = re.compile(r"[^a-z0-9]+")
-    return [w for w in _DSIR_SPLIT.split(text) if w]
-
-
-def _dsir_bucket_counts_arrow(
-    frame: DataFrame, text_col: str, n_buckets: int, seed: str
-) -> dict:
-    """Driver-side dict ``bucket → occurrence count`` of word unigrams +
-    bigrams (the DSIR feature bag) — the Arrow twin of
-    ``_dsir_gram_buckets(...).groupBy(b).count().collect()``: one
-    mapInPandas pass emitting per-task partial counts (md5 memoized per
-    DISTINCT gram — texstats._gram_bucket_cache), summed exactly. The
-    result is ≤ n_buckets entries, driver-bounded by construction."""
-    import hashlib
-
-    import pandas as pd
-
-    from validate_xml_rust_spark.operators.textstats import (
-        _GRAM_CACHE_MAX,
-        _gram_bucket_cache,
-    )
-
-    src = frame.select(
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))).alias("__t")
-    )
-    nb = int(n_buckets)
-
-    def count_part(it):
-        cache = _gram_bucket_cache(seed, nb)
-        md5 = hashlib.md5
-        agg: dict[int, int] = {}
-        for pdf in it:
-            for text in pdf["__t"]:
-                toks = _dsir_tokens_py(text)
-                for g in toks + [
-                    f"{a} {b}" for a, b in zip(toks, toks[1:])
-                ]:
-                    b = cache.get(g)
-                    if b is None:
-                        b = (
-                            int(
-                                md5(
-                                    f"{seed}:{g}".encode("utf-8")
-                                ).hexdigest()[:8],
-                                16,
-                            )
-                            % nb
-                        )
-                        if len(cache) < _GRAM_CACHE_MAX:
-                            cache[g] = b
-                    agg[b] = agg.get(b, 0) + 1
-        if agg:
-            yield pd.DataFrame(
-                {"b": list(agg.keys()), "__pc": list(agg.values())}
-            )
-
-    part = src.mapInPandas(count_part, "b long, __pc long")
-    return {
-        int(r["b"]): int(r["__c"])
-        for r in part.groupBy("b").agg(F.sum("__pc").alias("__c")).collect()
-    }
-
-
 def dsir_weights(
     df: DataFrame,
     target: DataFrame,
@@ -351,11 +284,11 @@ def dsir_weights(
     the raw model but are not scored (the pipeline's dsir_select step
     routes them around the operator verbatim).
 
-    Scale shape (the lm_perplexity shape): each corpus reduces ONCE to a
-    ≤n_buckets-row count table — both broadcast; the scoring pass is one
-    narrow explode + two BroadcastHashJoins + a groupBy(key). Totals ride
-    the plan as broadcast one-row aggregates (no eager driver job). The
-    raw-side stats need a full corpus pass; at 10^12 docs pass
+    Scale shape: each corpus reduces ONCE to a ≤n_buckets-row count
+    table (one gram_bucket_counts pass, collected — driver-bounded by
+    construction); the per-bucket log-ratio table rides the scoring
+    task closure, so scoring is one narrow mapInPandas pass + a
+    groupBy(key). The raw-side stats need a full corpus pass; at 10^12 docs pass
     ``raw_sample_rate`` to estimate them on a deterministic hash sample
     instead (the paper fits its raw model on a subset too) — scoring
     still covers every row."""
@@ -373,60 +306,36 @@ def dsir_weights(
     # pattern); logw is a double sum whose addition order changes, the
     # same cross-engine tolerance the 6dp-rounded oracle already
     # absorbs (DuckDB sums in its own order today).
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
-    from validate_xml_rust_spark.operators.textstats import (
-        _GRAM_CACHE_MAX,
-        _gram_bucket_cache,
-    )
+    grams = partial(word_grams, bigrams=True)
 
-    ct = _dsir_bucket_counts_arrow(target, tcol, B, seed)
+    def prep(col: str) -> Column:
+        return F.lower(F.trim(F.coalesce(F.col(col), F.lit(""))))
+
+    def bucket_counts(frame: DataFrame, col: str) -> np.ndarray:
+        cnt = np.zeros(B, dtype=np.float64)
+        for r in gram_bucket_counts(frame, prep(col), grams, B, seed).collect():
+            cnt[r["b"]] = r["__c"]
+        return cnt
+
+    ctv = bucket_counts(target, tcol)
     raw = df if raw_sample_rate is None else hash_sample(
         df, raw_sample_rate, key_col, seed + "_raw"
     )
-    cr = _dsir_bucket_counts_arrow(raw, text_col, B, seed)
-    tt = float(sum(ct.values()))
-    tr = float(sum(cr.values()))
-    ctv = np.zeros(B, dtype=np.float64)
-    for b, c in ct.items():
-        ctv[b] = c
-    crv = np.zeros(B, dtype=np.float64)
-    for b, c in cr.items():
-        crv[b] = c
+    crv = bucket_counts(raw, text_col)
+    tt = float(ctv.sum())
+    tr = float(crv.sum())
     lr = np.log((ctv + a) / (tt + a * B)) - np.log((crv + a) / (tr + a * B))
 
     key_type = df.schema[key_col].dataType.simpleString()
-    nb = B
 
     def score_part(it):
-        cache = _gram_bucket_cache(seed, nb)
-        md5 = hashlib.md5
         for pdf in it:
             n_out = np.zeros(len(pdf), dtype=np.int64)
             w_out = np.zeros(len(pdf), dtype=np.float64)
             for k, text in enumerate(pdf["__t"]):
-                toks = _dsir_tokens_py(text)
-                bs: list = []
-                for g in toks + [
-                    f"{x} {y}" for x, y in zip(toks, toks[1:])
-                ]:
-                    b = cache.get(g)
-                    if b is None:
-                        b = (
-                            int(
-                                md5(
-                                    f"{seed}:{g}".encode("utf-8")
-                                ).hexdigest()[:8],
-                                16,
-                            )
-                            % nb
-                        )
-                        if len(cache) < _GRAM_CACHE_MAX:
-                            cache[g] = b
-                    bs.append(b)
+                bs = bucket_ids(grams(text), seed, B)
                 n_out[k] = len(bs)
                 if bs:
                     w_out[k] = lr[np.asarray(bs, dtype=np.int64)].sum()
@@ -435,12 +344,7 @@ def dsir_weights(
             yield out
 
     scored = (
-        df.select(
-            F.col(key_col).alias("__k"),
-            F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))).alias(
-                "__t"
-            ),
-        )
+        df.select(F.col(key_col).alias("__k"), prep(text_col).alias("__t"))
         .mapInPandas(
             score_part, f"__k {key_type}, __n long, __w double"
         )

@@ -25,11 +25,17 @@ output rows feed the violations table with constraint kind ``drift``.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from validate_xml_rust_spark.functions.grambuckets import (
+    gram_bucket_counts,
+    word_grams,
+)
 
 KS_ALPHA_COEFF = {0.10: 1.22, 0.05: 1.36, 0.01: 1.63}
 
@@ -477,78 +483,6 @@ def vocab_bucket_counts(
     ).drop("__tok")
 
 
-def _vocab_counts_arrow(
-    df: DataFrame,
-    text_col: str,
-    partition_col: str,
-    n_buckets: int,
-    seed: str,
-) -> DataFrame:
-    """(__pid int, __cat string, __n long) token-bucket counts — the
-    Arrow twin of ``vocab_bucket_counts(...).groupBy(pid, vocab).count()``
-    (r7, guide §4.2): one mapInPandas partial-count pass (md5 once per
-    DISTINCT token, memoized — curation's DSIR/langid pattern) + an exact
-    integer sum, instead of one exploded row + md5 projection per token
-    OCCURRENCE. ``vocab_bucket_counts`` itself is unchanged (the
-    streaming vocab gate consumes its per-row projection shape)."""
-    import hashlib
-
-    import pandas as pd
-
-    from validate_xml_rust_spark.operators.curation import _dsir_tokens_py
-    from validate_xml_rust_spark.operators.textstats import (
-        _GRAM_CACHE_MAX,
-        _gram_bucket_cache,
-    )
-
-    nb = int(n_buckets)
-    src = df.select(
-        F.col(partition_col).cast("int").alias("__pid"),
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))).alias("__t"),
-    )
-
-    def count_part(it):
-        cache = _gram_bucket_cache(seed, nb)
-        md5 = hashlib.md5
-        agg: dict[tuple, int] = {}
-        for pdf in it:
-            for pid, text in zip(pdf["__pid"], pdf["__t"]):
-                pid = None if pd.isna(pid) else int(pid)
-                for w in _dsir_tokens_py(text):
-                    b = cache.get(w)
-                    if b is None:
-                        b = (
-                            int(
-                                md5(
-                                    f"{seed}:{w}".encode("utf-8")
-                                ).hexdigest()[:8],
-                                16,
-                            )
-                            % nb
-                        )
-                        if len(cache) < _GRAM_CACHE_MAX:
-                            cache[w] = b
-                    k = (pid, b)
-                    agg[k] = agg.get(k, 0) + 1
-        if agg:
-            ks = list(agg)
-            yield pd.DataFrame(
-                {
-                    "__pid": pd.array(
-                        [k[0] for k in ks], dtype="Int32"
-                    ),
-                    "__cat": [str(k[1]) for k in ks],
-                    "__pc": [agg[k] for k in ks],
-                }
-            )
-
-    return (
-        src.mapInPandas(count_part, "__pid int, __cat string, __pc long")
-        .groupBy("__pid", "__cat")
-        .agg(F.sum("__pc").alias("__n"))
-    )
-
-
 def vocab_drift(
     df: DataFrame,
     text_col: str = "text",
@@ -585,8 +519,19 @@ def vocab_drift(
     result has materialized downstream."""
     from validate_xml_rust_spark.ckpt import eager_checkpoint
 
-    cnts = _vocab_counts_arrow(
-        df, text_col, partition_col, n_buckets=n_buckets, seed=seed
+    # Token counting runs in the Arrow partial-count kernel (one
+    # mapInPandas pass + an exact integer sum); `vocab_bucket_counts`
+    # remains the exploded reference twin, parity-tested, and the shape
+    # the streaming vocab gate consumes.
+    cnts = gram_bucket_counts(
+        df,
+        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
+        partial(word_grams, bigrams=False),
+        n_buckets, seed, key=F.col(partition_col).cast("int"),
+    ).select(
+        F.col("__k").alias("__pid"),
+        F.col("b").cast("string").alias("__cat"),
+        F.col("__c").alias("__n"),
     )
     cnts, block_ids = eager_checkpoint(cnts)
     if handles is not None:

@@ -8,9 +8,10 @@ throughput, cache stats and peak memory read from /proc/self/status
 
 - ``PhaseTracker`` — driver-side phase timings (Spark stage boundaries are
   the task-level truth; this tracks the logical phases of §3.1),
-- ``peak_memory_mb`` — VmHWM from /proc/self/status (driver JVM is the
-  only process in local mode; on a cluster this is per-executor via
-  ``spark.executor.processTreeMetrics``),
+- ``peak_memory_mb`` — VmHWM from /proc/self/status of the Python driver
+  process only: the JVM and the Python workers are separate processes,
+  even in local mode, and are not counted (Spark reports their RSS when
+  ``spark.executor.processTreeMetrics.enabled`` is set),
 - ``progress_counter`` — a Spark accumulator wired into a lightweight
   foreach-style count, the A8 analog (optional; the summary aggregation
   subsumes it in batch runs),
@@ -50,8 +51,10 @@ class PhaseTracker:
 
 
 def peak_memory_mb() -> float | None:
-    """VmHWM (peak RSS) of this process — the reference reads the same
-    field (src/validator.rs:772-793). None on non-Linux."""
+    """VmHWM (peak RSS) of this Python driver process — the reference
+    reads the same field (src/validator.rs:772-793). Excludes the JVM
+    and the Python workers, which run as separate processes. None on
+    non-Linux."""
     try:
         with open("/proc/self/status") as f:
             for line in f:

@@ -9,9 +9,17 @@ the driver's correctness gate covers it.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from validate_xml_rust_spark.functions.grambuckets import (
+    bucket_ids,
+    char_grams,
+    gram_bucket_counts,
+)
 
 # Tiny per-language stopword marker sets for the n-gram/stopword heuristic.
 # Deliberately small + high-precision so the heuristic is SQL-restatable.
@@ -754,95 +762,6 @@ def _char_gram_buckets(
     )
 
 
-_GRAM_BUCKET_CACHES: dict = {}
-_GRAM_CACHE_MAX = 1 << 21
-
-
-def _gram_bucket_cache(seed: str, n_buckets: int) -> dict:
-    """Per-(seed, n_buckets) gram→bucket memo shared across tasks in a
-    reused Python worker (guide §4.5 — the module is importable, so
-    worker reuse keeps the global); size-capped defensively."""
-    key = (seed, n_buckets)
-    c = _GRAM_BUCKET_CACHES.get(key)
-    if c is None:
-        c = _GRAM_BUCKET_CACHES[key] = {}
-    return c
-
-
-def _langid_gram_counts(
-    df: DataFrame,
-    text_col: str,
-    carry_col: Column,
-    ns: tuple[int, ...],
-    n_buckets: int,
-    seed: str,
-) -> DataFrame:
-    """Arrow twin of ``_char_gram_buckets(...).groupBy(b, carry).count()``
-    (r7, guide §4.2/§2.3): ONE mapInPandas pass emitting PARTIAL
-    (b, carry, count) rows per task; the downstream integer sum equals
-    the exploded path's count exactly. Byte-identical bucketing: Python
-    slicing and Spark ``substr`` are both code-point indexed, the
-    lowercase stays JVM-side (``lower()`` semantics preserved), and
-    hashlib.md5 over UTF-8 == Spark ``md5`` — the sample_ticket
-    arithmetic restated (parity-tested against _char_gram_buckets).
-    Replaces ~Σ_n (len−n+1) exploded rows per doc — each paying an md5
-    projection and a shuffle write — with a per-task dict count whose
-    md5 runs once per DISTINCT gram (memoized; the char-gram universe is
-    tiny next to its occurrence count), and the shuffle shrinks from
-    per-occurrence rows to per-(task, bucket, carry) partials."""
-    import hashlib
-
-    import pandas as pd
-
-    src = df.select(
-        carry_col.alias("__carry"),
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("__t"),
-    )
-    ns_t = tuple(int(n) for n in ns)
-    nb = int(n_buckets)
-
-    def count_part(it):
-        cache = _gram_bucket_cache(seed, nb)
-        md5 = hashlib.md5
-        by_carry: dict[object, dict[int, int]] = {}
-        for pdf in it:
-            for carry, text in zip(pdf["__carry"], pdf["__t"]):
-                d = by_carry.get(carry)
-                if d is None:
-                    d = by_carry[carry] = {}
-                for n in ns_t:
-                    for i in range(len(text) - n + 1):
-                        g = text[i : i + n]
-                        b = cache.get(g)
-                        if b is None:
-                            b = (
-                                int(
-                                    md5(
-                                        f"{seed}:{g}".encode("utf-8")
-                                    ).hexdigest()[:8],
-                                    16,
-                                )
-                                % nb
-                            )
-                            if len(cache) < _GRAM_CACHE_MAX:
-                                cache[g] = b
-                        d[b] = d.get(b, 0) + 1
-        rows_c: list = []
-        rows_b: list = []
-        rows_n: list = []
-        for carry, d in by_carry.items():
-            rows_c.extend([carry] * len(d))
-            rows_b.extend(d.keys())
-            rows_n.extend(d.values())
-        if rows_b:
-            yield pd.DataFrame(
-                {"__carry": rows_c, "b": rows_b, "__pc": rows_n}
-            )
-
-    part = src.mapInPandas(count_part, "__carry string, b long, __pc long")
-    return part.groupBy("b", "__carry").agg(F.sum("__pc").alias("__c"))
-
-
 def langid_train(
     df: DataFrame,
     lang_col: str = "lang",
@@ -869,17 +788,19 @@ def langid_train(
     Returns ``(b, lang, w DECIMAL(18,9))`` — ≤ n_buckets·L rows,
     broadcastable; weights in DECIMAL so both engines sum them exactly
     (double sums are addition-order-dependent; the argmax must not flip
-    on a near-tie). Scale shape: ONE explode + groupBy(b, lang) count
-    (map-side partials), a per-bucket total join, and the language count
-    riding the plan as a broadcast one-row aggregate."""
-    # r7: gram counting moved into the Arrow partial-count pass (see
-    # _langid_gram_counts — identical counts, ~occurrence-count fewer
-    # shuffled rows); `_char_gram_buckets` remains the expression-path
-    # reference twin, parity-tested.
-    cnt = _langid_gram_counts(
+    on a near-tie). Scale shape: ONE gram_bucket_counts pass (per-task
+    (lang, b) partials + an exact sum), a per-bucket total join, and the
+    language count riding the plan as a broadcast one-row aggregate."""
+    # Gram counting runs in the Arrow partial-count kernel (identical
+    # counts, ~occurrence-count fewer shuffled rows); `_char_gram_buckets`
+    # remains the expression-path reference twin, parity-tested.
+    ns_t = tuple(int(n) for n in ns)
+    cnt = gram_bucket_counts(
         df.filter(F.col(lang_col).isNotNull()),
-        text_col, F.col(lang_col), ns, n_buckets, seed,
-    ).withColumnRenamed("__carry", "__l")
+        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        partial(char_grams, ns=ns_t),
+        n_buckets, seed, key=F.col(lang_col),
+    ).withColumnRenamed("__k", "__l")
     tot = cnt.groupBy("b").agg(F.sum("__c").alias("__tot"))
     langs = df.select(F.col(lang_col).alias("__l")).filter(
         F.col("__l").isNotNull()
@@ -982,8 +903,6 @@ def langid_predict(
             seed,
         )
 
-    import hashlib
-
     ns_t = tuple(int(n) for n in ns)
     nb = int(n_buckets)
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1000,32 +919,17 @@ def langid_predict(
     # score(...)"), the same lambda-inlining hazard _char_gram_buckets
     # documents and dodges with its Generate barrier.
     def score_part(it):
-        cache = _gram_bucket_cache(seed, nb)
-        md5 = hashlib.md5
         for pdf in it:
             ids = pdf["__id"]
             res = np.zeros((len(pdf), L + 1), dtype=np.int64)
             for k, text in enumerate(pdf["__t"]):
-                rows: list = []
-                for n in ns_t:
-                    for i in range(len(text) - n + 1):
-                        g = text[i : i + n]
-                        b = cache.get(g)
-                        if b is None:
-                            b = (
-                                int(
-                                    md5(
-                                        f"{seed}:{g}".encode("utf-8")
-                                    ).hexdigest()[:8],
-                                    16,
-                                )
-                                % nb
-                            )
-                            if len(cache) < _GRAM_CACHE_MAX:
-                                cache[g] = b
-                        r = brow.get(b)
-                        if r is not None:
-                            rows.append(r)
+                rows = [
+                    r
+                    for r in map(
+                        brow.get, bucket_ids(char_grams(text, ns_t), seed, nb)
+                    )
+                    if r is not None
+                ]
                 if rows:
                     res[k, 0] = len(rows)
                     res[k, 1:] = wmat[np.asarray(rows, dtype=np.int64)].sum(

@@ -30,10 +30,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
 
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in physical_plan(df)
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters section of the formatted plan (empty string if the
     scan pushed nothing)."""

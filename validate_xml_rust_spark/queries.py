@@ -860,13 +860,6 @@ FROM g
 """
 
 
-def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from validate_xml_rust_spark.operators.textstats import detect_language
-
-    docs = _t(spark, sf_dir, "documents")
-    return detect_language(docs).select("doc_id", "detected_lang")
-
-
 ORACLE_LANGID = """
 WITH s AS (
   SELECT doc_id, ' ' || lower(coalesce(text,'')) || ' ' AS p FROM documents),
@@ -1449,25 +1442,6 @@ SELECT c_custkey, 'inactive' FROM customer
 WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_custkey IS NOT NULL)
 """
 # ^ NOT-IN null guard: matches the left_anti join's treatment of NULL keys.
-
-
-def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Detected-vs-labeled language confusion counts (langid quality view)."""
-    from validate_xml_rust_spark.operators.textstats import detect_language
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        detect_language(docs)
-        .groupBy(F.col("lang").alias("labeled"), F.col("detected_lang").alias("detected"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_LANG_CONFUSION = (
-    "WITH d AS (" + ORACLE_LANGID + ") "
-    "SELECT documents.lang AS labeled, d.detected_lang AS detected, count(*) AS n "
-    "FROM documents JOIN d USING (doc_id) GROUP BY 1, 2"
-)
 
 
 def q_asof_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,10 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from validate_xml_rust_spark.functions.text_extract import (
-    extract_text_from_html_str,
-    extract_text_py,
-)
+from validate_xml_rust_spark.functions.text_extract import extract_text_from_html_str
 
 SEED = 42
 BASE_EPOCH = 1735689600  # 2025-01-01T00:00:00Z
@@ -177,7 +174,3 @@ def py_row_kinds(n_rows: int) -> dict[str, int]:
             counts["lang_off_enum"] += 1
     return counts
 
-
-def py_expected_text(html_bytes: bytes) -> str:
-    """Ground-truth extractor applied in pure Python (byte-identity tests)."""
-    return extract_text_py(html_bytes)
