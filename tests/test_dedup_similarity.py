@@ -316,11 +316,15 @@ def test_near_dedup_end_to_end(spark):
     assert all(i in kept_ids for i in range(n) if i not in paired)
 
 
-def test_connected_components_iteration_hygiene(spark):
+def test_connected_components_iteration_hygiene(spark, monkeypatch):
     """Chain graph forces many label-propagation rounds: the plan stays
     bounded (localCheckpoint truncates lineage) and superseded per-round
-    caches are released (no O(iterations) executor-cache leak)."""
+    caches are released (no O(iterations) executor-cache leak). The edge
+    gate is 0 so the distributed rounds run (30 edges would otherwise take
+    the driver union-find)."""
     from validate_xml_rust_spark.operators.dedup import connected_components
+
+    monkeypatch.setenv("VXRS_CC_DRIVER_MAX_EDGES", "0")
 
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
     chain = spark.createDataFrame(
@@ -402,11 +406,14 @@ def test_ivf_built_index_partition_pruned(spark, tmp_path):
     assert "PartitionFilters" in plan and "cluster_id" in plan.split("PartitionFilters")[1][:200]
 
 
-def test_connected_components_log_rounds_on_chain(spark):
+def test_connected_components_log_rounds_on_chain(spark, monkeypatch):
     """Pointer jumping: a 200-node chain converges in O(log n) rounds
     (~2·log2(200) ≈ 16 with the +1 convergence round), far under the 200
-    that pure min-label propagation would need."""
+    that pure min-label propagation would need. Edge gate 0: the
+    distributed rounds, not the driver union-find (which reports 1)."""
     from validate_xml_rust_spark.operators.dedup import connected_components
+
+    monkeypatch.setenv("VXRS_CC_DRIVER_MAX_EDGES", "0")
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long"
@@ -415,7 +422,47 @@ def test_connected_components_log_rounds_on_chain(spark):
     labels = connected_components(chain, max_iterations=30, stats=stats)
     comp = {r["id"]: r["component"] for r in labels.collect()}
     assert comp == {i: 0 for i in range(201)}
-    assert stats["iterations"] <= 18, stats
+    assert 1 < stats["iterations"] <= 18, stats
+
+
+def test_connected_components_gate_equivalence(spark, monkeypatch):
+    """Both sides of the ``$VXRS_CC_DRIVER_MAX_EDGES`` gate give the same
+    (id, component) rows and schema: long ids and string ids (non-ASCII
+    and astral code points — Python and Spark must order them alike),
+    duplicated and reversed pairs, self-loops, an empty pair table, and
+    gates exactly at and one under the doubled distinct edge count."""
+    from validate_xml_rust_spark.operators.dedup import connected_components
+
+    long_pairs = [(5, 9), (9, 5), (5, 9), (9, 12), (40, 41), (41, 41), (7, 3),
+                  (3, 2), (100, 2), (2**40, 3), (-4, 100)]
+    str_pairs = [("b", "a"), ("a", "b"), ("é", "z"), ("z", "Z"), ("😀", "é"),
+                 ("q", "q"), ("m", "n"), ("n", "m"), ("n", "m")]
+    cases = [
+        (spark.createDataFrame(rows, f"id_a {t}, id_b {t}"),
+         len(set(rows) | {(b, a) for a, b in rows}))  # doubled distinct edges
+        for rows, t in [(long_pairs, "long"), (str_pairs, "string"),
+                        ([], "long"), ([], "string")]
+    ]
+
+    def run(pairs, gate):
+        monkeypatch.setenv("VXRS_CC_DRIVER_MAX_EDGES", str(gate))
+        stats: dict = {}
+        out = connected_components(pairs, stats=stats)
+        return out.schema, sorted(tuple(r) for r in out.collect()), stats
+
+    for pairs, n_edges in cases:
+        dist = run(pairs, 0)
+        for gate in (n_edges, 1 << 19):
+            driver = run(pairs, gate)
+            assert driver[2]["iterations"] == 1, (gate, driver[2])
+            assert driver[:2] == dist[:2], (gate, driver, dist)
+        if n_edges:
+            assert dist[2]["iterations"] > 1, dist[2]
+            below = run(pairs, n_edges - 1)  # one edge over: distributed
+            assert below[2]["iterations"] > 1 and below[:2] == dist[:2]
+    labels = dict(run(cases[1][0], 1 << 19)[1])
+    assert labels["z"] == labels["😀"] == "Z" and labels["b"] == "a"
+    assert labels["q"] == "q" and labels["n"] == "m"
 
 
 def test_winnowing_guarantee_and_candidates(spark):

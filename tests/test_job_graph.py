@@ -1,0 +1,101 @@
+"""Repeated runs in one session repeat their Spark work exactly: near-dedup
+runs the same stages and shuffles the same records every time (no racing
+cache fills), leaves only its result's blocks behind, and a warm curate run
+reuses the generated classes of the first instead of recompiling them."""
+
+from __future__ import annotations
+
+from validate_xml_rust_spark.ckpt import block_ids_of, release_blocks
+
+
+def _status_mark(spark) -> tuple[int, int]:
+    """(newest stage id, newest job id) in the status store, -1 if none."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    stages = _stage_list(spark)
+    jobs = store.jobsList(None)
+    return (
+        int(stages.apply(0).stageId()) if stages.size() else -1,
+        int(jobs.apply(0).jobId()) if jobs.size() else -1,
+    )
+
+
+def _stage_list(spark):
+    # Spark 4.1: stageList(statuses, details, withSummaries, quantiles,
+    # taskStatus), newest first
+    gw = spark.sparkContext._gateway
+    return spark.sparkContext._jsc.sc().statusStore().stageList(
+        None, False, False, gw.new_array(gw.jvm.double, 0), gw.jvm.java.util.ArrayList()
+    )
+
+
+def _status_delta(spark, mark: tuple[int, int]) -> dict:
+    """Jobs, run (not skipped) stages and shuffle records written since
+    ``mark``. Skipped stages are not compared: whether a reused shuffle
+    stage is listed under a new id depends on what ran before."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    out = {"jobs": 0, "stages": 0, "shuffle_write_records": 0}
+    stages = _stage_list(spark)
+    for i in range(stages.size()):
+        st = stages.apply(i)
+        if int(st.stageId()) <= mark[0]:
+            break
+        if st.status().toString() == "SKIPPED":
+            continue
+        out["stages"] += 1
+        out["shuffle_write_records"] += int(st.shuffleWriteRecords())
+    jobs = jsc.statusStore().jobsList(None)
+    out["jobs"] = sum(
+        1 for i in range(jobs.size()) if int(jobs.apply(i).jobId()) > mark[1]
+    )
+    return out
+
+
+def _persistent_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def test_eager_minhash_near_duplicates_repeats_its_job_graph(spark):
+    """Four eager runs over the same corpus: identical stage counts and
+    shuffle records (status-store deltas), and each run's only new
+    persisted RDD is its result checkpoint."""
+    from validate_xml_rust_spark.operators.dedup import minhash_near_duplicates
+    from validate_xml_rust_spark.sources.corpus import synthetic_documents
+
+    docs = synthetic_documents(spark, 600, 4)
+    runs = []
+    for _ in range(4):
+        before = _persistent_ids(spark)
+        mark = _status_mark(spark)
+        out = minhash_near_duplicates(docs, threshold=0.6, eager=True)
+        delta = _status_delta(spark, mark)
+        assert _persistent_ids(spark) - before == set(block_ids_of(out))
+        runs.append((delta, sorted(tuple(r) for r in out.collect())))
+        release_blocks(spark.sparkContext, block_ids_of(out))
+    assert runs[0][1], "the corpus plants near duplicates"
+    assert runs[0][0]["shuffle_write_records"] > 0
+    assert all(r == runs[0] for r in runs), [r[0] for r in runs]
+
+
+def test_warm_curate_run_compiles_almost_nothing(spark, tmp_path):
+    """The session's generated-class cache holds a whole curate run: the
+    second dolma run over the same input compiles at most 5 classes
+    (CodegenMetrics compilation count; 60-89 per warm iteration at Spark's
+    default 100-entry cache)."""
+    from validate_xml_rust_spark.pipeline import curate, preset_kwargs
+    from validate_xml_rust_spark.sources.corpus import prose_documents
+
+    path = str(tmp_path / "docs")
+    prose_documents(spark, 300, 2).write.parquet(path)
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiled = []
+    for _ in range(2):
+        n0 = timer.getCount()
+        res = curate(spark.read.parquet(path), spark, **preset_kwargs("dolma"))
+        res.kept.write.parquet(str(tmp_path / f"out{len(compiled)}"))
+        compiled.append(timer.getCount() - n0)
+        res.release()
+    print("classes compiled per run:", compiled)
+    assert compiled[1] <= 5, compiled

@@ -252,6 +252,43 @@ def minhash_candidates(
     return pairs
 
 
+def _shingle_signature_checkpoint(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int, num_perm: int
+) -> tuple[DataFrame, frozenset[int]]:
+    """``(__sid, __sh, __sig)`` — shingle sets and MinHash signatures — as
+    ONE eager checkpoint, with its block ids. Not ``persist()``: AQE
+    submits the sibling stages that read the shingles at the same moment,
+    so each missed the still-empty cache and shingled and signed the
+    corpus itself (two ~0.7 s jobs 6 ms apart at 4k docs)."""
+    from validate_xml_rust_spark.ckpt import eager_checkpoint
+
+    return eager_checkpoint(
+        df.select(
+            F.col(id_col).alias("__sid"),
+            shingle_hashes(F.col(text_col), shingle_k).alias("__sh"),
+        ).select(
+            "__sid", "__sh", minhash_signature(F.col("__sh"), num_perm).alias("__sig")
+        )
+    )
+
+
+def _verified_pairs(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)``: the candidate pairs whose exact Jaccard
+    over the ``(__sid, __sh)`` shingle sets, rounded to 6 dp, reaches
+    ``threshold``."""
+
+    def side(s: str) -> DataFrame:
+        return sh.select(F.col("__sid").alias(f"id_{s}"), F.col("__sh").alias(f"sh_{s}"))
+
+    return (
+        cands.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -266,69 +303,53 @@ def minhash_near_duplicates(
     re-checked with exact Jaccard over shingle hashes (two broadcast-
     friendly joins back to the shingle sets).
 
-    ``eager=True`` materializes the (small) pair result immediately and
-    releases the cached shingle/signature frames before returning — the
-    right mode inside long-lived sessions (the lazy default strands two
-    persisted frames until the caller clears the cache)."""
+    ``eager=True`` (for long-lived sessions) shingles and signs the corpus
+    in ONE checkpointed job that candidate generation and both verify
+    joins read, and returns the verified pairs as an eager checkpoint —
+    the only blocks the call leaves. The lazy default persists the
+    shingle and signature frames and strands them until the caller
+    clears the cache."""
     from pyspark.storagelevel import StorageLevel
 
-    from validate_xml_rust_spark.functions.texthash import minhash_signature
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
 
-    # Tokenize+shingle the corpus exactly ONCE: the cached shingle sets
-    # feed the signature derivation (candidate generation) AND both sides
-    # of the exact-Jaccard verify join.
-    sh = df.select(
-        F.col(id_col).alias("__sid"),
-        shingle_hashes(F.col(text_col), shingle_k).alias("__sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sig = sh.select(
-        F.col("__sid").alias("__id"),
-        minhash_signature(F.col("__sh"), num_perm).alias("__sig"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # Tokenize+shingle the corpus exactly ONCE: the shingle sets feed the
+    # signatures (candidate generation) AND both verify-join sides.
+    if eager:
+        ck, ck_ids = _shingle_signature_checkpoint(
+            df, id_col, text_col, shingle_k, num_perm
+        )
+        sh = ck.select("__sid", "__sh")
+        sig = ck.select(F.col("__sid").alias("__id"), "__sig")
+    else:
+        sh = df.select(
+            F.col(id_col).alias("__sid"),
+            shingle_hashes(F.col(text_col), shingle_k).alias("__sh"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        sig = sh.select(
+            F.col("__sid").alias("__id"),
+            minhash_signature(F.col("__sh"), num_perm).alias("__sig"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
     cands = minhash_candidates(
         df, id_col, text_col, num_perm, bands, shingle_k, _sig=sig
     )
-    sh_v = sh
-    cand_ck = None
-    if eager:
-        # r7 (guide §2.3/§8: decide with small rows, move heavy rows
-        # once): materialize the candidate pairs, then semi-join the
-        # shingle table down to the ids that actually appear in a pair
-        # BEFORE the two verify joins — the join then shuffles only the
-        # candidate fraction's arrays instead of every document's
-        # (measured 1/3 of the ids and 2/3 fewer array bytes on the
-        # 100k prose corpus; at crawl scale the candidate fraction is
-        # percents). Identical output: verification only ever reads
-        # candidate ids' shingles. Eager mode only — the lazy path has
-        # no materialized cands to derive the id set from without
-        # re-running candidate generation.
-        cand_ck = cands.localCheckpoint(eager=True)
-        cands = cand_ck
-        cand_ids = (
-            cand_ck.select(F.col("id_a").alias("__cid"))
-            .unionByName(cand_ck.select(F.col("id_b").alias("__cid")))
-            .distinct()
-        )
-        sh_v = sh.join(
-            F.broadcast(cand_ids), sh["__sid"] == F.col("__cid"), "left_semi"
-        )
-    j = (
-        cands.join(sh_v.withColumnRenamed("__sid", "id_a").withColumnRenamed("__sh", "sh_a"), "id_a")
-        .join(sh_v.withColumnRenamed("__sid", "id_b").withColumnRenamed("__sh", "sh_b"), "id_b")
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    if not eager:
+        return _verified_pairs(cands, sh, threshold)
+    # r7 (guide §2.3/§8: decide with small rows, move heavy rows once):
+    # materialize the candidate pairs, then semi-join the shingle table
+    # down to the ids in some pair BEFORE the two verify joins, which then
+    # shuffle only the candidates' arrays (1/3 of the ids and 2/3 fewer
+    # array bytes on the 100k prose corpus). Identical output.
+    cands, cand_ids = eager_checkpoint(cands)
+    in_pair = (
+        cands.select(F.col("id_a").alias("__cid"))
+        .unionByName(cands.select(F.col("id_b").alias("__cid")))
+        .distinct()
     )
-    if eager:
-        out = j.localCheckpoint(eager=True)
-        if cand_ck is not None:
-            from validate_xml_rust_spark.ckpt import block_ids_of, release_blocks
-
-            release_blocks(df.sparkSession.sparkContext, block_ids_of(cand_ck))
-        sig.unpersist()
-        sh.unpersist()
-        return out
-    return j
+    sh = sh.join(F.broadcast(in_pair), sh["__sid"] == F.col("__cid"), "left_semi")
+    out = _verified_pairs(cands, sh, threshold).localCheckpoint(eager=True)
+    release_blocks(df.sparkSession.sparkContext, ck_ids | cand_ids)
+    return out
 
 
 def simhash_near_duplicates(
@@ -384,6 +405,22 @@ def simhash_near_duplicates(
     return pairs
 
 
+def _local_frame(spark, rows: list[tuple], id_type) -> DataFrame:
+    """``(id, component)`` driver rows as a JVM LocalRelation via one Arrow
+    table. A list (or an EMPTY pandas frame) becomes a pickled RDD that a
+    Python-worker job converts: ~0.25 s at perfbench's curate scale."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
+    )
+    ids, comps = zip(*rows) if rows else ((), ())
+    return spark.createDataFrame(
+        pa.table({"id": list(ids), "component": list(comps)}), schema
+    )
+
+
 def connected_components(
     pairs: DataFrame, max_iterations: int = 20, stats: dict | None = None
 ) -> DataFrame:
@@ -399,21 +436,18 @@ def connected_components(
     corpus). ``stats['iterations']`` reports the round count when a dict
     is passed.
 
-    SMALL-SUBGRAPH fast path (r7): when the (doubled, distinct) edge
-    table is at most ``$VXRS_CC_DRIVER_MAX_EDGES`` rows (default 2^19 ≈
-    524k — a bounded, few-MB collect in the repo's existing
-    bounded-collect regime, same class as the drop-set broadcast), the
-    labeling is computed by a driver-side min-root union-find instead of
-    the iterative join rounds: each distributed round costs a checkpoint
-    job + an aggregate regardless of data size, which dominates wall
-    time for the typical post-verification pair subgraph (profiled
-    4.3s for 2 rounds over 12k pairs). Labels are IDENTICAL — the
-    min-root invariant yields component = min member, the converged
-    min-label fixpoint; Python string comparison (code points) matches
-    Spark's UTF-8 binary ordering, and numeric ids compare identically.
-    Crawl-scale pair tables exceed the gate and take the distributed
-    path unchanged; the returned frame is an eager localCheckpoint in
-    both paths (same lineage/reuse contract)."""
+    SMALL-SUBGRAPH fast path (r7): a pair table with at most
+    ``$VXRS_CC_DRIVER_MAX_EDGES`` (default 2^19) doubled distinct edges —
+    read by one bounded ``limit`` collect — is labeled by a driver-side
+    min-root union-find instead of the join rounds, each of which costs a
+    checkpoint job + an aggregate regardless of size (profiled 4.3 s for
+    2 rounds over 12k pairs). Labels are IDENTICAL: min root = min member,
+    the min-label fixpoint; Python's code-point string order matches
+    Spark's UTF-8 binary order. Both paths return an eager localCheckpoint."""
+    import os
+
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
+
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
@@ -421,22 +455,11 @@ def connected_components(
         )
         .distinct()
     )
-    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
-
-    sc = pairs.sparkSession.sparkContext
-    # Checkpoint ids come straight off each checkpointed frame's LogicalRDD
-    # (ckpt.py) — NOT a registry set-diff, which would have captured the
-    # edges cache below (its buffer RDD registers during the first
-    # checkpoint's materializing action) and released it at the RDD level
-    # after round 1, silently forcing every later round's two edge scans to
-    # recompute the pairs plan.
-    edges = edges.persist()
-
-    import os
-
     driver_max = int(os.environ.get("VXRS_CC_DRIVER_MAX_EDGES", str(1 << 19)))
-    n_edges = edges.count()  # materializes the persist either way
-    if n_edges <= driver_max:
+    # one bounded collect: a pair table longer than the gate goes distributed
+    head = pairs.select("id_a", "id_b").limit(driver_max + 1).collect()
+    n_edges = len(set(head) | {(b, a) for a, b in head})  # doubled, distinct
+    if len(head) <= driver_max and n_edges <= driver_max:
         parent: dict = {}
 
         def find(x):
@@ -447,31 +470,32 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in edges.select("src", "dst").collect():
-            a, b = find(row[0]), find(row[1])
+        for a, b in head:
+            a, b = find(a), find(b)
             if a == b:
                 continue
             if b < a:
                 a, b = b, a
             parent[b] = a  # root stays the MIN member
-        # doubled edges ⇒ every member appears as src
-        nodes = [row[0] for row in edges.select("src").distinct().collect()]
-        spark = pairs.sparkSession
-        from pyspark.sql import types as T
-
-        id_type = edges.schema["src"].dataType
-        schema = T.StructType(
-            [T.StructField("id", id_type), T.StructField("component", id_type)]
-        )
+        nodes = sorted({x for pair in head for x in pair})
         labels, _ = eager_checkpoint(
-            spark.createDataFrame(
-                [(n, find(n)) for n in sorted(nodes)], schema
+            _local_frame(
+                pairs.sparkSession,
+                [(n, find(n)) for n in nodes],
+                edges.schema["src"].dataType,
             )
         )
         if stats is not None:
             stats["iterations"] = 1
-        edges.unpersist()
         return labels
+    # Checkpoint ids come straight off each checkpointed frame's LogicalRDD
+    # (ckpt.py) — NOT a registry set-diff, which would have captured the
+    # edges cache below (its buffer RDD registers during the first
+    # checkpoint's materializing action) and released it at the RDD level
+    # after round 1, silently forcing every later round's two edge scans to
+    # recompute the pairs plan.
+    sc = pairs.sparkSession.sparkContext
+    edges = edges.persist()
     labels, ckpt_ids = eager_checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -648,10 +672,8 @@ def near_dedup(
         release_blocks,
     )
 
-    # eager: materialize the (small) pairs table once and release the
-    # corpus-sized shingle/signature caches before the CC iterations —
-    # otherwise every CC round's edge scan would re-read them, and they
-    # would strand in cache past the call
+    # eager: the (small) pairs table is materialized once and the
+    # corpus-sized shingle/signature blocks are freed before CC reads it
     pairs = minhash_near_duplicates(
         df, id_col, text_col, threshold=threshold, eager=True, **minhash_kwargs
     )
@@ -1058,7 +1080,7 @@ def incremental_near_dedup(
     threshold misclassifies, so reserve it for stores written with
     ``store_shingles=False``).
 
-    Scale shape: slice shingles+signatures persisted once (corpus-pass
+    Scale shape: slice shingles+signatures checkpointed once (corpus-pass
     #1 of 1); within-slice pairs via the capped band self-join
     (minhash_candidates); store candidates via ONE equi-join of the
     slice's exploded band keys against the store's banded layout (store
@@ -1071,8 +1093,6 @@ def incremental_near_dedup(
     ``generation`` (the committed generation or None) and
     ``ckpt_block_ids`` (release via ckpt.release_blocks once a downstream
     checkpoint/action has materialized — near_dedup's contract)."""
-    from pyspark.storagelevel import StorageLevel
-
     from validate_xml_rust_spark.ckpt import (
         block_ids_of,
         eager_checkpoint,
@@ -1090,35 +1110,20 @@ def incremental_near_dedup(
     rows_per_band = num_perm // bands
     sc = new_df.sparkSession.sparkContext
 
-    # slice pass: tokenize+shingle ONCE; both cached frames feed candidate
-    # generation, verification, and (on commit) the appended generation
-    sh = new_df.select(
-        F.col(id_col).alias("__sid"),
-        shingle_hashes(F.col(text_col), shingle_k).alias("__sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sig = sh.select(
-        F.col("__sid").alias("__id"),
-        minhash_signature(F.col("__sh"), num_perm).alias("__sig"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # slice pass: tokenize+shingle+sign ONCE for candidate generation,
+    # verification, and (on commit) the appended generation
+    ck, ck_ids = _shingle_signature_checkpoint(
+        new_df, id_col, text_col, shingle_k, num_perm
+    )
+    sh = ck.select("__sid", "__sh")
+    sig = ck.select(F.col("__sid").alias("__id"), "__sig")
 
-    # within-slice verified pairs (the minhash_near_duplicates pipeline,
-    # reusing the cached shingles/signatures)
+    # within-slice verified pairs (the minhash_near_duplicates pipeline)
     cands = minhash_candidates(
         new_df, id_col, text_col, num_perm, bands, shingle_k,
         max_bucket=max_bucket, _sig=sig,
     )
-    within = (
-        cands.join(
-            sh.select(F.col("__sid").alias("id_a"), F.col("__sh").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("__sid").alias("id_b"), F.col("__sh").alias("sh_b")),
-            "id_b",
-        )
-        .filter(F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6) >= threshold)
-        .select("id_a", "id_b")
-    )
+    within = _verified_pairs(cands, sh, threshold)
 
     # store candidates: slice band keys ⋈ store banded layout. ONE
     # catalog read serves the bands frame, the sketch frame, and the
@@ -1220,13 +1225,12 @@ def incremental_near_dedup(
     )
     gen = None
     if commit:
-        # the appended generation is derived from the SLICE's cached
+        # the appended generation is derived from the SLICE's checkpointed
         # sketches (never from re-reading text); the write is the action
-        # that materializes it, after which the caches can be released
+        # that materializes it, after which the blocks can be released
         surv_sketch = (
-            sig.join(sh, sig["__id"] == sh["__sid"])
-            .select(
-                F.col("__id").alias("doc_id"),
+            ck.select(
+                F.col("__sid").alias("doc_id"),
                 F.col("__sig").alias("sig"),
                 F.col("__sh").alias("shingles"),
             )
@@ -1237,8 +1241,7 @@ def incremental_near_dedup(
         gen = store.commit(surv_sketch, _gens=_gens)
     if stats is not None:
         stats["generation"] = gen
-    sig.unpersist()
-    sh.unpersist()
+    release_blocks(sc, ck_ids)
     return survivors
 
 
