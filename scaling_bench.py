@@ -127,7 +127,7 @@ spark = get_spark(app_name=f"scale-dedup-{cpus}", cpus=cpus, shuffle_partitions=
 
 def run_once():
     docs = synthetic_documents(spark, n_docs, 64)
-    return minhash_near_duplicates(docs, threshold=0.6, eager=True).count()
+    return minhash_near_duplicates(docs, threshold=0.6).count()
 
 run_once()  # Python-worker spin-up + JIT warmup
 spark.catalog.clearCache()

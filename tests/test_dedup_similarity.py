@@ -501,9 +501,10 @@ def test_winnowing_guarantee_and_candidates(spark):
 
 
 def test_minhash_eager_releases_caches(spark):
-    """eager=True materializes the pair result and releases the cached
-    shingle/signature frames — no corpus-sized cache strands in a
-    long-lived session (only the small checkpointed result survives)."""
+    """minhash_near_duplicates materializes the pair result and releases
+    its shingle/signature and candidate checkpoints — no corpus-sized
+    blocks strand in a long-lived session (only the checkpointed result
+    survives)."""
     from validate_xml_rust_spark.operators.dedup import minhash_near_duplicates
 
     sc = spark.sparkContext
@@ -516,15 +517,8 @@ def test_minhash_eager_releases_caches(spark):
     # referenced and stay until released
     d = _docs(spark)
     before = pids()
-    lazy = minhash_near_duplicates(d, threshold=0.5)
-    rows_l = {(r["id_a"], r["id_b"]) for r in lazy.collect()}
-    assert len(pids() - before) >= 2  # the documented lazy-mode behavior
-    spark.catalog.clearCache()
-
-    before = pids()
-    eager = minhash_near_duplicates(d, threshold=0.5, eager=True)
-    rows_e = {(r["id_a"], r["id_b"]) for r in eager.collect()}
-    assert rows_e == rows_l
+    pairs = minhash_near_duplicates(d, threshold=0.5)
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {(0, 1), (0, 2), (1, 2)}
     assert len(pids() - before) <= 1  # only the checkpointed result itself
 
 

@@ -1,9 +1,13 @@
-"""Repeated runs in one session repeat their Spark work exactly: near-dedup
-runs the same stages and shuffles the same records every time (no racing
-cache fills), leaves only its result's blocks behind, and a warm curate run
+"""Repeated runs in one session repeat their Spark work exactly: each
+near-dedup operator runs the same stages and shuffles the same records
+every time (no racing cache fills), leaves only its result's blocks behind,
+runs its shingle / winnowing UDF once per document, and a warm curate run
 reuses the generated classes of the first instead of recompiling them."""
 
 from __future__ import annotations
+
+import pandas as pd
+import pytest
 
 from validate_xml_rust_spark.ckpt import block_ids_of, release_blocks
 
@@ -57,19 +61,29 @@ def _persistent_ids(spark) -> set[int]:
     return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
 
-def test_eager_minhash_near_duplicates_repeats_its_job_graph(spark):
-    """Four eager runs over the same corpus: identical stage counts and
-    shuffle records (status-store deltas), and each run's only new
+DEDUP_OPERATORS = [
+    "minhash_near_duplicates",
+    "simhash_near_duplicates",
+    "minhash_candidates",
+    "winnow_candidate_pairs",
+    "shared_passage_candidates",
+]
+
+
+@pytest.mark.parametrize("name", DEDUP_OPERATORS)
+def test_dedup_operator_repeats_its_job_graph(spark, name):
+    """Three calls over the same corpus: identical jobs, run stages and
+    shuffle records (status-store deltas), and each call's only new
     persisted RDD is its result checkpoint."""
-    from validate_xml_rust_spark.operators.dedup import minhash_near_duplicates
+    from validate_xml_rust_spark.operators import dedup
     from validate_xml_rust_spark.sources.corpus import synthetic_documents
 
     docs = synthetic_documents(spark, 600, 4)
     runs = []
-    for _ in range(4):
+    for _ in range(3):
         before = _persistent_ids(spark)
         mark = _status_mark(spark)
-        out = minhash_near_duplicates(docs, threshold=0.6, eager=True)
+        out = getattr(dedup, name)(docs)
         delta = _status_delta(spark, mark)
         assert _persistent_ids(spark) - before == set(block_ids_of(out))
         runs.append((delta, sorted(tuple(r) for r in out.collect())))
@@ -77,6 +91,40 @@ def test_eager_minhash_near_duplicates_repeats_its_job_graph(spark):
     assert runs[0][1], "the corpus plants near duplicates"
     assert runs[0][0]["shuffle_write_records"] > 0
     assert all(r == runs[0] for r in runs), [r[0] for r in runs]
+
+
+def test_dedup_udfs_run_once_per_document(spark, monkeypatch):
+    """Near-dedup shingles each document once and the winnowing operators
+    fingerprint each document once: a pass-through pandas UDF fed by the
+    shingle / winnowing UDF counts the rows it sees. A UDF column taken
+    in one select and signed in the next, or exploded after an earlier
+    projection, is evaluated twice."""
+    from pyspark.sql import functions as F
+
+    from validate_xml_rust_spark.functions import texthash
+    from validate_xml_rust_spark.operators import dedup
+    from validate_xml_rust_spark.sources.corpus import synthetic_documents
+
+    rows = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("array<long>")
+    def counted(batch: pd.Series) -> pd.Series:
+        rows.add(len(batch))
+        return batch
+
+    shingle_hashes, winnow = dedup.shingle_hashes, texthash.winnow_fingerprints_udf
+    monkeypatch.setattr(dedup, "shingle_hashes", lambda *a: counted(shingle_hashes(*a)))
+    monkeypatch.setattr(
+        texthash, "winnow_fingerprints_udf", lambda *a: counted(winnow(*a))
+    )
+    n = 600
+    docs = synthetic_documents(spark, n, 4)
+    seen = {}
+    for name in ("near_dedup", "winnow_candidate_pairs", "shared_passage_candidates"):
+        start = rows.value
+        getattr(dedup, name)(docs).collect()
+        seen[name] = (rows.value - start) / n
+    assert seen == dict.fromkeys(seen, 1.0), seen
 
 
 def test_warm_curate_run_compiles_almost_nothing(spark, tmp_path):

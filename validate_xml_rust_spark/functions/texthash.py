@@ -462,19 +462,36 @@ def minhash_signature(hashes: Column, num_perm: int = 32) -> Column:
 
     @F.pandas_udf("array<long>")
     def mh(batch: pd.Series) -> pd.Series:
-        out = []
-        with np.errstate(over="ignore"):
-            for h in batch:
-                if h is None or len(h) == 0:
-                    out.append(np.full(num_perm, np.iinfo(np.int64).max))
-                    continue
-                x = np.asarray(h, dtype=np.int64).astype(np.uint64)
-                # (num_perm × n) = a[:,None]*x[None,:] + b[:,None], min over n
-                sig = (a[:, None] * x[None, :] + b[:, None]).min(axis=1)
-                out.append(sig.astype(np.int64))
-        return pd.Series(out)
+        return pd.Series(_signatures(batch, a, b, num_perm))
 
     return mh(hashes)
+
+
+def shingles_with_signature(hashes: Column, num_perm: int = 32) -> Column:
+    """``struct<sh, sig>``: the shingle-hash set passed through beside its
+    ``minhash_signature``, so a pass that keeps both evaluates the shingle
+    UDF once (a signature taken in a later ``select`` re-runs it)."""
+    a, b = _perm_params(num_perm)
+
+    @F.pandas_udf("struct<sh:array<long>,sig:array<long>>")
+    def mhs(batch: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame({"sh": batch, "sig": _signatures(batch, a, b, num_perm)})
+
+    return mhs(hashes)
+
+
+def _signatures(batch: pd.Series, a, b, num_perm: int) -> list:
+    out = []
+    with np.errstate(over="ignore"):
+        for h in batch:
+            if h is None or len(h) == 0:
+                out.append(np.full(num_perm, np.iinfo(np.int64).max))
+                continue
+            x = np.asarray(h, dtype=np.int64).astype(np.uint64)
+            # (num_perm × n) = a[:,None]*x[None,:] + b[:,None], min over n
+            sig = (a[:, None] * x[None, :] + b[:, None]).min(axis=1)
+            out.append(sig.astype(np.int64))
+    return out
 
 
 def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:

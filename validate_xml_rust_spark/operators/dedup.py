@@ -32,8 +32,8 @@ from validate_xml_rust_spark.functions.texthash import (
     hamming64,
     jaccard,
     lsh_band_keys,
-    minhash_signature,
     shingle_hashes,
+    shingles_with_signature,
     simhash64,
 )
 
@@ -187,35 +187,39 @@ def minhash_candidates(
     bands: int = 8,
     shingle_k: int = 3,
     max_bucket: int = 1000,
-    _sig: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidate pairs ``(id_a, id_b)`` with id_a < id_b (distinct).
 
     Pipeline: signature (narrow) → explode band keys (×bands rows) →
     self-join per bucket (shuffle on uniform band-key hash) → distinct.
-    ``_sig`` lets a caller supply precomputed ``(__id, __sig)`` (the
-    near-duplicates pipeline derives it from cached shingle sets so text
-    is tokenized exactly once)."""
-    from pyspark.storagelevel import StorageLevel
-
+    Returned as an eager checkpoint, the only blocks the call leaves."""
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
     from validate_xml_rust_spark.functions.texthash import (
         minhash_signature_from_text,
     )
 
-    rows_per_band = num_perm // bands
-    sig = _sig
-    if sig is None:
-        sig = df.select(
+    # Materialize signatures: Catalyst's project-collapse would otherwise
+    # inline the full num_perm-permutation MinHash expression into every
+    # band key AND both self-join sides (~10× recompute measured). The
+    # checkpoint is tiny: id + num_perm longs per doc.
+    sig, sig_ids = eager_checkpoint(
+        df.select(
             F.col(id_col).alias("__id"),
             minhash_signature_from_text(F.col(text_col), shingle_k, num_perm).alias(
                 "__sig"
             ),
         )
-        # Materialize signatures: Catalyst's project-collapse would otherwise
-        # inline the full num_perm-permutation MinHash expression into every
-        # band key AND both self-join sides (~10× recompute measured). The
-        # cached form is tiny: id + num_perm longs per doc.
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    out, _ = eager_checkpoint(_candidates(sig, bands, num_perm // bands, max_bucket))
+    release_blocks(df.sparkSession.sparkContext, sig_ids)
+    return out
+
+
+def _candidates(
+    sig: DataFrame, bands: int, rows_per_band: int, max_bucket: int = 1000
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)`` from a materialized ``(__id, __sig)``
+    signature frame, which the plan reads twice (bucket widths + pairs)."""
     banded = sig.select(
         "__id", F.explode(lsh_band_keys(F.col("__sig"), bands, rows_per_band)).alias("b")
     ).select("__id", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
@@ -239,7 +243,7 @@ def minhash_candidates(
     buckets = banded.groupBy("band", "key").agg(
         F.collect_list("__id").alias("__ids")
     )
-    pairs = (
+    return (
         buckets.select(F.explode("__ids").alias("id_a"), F.col("__ids"))
         .select(
             "id_a",
@@ -249,7 +253,6 @@ def minhash_candidates(
         )
         .distinct()
     )
-    return pairs
 
 
 def _shingle_signature_checkpoint(
@@ -259,15 +262,19 @@ def _shingle_signature_checkpoint(
     ONE eager checkpoint, with its block ids. Not ``persist()``: AQE
     submits the sibling stages that read the shingles at the same moment,
     so each missed the still-empty cache and shingled and signed the
-    corpus itself (two ~0.7 s jobs 6 ms apart at 4k docs)."""
+    corpus itself (two ~0.7 s jobs 6 ms apart at 4k docs). One chained
+    UDF call emits both columns, so the pass shingles and signs each
+    document once (shingles_with_signature)."""
     from validate_xml_rust_spark.ckpt import eager_checkpoint
 
     return eager_checkpoint(
         df.select(
             F.col(id_col).alias("__sid"),
-            shingle_hashes(F.col(text_col), shingle_k).alias("__sh"),
+            shingles_with_signature(
+                shingle_hashes(F.col(text_col), shingle_k), num_perm
+            ).alias("__ss"),
         ).select(
-            "__sid", "__sh", minhash_signature(F.col("__sh"), num_perm).alias("__sig")
+            "__sid", F.col("__ss.sh").alias("__sh"), F.col("__ss.sig").alias("__sig")
         )
     )
 
@@ -297,57 +304,32 @@ def minhash_near_duplicates(
     bands: int = 8,
     shingle_k: int = 3,
     threshold: float = 0.8,
-    eager: bool = False,
 ) -> DataFrame:
     """Verified near-dup pairs ``(id_a, id_b, jaccard)``: LSH candidates
     re-checked with exact Jaccard over shingle hashes (two broadcast-
     friendly joins back to the shingle sets).
 
-    ``eager=True`` (for long-lived sessions) shingles and signs the corpus
-    in ONE checkpointed job that candidate generation and both verify
-    joins read, and returns the verified pairs as an eager checkpoint —
-    the only blocks the call leaves. The lazy default persists the
-    shingle and signature frames and strands them until the caller
-    clears the cache."""
-    from pyspark.storagelevel import StorageLevel
-
+    Shingles and signs the corpus in ONE checkpointed job that candidate
+    generation and both verify joins read, and returns the verified pairs
+    as an eager checkpoint — the only blocks the call leaves."""
     from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
 
-    # Tokenize+shingle the corpus exactly ONCE: the shingle sets feed the
-    # signatures (candidate generation) AND both verify-join sides.
-    if eager:
-        ck, ck_ids = _shingle_signature_checkpoint(
-            df, id_col, text_col, shingle_k, num_perm
-        )
-        sh = ck.select("__sid", "__sh")
-        sig = ck.select(F.col("__sid").alias("__id"), "__sig")
-    else:
-        sh = df.select(
-            F.col(id_col).alias("__sid"),
-            shingle_hashes(F.col(text_col), shingle_k).alias("__sh"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sig = sh.select(
-            F.col("__sid").alias("__id"),
-            minhash_signature(F.col("__sh"), num_perm).alias("__sig"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    cands = minhash_candidates(
-        df, id_col, text_col, num_perm, bands, shingle_k, _sig=sig
-    )
-    if not eager:
-        return _verified_pairs(cands, sh, threshold)
+    ck, ck_ids = _shingle_signature_checkpoint(df, id_col, text_col, shingle_k, num_perm)
+    sh = ck.select("__sid", "__sh")
     # r7 (guide §2.3/§8: decide with small rows, move heavy rows once):
     # materialize the candidate pairs, then semi-join the shingle table
     # down to the ids in some pair BEFORE the two verify joins, which then
     # shuffle only the candidates' arrays (1/3 of the ids and 2/3 fewer
     # array bytes on the 100k prose corpus). Identical output.
-    cands, cand_ids = eager_checkpoint(cands)
+    sig = ck.select(F.col("__sid").alias("__id"), "__sig")
+    cands, cand_ids = eager_checkpoint(_candidates(sig, bands, num_perm // bands))
     in_pair = (
         cands.select(F.col("id_a").alias("__cid"))
         .unionByName(cands.select(F.col("id_b").alias("__cid")))
         .distinct()
     )
     sh = sh.join(F.broadcast(in_pair), sh["__sid"] == F.col("__cid"), "left_semi")
-    out = _verified_pairs(cands, sh, threshold).localCheckpoint(eager=True)
+    out, _ = eager_checkpoint(_verified_pairs(cands, sh, threshold))
     release_blocks(df.sparkSession.sparkContext, ck_ids | cand_ids)
     return out
 
@@ -358,20 +340,20 @@ def simhash_near_duplicates(
     text_col: str = "text",
     max_hamming: int = 3,
     chunk_bits: int = 16,
-    eager: bool = False,
 ) -> DataFrame:
     """SimHash near-dups: pairs with Hamming distance ≤ ``max_hamming``.
 
     Banding by ``chunk_bits``-bit chunks of the 64-bit hash: two hashes
     within Hamming d share at least one of ceil(64/chunk_bits) chunks
     whenever d < 64/chunk_bits (pigeonhole) — exact-match bucket join on
-    chunks, then verify with bit_count(xor)."""
-    from pyspark.storagelevel import StorageLevel
+    chunks, then verify with bit_count(xor). Returned as an eager
+    checkpoint, the only blocks the call leaves."""
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
 
     n_chunks = 64 // chunk_bits
-    h = df.select(
-        F.col(id_col).alias("__id"), simhash64(text_col).alias("__sh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # 64 array-folds per row — compute once
+    h, h_ids = eager_checkpoint(
+        df.select(F.col(id_col).alias("__id"), simhash64(text_col).alias("__sh"))
+    )
     chunks = h.select(
         "__id",
         "__sh",
@@ -383,7 +365,7 @@ def simhash_near_duplicates(
         ).alias("c"),
     ).select("__id", "__sh", F.col("c.chunk").alias("chunk"), F.col("c.ck").alias("ck"))
     a, b = chunks.alias("a"), chunks.alias("b")
-    pairs = (
+    out, _ = eager_checkpoint(
         a.join(
             b,
             (F.col("a.chunk") == F.col("b.chunk"))
@@ -398,11 +380,8 @@ def simhash_near_duplicates(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    if eager:
-        out = pairs.localCheckpoint(eager=True)
-        h.unpersist()
-        return out
-    return pairs
+    release_blocks(df.sparkSession.sparkContext, h_ids)
+    return out
 
 
 def _local_frame(spark, rows: list[tuple], id_type) -> DataFrame:
@@ -488,14 +467,10 @@ def connected_components(
         if stats is not None:
             stats["iterations"] = 1
         return labels
-    # Checkpoint ids come straight off each checkpointed frame's LogicalRDD
-    # (ckpt.py) — NOT a registry set-diff, which would have captured the
-    # edges cache below (its buffer RDD registers during the first
-    # checkpoint's materializing action) and released it at the RDD level
-    # after round 1, silently forcing every later round's two edge scans to
-    # recompute the pairs plan.
+    # The initial labels and every round read the edges: materialize them
+    # once, and free them after the last round's labels have materialized.
     sc = pairs.sparkSession.sparkContext
-    edges = edges.persist()
+    edges, edge_ids = eager_checkpoint(edges)
     labels, ckpt_ids = eager_checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -593,7 +568,7 @@ def connected_components(
             stats["iterations"] = it + 1
         if changed == 0:
             break
-    edges.unpersist()
+    release_blocks(sc, edge_ids)
     return labels
 
 
@@ -672,10 +647,10 @@ def near_dedup(
         release_blocks,
     )
 
-    # eager: the (small) pairs table is materialized once and the
-    # corpus-sized shingle/signature blocks are freed before CC reads it
+    # the (small) pairs table is materialized once and the corpus-sized
+    # shingle/signature blocks are freed before CC reads it
     pairs = minhash_near_duplicates(
-        df, id_col, text_col, threshold=threshold, eager=True, **minhash_kwargs
+        df, id_col, text_col, threshold=threshold, **minhash_kwargs
     )
     comp = connected_components(pairs)
     if keeper_score_col is None:
@@ -757,7 +732,7 @@ def leakage_safe_split(
     if not 0.999 <= total <= 1.001:
         raise ValueError(f"split weights must sum to 1, got {total}")
     pairs = minhash_near_duplicates(
-        df, id_col, text_col, threshold=threshold, eager=True, **minhash_kwargs
+        df, id_col, text_col, threshold=threshold, **minhash_kwargs
     )
     comp = connected_components(pairs)
     labels, label_ids = eager_checkpoint(
@@ -1119,10 +1094,7 @@ def incremental_near_dedup(
     sig = ck.select(F.col("__sid").alias("__id"), "__sig")
 
     # within-slice verified pairs (the minhash_near_duplicates pipeline)
-    cands = minhash_candidates(
-        new_df, id_col, text_col, num_perm, bands, shingle_k,
-        max_bucket=max_bucket, _sig=sig,
-    )
+    cands = _candidates(sig, bands, rows_per_band, max_bucket)
     within = _verified_pairs(cands, sh, threshold)
 
     # store candidates: slice band keys ⋈ store banded layout. ONE
@@ -1139,7 +1111,7 @@ def incremental_near_dedup(
             F.explode(lsh_band_keys(F.col("__sig"), bands, rows_per_band)).alias("b"),
         ).select("__id", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
         # defensive degenerate-bucket cap on the store side (the slice
-        # self-join path is capped inside minhash_candidates)
+        # self-join path is capped inside _candidates)
         widths = store_bands.groupBy("band", "key").agg(
             F.count(F.lit(1)).alias("__bw")
         )
@@ -1281,20 +1253,18 @@ def winnow_candidate_pairs(
     explode fingerprints → self-join per fingerprint bucket (one shuffle
     on the uniform hash key) → count shared per pair. Same degenerate-
     bucket cap as the MinHash path (a boilerplate fingerprint shared by k
-    docs would otherwise fan out k²)."""
-    from pyspark.storagelevel import StorageLevel
+    docs would otherwise fan out k²). Returned as an eager checkpoint,
+    the only blocks the call leaves."""
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
 
     # materialize the exploded fingerprints ONCE: the bucket-size pass and
-    # both self-join sides would otherwise each re-run the Arrow winnowing
-    # UDF over the whole corpus (3x measured ~10x wall) — same pattern as
-    # minhash_candidates' signature persist
-    flat = winnow_fingerprints(df, id_col, text_col, shingle_k, window).select(
-        "id", F.explode("fingerprints").alias("f")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # the pair pass would otherwise each re-run the Arrow winnowing UDF
+    # over the whole corpus (3x measured ~10x wall)
+    flat, flat_ids = _fingerprint_checkpoint(df, id_col, text_col, shingle_k, window)
     sizes = flat.groupBy("f").agg(F.count(F.lit(1)).alias("__bw"))
     capped = flat.join(sizes.filter(F.col("__bw") <= max_bucket).drop("__bw"), "f")
     # per-bucket pair generation via collect_list + narrow explode (r7 —
-    # the minhash_candidates shape): the capped join's output is already
+    # the _candidates shape): the capped join's output is already
     # partitioned on f, so the groupBy shares its exchange; the old a⋈b
     # self-join paid another exchange and materialized every
     # within-bucket pair as a join row. Aggregate state is bounded by
@@ -1302,7 +1272,7 @@ def winnow_candidate_pairs(
     # (id_a, id_b, n_shared) output — pairs per shared fingerprint,
     # counted across fingerprints.
     buckets = capped.groupBy("f").agg(F.collect_list("id").alias("__ids"))
-    return (
+    out, _ = eager_checkpoint(
         buckets.select(F.explode("__ids").alias("id_a"), F.col("__ids"))
         .select(
             "id_a",
@@ -1313,6 +1283,25 @@ def winnow_candidate_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
+    )
+    release_blocks(df.sparkSession.sparkContext, flat_ids)
+    return out
+
+
+def _fingerprint_checkpoint(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int, window: int
+) -> tuple[DataFrame, frozenset[int]]:
+    """``(id, f)`` — one row per document fingerprint — as an eager
+    checkpoint, with its block ids. ``explode_outer`` + a null filter,
+    not ``explode``: Spark infers ``size(fingerprints) > 0`` from an
+    explode and pushes it below the projection, which runs the winnowing
+    UDF a second time. Same rows: a fingerprint array holds no nulls."""
+    from validate_xml_rust_spark.ckpt import eager_checkpoint
+
+    return eager_checkpoint(
+        winnow_fingerprints(df, id_col, text_col, shingle_k, window)
+        .select("id", F.explode_outer("fingerprints").alias("f"))
+        .filter(F.col("f").isNotNull())
     )
 
 
@@ -1336,27 +1325,23 @@ def shared_passage_candidates(
     (CLAUDE.md). Pass ``stats`` to receive ``stats['ckpt_block_ids']``
     and release via ``ckpt.release_blocks`` once your own action has
     materialized (pipeline.curate and orchestrate do)."""
-    from pyspark.storagelevel import StorageLevel
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
 
-    from validate_xml_rust_spark.ckpt import block_ids_of
-
-    flat = winnow_fingerprints(df, id_col, text_col, shingle_k, window).select(
-        "id", F.explode("fingerprints").alias("f")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # the fingerprint checkpoint keeps the UDF from running twice (groupBy
+    # pass + semi-join probe); it is released once the id set materializes
+    flat, flat_ids = _fingerprint_checkpoint(df, id_col, text_col, shingle_k, window)
     shared = (
         flat.groupBy("f")
         .agg(F.min("id").alias("__lo"), F.max("id").alias("__hi"))
         .filter(F.col("__lo") != F.col("__hi"))
         .select("f")
     )
-    out = flat.join(shared, "f", "left_semi").select("id").distinct()
-    # the persist exists to keep the fingerprint UDF from running twice
-    # (groupBy pass + semi-join probe); materialize the tiny id set and
-    # release it before returning
-    out = out.localCheckpoint(eager=True)
+    out, out_ids = eager_checkpoint(
+        flat.join(shared, "f", "left_semi").select("id").distinct()
+    )
     if stats is not None:
-        stats["ckpt_block_ids"] = block_ids_of(out)
-    flat.unpersist()
+        stats["ckpt_block_ids"] = out_ids
+    release_blocks(df.sparkSession.sparkContext, flat_ids)
     return out
 
 

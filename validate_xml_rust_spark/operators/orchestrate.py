@@ -144,14 +144,11 @@ def _table_violations_for(
             minhash_near_duplicates,
         )
 
-        # eager: checkpoint the (small) pairs table and release the
-        # corpus-sized shingle/signature caches BEFORE the CC iterations —
-        # a lazy default here would strand both in executor cache after
-        # every validation run (the long-session leak eager mode exists for)
+        # the pairs come back as a (small) checkpoint; the corpus-sized
+        # shingle/signature blocks are already freed before the CC rounds
         pairs = minhash_near_duplicates(
             df, id_col=id_col, text_col=c.column,
             threshold=float(c.params.get("threshold", 0.8)),
-            eager=True,
         )
         comp = connected_components(pairs)
         # materialize the (tiny) violation rows, then release the pairs and
@@ -384,11 +381,11 @@ def validate_full(
     reference's per-schema scoping.
 
     Cost note: ``near_dup`` constraints execute their full MinHash+CC
-    pipeline EAGERLY here (a deliberate trade — the lazy form strands
-    corpus-sized shingle/signature caches in executor memory after every
-    run); don't declare one in a registry whose table_violations you never
-    read. The materialized violation rows are localCheckpoint blocks —
-    call ``result.release()`` once they're consumed."""
+    pipeline EAGERLY here (near-dedup materializes each intermediate as a
+    checkpoint and frees it before returning); don't declare one in a
+    registry whose table_violations you never read. The materialized
+    violation rows are localCheckpoint blocks — call ``result.release()``
+    once they're consumed."""
     ctx = context or TableContext()
     row_result = validate(
         df, spark, registry, route_col=route_col, route_mode=route_mode,

@@ -992,9 +992,7 @@ def q_minhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1-2e-4 per pair and the seeded hashes make the outcome deterministic."""
     from validate_xml_rust_spark.operators.dedup import minhash_near_duplicates
 
-    return minhash_near_duplicates(
-        _t(spark, sf_dir, "documents"), threshold=0.5, eager=True
-    )
+    return minhash_near_duplicates(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 ORACLE_MINHASH_NEARDUPS = _oracle_jaccard_pairs("", 0.5)
@@ -1171,7 +1169,7 @@ def q_simhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from validate_xml_rust_spark.sources.corpus import synthetic_documents
 
     docs = synthetic_documents(spark, 600, n_partitions=8)
-    return simhash_near_duplicates(docs, max_hamming=3, eager=True)
+    return simhash_near_duplicates(docs, max_hamming=3)
 
 
 ORACLE_SIMHASH_NEARDUPS = f"""
@@ -5370,7 +5368,7 @@ def q_near_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = synthetic_documents(spark, 600, n_partitions=8)
-    pairs = minhash_near_duplicates(docs, threshold=0.6, eager=True)
+    pairs = minhash_near_duplicates(docs, threshold=0.6)
     comp = connected_components(pairs)
     # materialize the (tiny) label rows, then free the pairs/labels
     # checkpoints (DataFrame.unpersist can't reach them — CLAUDE.md);
