@@ -606,7 +606,7 @@ def main() -> None:
     pcorpus = passage_corpus(spark, 100_000, cpus * 2)
 
     def _run_excise() -> None:
-        # release the winnow prefilter's candidate-id checkpoint after
+        # release the excision's gram-start checkpoint after
         # each run — clearCache() can't reach RDD-level checkpoint
         # blocks, so a stats-less loop would leak one block per rep
         st: dict = {}

@@ -60,7 +60,7 @@ def test_curate_single_pass_per_step(spark):
     """Each step's work executes ONCE: an accumulator-traced text column
     counts how many times the source text is actually evaluated across the
     whole curate() call — with per-step eager checkpoints the only
-    evaluations are exact_dedup's two source scans (fingerprint groupBy +
+    evaluations are in exact_dedup's source scans (fingerprint groupBy +
     join-back), while the lazy-chain anti-pattern re-derives the full
     lineage at every step count (≥3× more). Plus: the returned frames are
     lineage-free block scans, and a repeat caller action costs exactly one
@@ -83,12 +83,12 @@ def test_curate_single_pass_per_step(spark):
         docs, spark, near_dup_threshold=None, sample_rate=0.5, pack_max_tokens=64
     )
     evals = acc.value
-    # measured 4n: input count (Python UDFs aren't pruned by count),
-    # exact_dedup's two source scans, checkpoint materialization;
-    # sample/pack read the checkpointed blocks (0 source evals). The
-    # lazy-chain anti-pattern re-derives exact_dedup at every later step
-    # count (≥ 9n) — the bound separates the two shapes cleanly.
-    assert evals <= 4 * n, f"source text evaluated {evals} times for {n} rows"
+    # measured 3n, all inside exact_dedup's checkpoint (the first pass
+    # over the source); the input count() prunes the text column, and
+    # sample/pack read the checkpointed blocks (0 source evals). The lazy-chain
+    # anti-pattern re-derives exact_dedup at every later step count
+    # (≥ 9n) — the bound separates the two shapes cleanly.
+    assert evals <= 3 * n, f"source text evaluated {evals} times for {n} rows"
     steps = {s["step"]: s for s in res.report["steps"]}
     assert steps["exact_dedup"]["rows_out"] == 250
     # returned frames are materialized block scans, not re-derivable plans
@@ -768,3 +768,78 @@ def test_published_packs_keep_prose_corpus(spark):
         rep.filter(F.col("rep_ngram_pass") & F.col("rep_dup_pass")).count()
         > 0.8 * n
     )
+
+
+def test_curate_observed_counts_match_checkpoint_counts(spark, monkeypatch):
+    """Step counts are observed during each checkpoint's own pass; they
+    equal a count()/aggregate over the materialized checkpoint (the way
+    they were once taken). The corpus has NULL texts, NULL ids (whose
+    sample flag evaluates NULL) and planted near-duplicates, so every
+    filtering step, near-dedup included, drops rows."""
+    from validate_xml_rust_spark import pipeline
+    from validate_xml_rust_spark.sources.corpus import prose_documents
+
+    base = prose_documents(spark, 200, 2)
+    near = base.filter(F.col("doc_id") < 25).select(
+        (F.col("doc_id") + 100_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" and the end of it.")).alias("text"),
+    )
+    no_text = spark.range(5).select(
+        (F.col("id") + 200_000).alias("doc_id"), F.lit(None).cast("string").alias("text")
+    )
+    no_id = base.filter(F.col("doc_id").between(30, 39)).select(
+        F.lit(None).cast(base.schema["doc_id"].dataType).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" Written by someone else.")).alias("text"),
+    )
+    docs = base.unionByName(near).unionByName(no_text).unionByName(no_id)
+
+    checkpoints = []
+    real = pipeline.eager_checkpoint
+
+    def recording(frame):
+        out, ids = real(frame)
+        cum, sums = None, []
+        for flag in (c for c in out.columns if c.startswith("__keep")):
+            cum = F.col(flag) if cum is None else cum & F.col(flag)
+            sums.append(F.sum(cum.cast("long")))
+        row = out.agg(
+            F.count(F.lit(1)), F.sum(F.col("doc_id").isNull().cast("long")), *sums
+        ).collect()[0]
+        checkpoints.append([int(v or 0) for v in row])
+        return out, ids
+
+    monkeypatch.setattr(pipeline, "eager_checkpoint", recording)
+    res = curate(
+        docs, spark, normalize_form="NFC", dedup_doc_lines=True,
+        near_dup_threshold=0.8, c4_min_lines=3, gopher_min_words=50,
+        gopher_repetition=True, sample_rate=0.7, pii_redact=True,
+    )
+    segments = [
+        ["normalize", "dedup_doc_lines"], ["exact_dedup"], ["near_dedup"],
+        ["c4_clean", "gopher_repetition_filter", "gopher_filter", "sample",
+         "pii_redact"],
+    ]
+    transforms = {"normalize", "dedup_doc_lines", "pii_redact"}
+    assert [s["step"] for s in res.report["steps"]] == sum(segments, [])
+    assert len(checkpoints) == len(segments)
+    expected, n = [], docs.count()
+    for names, (rows, _, *flag_sums) in zip(segments, checkpoints):
+        for name in names:
+            if len(names) == 1:
+                m = rows
+            elif name in transforms:
+                m = n
+            else:  # fused filters own one cumulative flag sum each, in order
+                m = flag_sums.pop(0)
+            expected.append({"step": name, "rows_in": n, "rows_out": m,
+                             "dropped": n - m})
+            n = m
+    assert res.report["steps"] == expected
+    steps = {s["step"]: s for s in res.report["steps"]}
+    assert steps["near_dedup"]["dropped"] > 0
+    assert res.kept.count() == n
+    # the NULL-id rows reach the fused quality segment, and their NULL
+    # sample flag drops them
+    assert checkpoints[-1][1] == 10
+    assert res.kept.filter(F.col("doc_id").isNull()).count() == 0
+    res.release()

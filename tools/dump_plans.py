@@ -385,8 +385,8 @@ def main() -> None:
             inspect.physical_plan(exc)[:3000],
         )
     )
-    # the plan is captured, exc will never execute — free the prefilter's
-    # eager candidate-id checkpoint (materialized at build time)
+    # the plan is captured, exc will never execute — free the marking's
+    # eager gram-start checkpoint (materialized at build time)
     release_blocks(spark.sparkContext, exc_st.get("ckpt_block_ids", frozenset()))
 
     # 15. BPE chunking — ONE ArrowEvalPython (the encode) feeding shared

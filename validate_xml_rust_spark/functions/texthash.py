@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.colcache import per_context
+
 
 def tokens(text: Column) -> Column:
     """Lowercased word tokens; empty array for null/empty text."""
@@ -88,9 +90,13 @@ def shingle_hashes_from(hashes: Column, k: int = 3) -> Column:
     return sh(hashes)
 
 
-def shingle_hashes(text: Column, k: int = 3) -> Column:
+@per_context
+def shingle_hashes(text: Column | str, k: int = 3) -> Column:
     """Distinct shingle hashes (array<long>) — token hashes JVM-side, the
-    k-window combine vectorized in an Arrow-batched numpy UDF."""
+    k-window combine vectorized in an Arrow-batched numpy UDF. Built once
+    per session when ``text`` is a column name."""
+    if isinstance(text, str):
+        text = F.col(text)
     return shingle_hashes_from(token_hashes(text), k)
 
 
@@ -494,7 +500,8 @@ def _signatures(batch: pd.Series, a, b, num_perm: int) -> list:
     return out
 
 
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
+@per_context
+def lsh_band_keys(signature: Column | str, bands: int, rows_per_band: int) -> Column:
     """Band the signature: hash each contiguous slice of ``rows_per_band``
     entries → array<struct<band:int, key:long>> for exploding into the
     bucket join. Two docs sharing any band key are candidates.
@@ -505,7 +512,10 @@ def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
     evaluating a nested transform+slice per band per row (repo rule;
     measured ~2× on the banding projection). Keys are byte-identical:
     concat_ws over the slice's elements == concat_ws over the array, and
-    xxhash64(str, band) is unchanged."""
+    xxhash64(str, band) is unchanged. Built once per session when
+    ``signature`` is a column name."""
+    if isinstance(signature, str):
+        signature = F.col(signature)
     entries = []
     for b in range(bands):
         elems = [

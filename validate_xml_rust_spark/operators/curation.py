@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.colcache import per_context
 from validate_xml_rust_spark.functions.grambuckets import (
     bucket_ids,
     gram_bucket_counts,
@@ -785,11 +786,17 @@ def normalize_text(
     point — property-tested). Scale shape: one Arrow pass, zero
     shuffle, composes with pushdown; NFC specifically is restated by
     the DuckDB oracle's nfc_normalize so the gate pins the table."""
-    import unicodedata
-
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):
         raise ValueError(f"unknown normalization form: {form!r}")
-    tgt = out_col or text_col
+    return df.withColumn(
+        out_col or text_col, _normalized(text_col, form, lower, strip_accents)
+    )
+
+
+@per_context
+def _normalized(text_col: str, form: str, lower: bool, strip_accents: bool) -> Column:
+    """normalize_text's UDF over ``text_col`` (built once per session)."""
+    import unicodedata
 
     @F.pandas_udf("string")
     def norm(batch: "pd.Series") -> "pd.Series":
@@ -815,7 +822,7 @@ def normalize_text(
 
         return batch.map(one)
 
-    return df.withColumn(tgt, norm(F.col(text_col)))
+    return norm(F.col(text_col))
 
 
 def redact_pii(
@@ -824,13 +831,20 @@ def redact_pii(
     """Scrub emails / IPv4s / phone numbers, with per-kind match counts
     (``n_email, n_ip, n_phone``) for audit rows. Pure JVM regex — one
     codegen'd projection, no Python."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    out = df
-    red = t
+    return df.withColumns(_pii_columns(text_col, out_col))
+
+
+@per_context
+def _pii_columns(text_col: str, out_col: str) -> dict[str, Column]:
+    """redact_pii's columns: each kind's count over the text the earlier
+    kinds have already scrubbed, then the scrubbed text."""
+    red = F.coalesce(F.col(text_col), F.lit(""))
+    cols = {}
     for kind, pat, token in PII_PATTERNS:
-        out = out.withColumn(f"n_{kind}", F.regexp_count(red, F.lit(pat)))
+        cols[f"n_{kind}"] = F.regexp_count(red, F.lit(pat))
         red = F.regexp_replace(red, pat, token)
-    return out.withColumn(out_col, red)
+    cols[out_col] = red
+    return cols
 
 
 def boilerplate_lines(
@@ -941,10 +955,16 @@ def dedup_lines_within_doc(
     appended — a pure projection, no join-back, so NULL/duplicate ids
     need no special routing and the operator composes in place anywhere
     in a pipeline. NULL text behaves as empty."""
+    out = df
+    for stage in _dedup_lines_stages(text_col, out_col):
+        out = out.withColumns(stage)
+    return out.drop("__lines", "__tlines")
+
+
+@per_context
+def _dedup_lines_stages(text_col: str, out_col: str) -> tuple[dict[str, Column], ...]:
+    """dedup_lines_within_doc's columns, one dict per dependent stage."""
     lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-    prepared = df.withColumn("__lines", lines).withColumn(
-        "__tlines", F.transform(F.col("__lines"), lambda x: F.trim(x))
-    )
     idx = F.when(
         F.size("__lines") > 0,
         F.sequence(F.lit(0), F.size("__lines") - 1),
@@ -965,4 +985,8 @@ def dedup_lines_within_doc(
         F.transform(keep, lambda i: F.element_at(F.col("__lines"), i + 1)),
         "\n",
     )
-    return prepared.withColumn(out_col, rebuilt).drop("__lines", "__tlines")
+    return (
+        {"__lines": lines},
+        {"__tlines": F.transform(F.col("__lines"), lambda x: F.trim(x))},
+        {out_col: rebuilt},
+    )

@@ -25,9 +25,10 @@ Scale notes (the part that matters at 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.colcache import per_context
 from validate_xml_rust_spark.functions.texthash import (
     hamming64,
     jaccard,
@@ -40,8 +41,12 @@ from validate_xml_rust_spark.functions.texthash import (
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Content fingerprint: md5 of whitespace-normalized lowercased text."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    return df.withColumn("fingerprint", F.md5(norm))
+    return df.withColumn("fingerprint", _fingerprint_expr(text_col))
+
+
+@per_context
+def _fingerprint_expr(text_col: str) -> Column:
+    return F.md5(F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")))
 
 
 def exact_duplicates(
@@ -221,7 +226,7 @@ def _candidates(
     """Candidate pairs ``(id_a, id_b)`` from a materialized ``(__id, __sig)``
     signature frame, which the plan reads twice (bucket widths + pairs)."""
     banded = sig.select(
-        "__id", F.explode(lsh_band_keys(F.col("__sig"), bands, rows_per_band)).alias("b")
+        "__id", F.explode(lsh_band_keys("__sig", bands, rows_per_band)).alias("b")
     ).select("__id", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
 
     # Defensive cap on degenerate buckets (near-empty shingle sets collide).
@@ -270,12 +275,17 @@ def _shingle_signature_checkpoint(
     return eager_checkpoint(
         df.select(
             F.col(id_col).alias("__sid"),
-            shingles_with_signature(
-                shingle_hashes(F.col(text_col), shingle_k), num_perm
-            ).alias("__ss"),
+            _shingle_signature(text_col, shingle_k, num_perm),
         ).select(
             "__sid", F.col("__ss.sh").alias("__sh"), F.col("__ss.sig").alias("__sig")
         )
+    )
+
+
+@per_context
+def _shingle_signature(text_col: str, shingle_k: int, num_perm: int) -> Column:
+    return shingles_with_signature(shingle_hashes(text_col, shingle_k), num_perm).alias(
+        "__ss"
     )
 
 
@@ -1363,29 +1373,40 @@ def _marked_starts(
     move ~min_run× the rows for the same information. The shared-gram
     test is min(id) != max(id) rather than countDistinct > 1: same
     predicate, but a plain single-phase hash aggregate instead of the
-    two-phase distinct-aggregate Expand rewrite."""
+    two-phase distinct-aggregate Expand rewrite.
+
+    The positional grams feed both the keeper aggregate and the join back,
+    so they are one eager checkpoint (otherwise each reader runs the gram
+    UDF over every candidate doc), released once the returned starts
+    checkpoint has materialized, together with the prefilter's candidate
+    ids. The starts' block ids go to ``stats['ckpt_block_ids']`` for the
+    caller to release after its own action."""
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
     from validate_xml_rust_spark.functions.texthash import (
         seq_gram_hashes,
         token_hashes,
     )
 
+    cand_stats: dict = {}
     if prefilter:
         # lossless: a shared run of min_run = window+k-1 tokens guarantees
         # a shared winnow fingerprint, so both docs land in the candidates
         cand_ids = shared_passage_candidates(
             work, "__id", "__t", shingle_k=shingle_k,
-            window=min_run - shingle_k + 1, stats=stats,
+            window=min_run - shingle_k + 1, stats=cand_stats,
         )
         cand = work.join(
             cand_ids.withColumnRenamed("id", "__id"), "__id", "left_semi"
         )
     else:
         cand = work
-    grams = cand.select(
-        "__id",
-        F.posexplode(
-            seq_gram_hashes(token_hashes(F.col("__t")), min_run)
-        ).alias("pos", "gh"),
+    grams, gram_ids = eager_checkpoint(
+        cand.select(
+            "__id",
+            F.posexplode(
+                seq_gram_hashes(token_hashes(F.col("__t")), min_run)
+            ).alias("pos", "gh"),
+        )
     )
     keepers = grams.groupBy("gh").agg(
         F.min("__id").alias("__keep"), F.max("__id").alias("__hi")
@@ -1400,10 +1421,17 @@ def _marked_starts(
         marked = grams.join(keepers, "gh").filter(
             F.col("__hi") != F.col("__keep")
         )
-    return (
+    starts, starts_ids = eager_checkpoint(
         marked.groupBy("__id")
         .agg(F.sort_array(F.collect_set("pos")).alias("__starts"))
     )
+    release_blocks(
+        work.sparkSession.sparkContext,
+        gram_ids | cand_stats.get("ckpt_block_ids", frozenset()),
+    )
+    if stats is not None:
+        stats["ckpt_block_ids"] = starts_ids
+    return starts
 
 
 def shared_passage_stats(

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.colcache import per_context
 from validate_xml_rust_spark.functions.grambuckets import (
     bucket_ids,
     char_grams,
@@ -186,6 +187,19 @@ def repetition_stats(
     of tokens, lines, and paragraphs — each split materialized once;
     everything else is codegen'd expressions.
     """
+    out = df
+    for stage in _repetition_stages(text_col, flag_threshold):
+        out = out.withColumns(stage)
+    return out.drop("__cov", "__toks", "__lines", "__paras")
+
+
+@per_context
+def _repetition_stages(
+    text_col: str, flag_threshold: float
+) -> tuple[dict[str, Column], ...]:
+    """repetition_stats' columns, one dict per dependent stage (helper
+    columns ``__toks``/``__lines``/``__paras``/``__cov`` are dropped by
+    the caller)."""
     from validate_xml_rust_spark.functions.texthash import (
         ngram_coverage_udf,
         tokens,
@@ -217,62 +231,49 @@ def repetition_stats(
     def _l(col: Column) -> Column:
         return F.transform(col, lambda x: F.length(x).cast("int"))
 
-    out = (
-        df.withColumn("__toks", tokens(t))
-        .withColumn("__lines", F.array_remove(F.split(t, "\n"), ""))
-        .withColumn(
-            "__paras",
-            F.filter(
+    def _cov(field: str) -> Column:
+        return F.round(F.col(f"__cov.{field}"), 6)
+
+    return (
+        {
+            "__toks": tokens(t),
+            "__lines": F.array_remove(F.split(t, "\n"), ""),
+            "__paras": F.filter(
                 F.split(t, r"\n{2,}"), lambda x: F.length(F.trim(x)) > 0
             ),
-        )
-        .withColumn(
-            "__cov",
-            ngram_coverage_udf(
+        },
+        {
+            "__cov": ngram_coverage_udf(
                 _h(words), _l(words), _h(lines), _l(lines),
                 _h(paras), _l(paras),
             ),
-        )
-    )
-    out = (
-        out.withColumn("unigram_rep", uni)
-        .withColumn("bigram_rep", F.round(F.col("__cov.bigram_rep"), 6))
-        .withColumn("dup_line_frac", dup_lines)
-        .withColumn("dup_para_frac", dup_paras)
-        .withColumn(
-            "dup_line_char_frac", F.round(F.col("__cov.dup_line_char"), 6)
-        )
-        .withColumn(
-            "dup_para_char_frac", F.round(F.col("__cov.dup_para_char"), 6)
-        )
-        .withColumn("top2_char_frac", F.round(F.col("__cov.top2"), 6))
-        .withColumn("top3_char_frac", F.round(F.col("__cov.top3"), 6))
-        .withColumn("top4_char_frac", F.round(F.col("__cov.top4"), 6))
-        .withColumn("dup5_char_frac", F.round(F.col("__cov.dup5"), 6))
-        .withColumn("dup10_char_frac", F.round(F.col("__cov.dup10"), 6))
-        .drop("__cov", "__toks", "__lines", "__paras")
-    )
-    return (
-        out.withColumn(
-            "rep_ngram_pass",
-            (F.col("top2_char_frac") <= 0.20)
+        },
+        {
+            "unigram_rep": uni,
+            "bigram_rep": _cov("bigram_rep"),
+            "dup_line_frac": dup_lines,
+            "dup_para_frac": dup_paras,
+            "dup_line_char_frac": _cov("dup_line_char"),
+            "dup_para_char_frac": _cov("dup_para_char"),
+            "top2_char_frac": _cov("top2"),
+            "top3_char_frac": _cov("top3"),
+            "top4_char_frac": _cov("top4"),
+            "dup5_char_frac": _cov("dup5"),
+            "dup10_char_frac": _cov("dup10"),
+        },
+        {
+            "rep_ngram_pass": (F.col("top2_char_frac") <= 0.20)
             & (F.col("top3_char_frac") <= 0.18)
             & (F.col("top4_char_frac") <= 0.16)
             & (F.col("dup5_char_frac") <= 0.15)
             & (F.col("dup10_char_frac") <= 0.10),
-        )
-        .withColumn(
-            "rep_dup_pass",
-            (F.col("dup_line_frac") <= 0.30)
+            "rep_dup_pass": (F.col("dup_line_frac") <= 0.30)
             & (F.col("dup_para_frac") <= 0.30)
             & (F.col("dup_line_char_frac") <= 0.20)
             & (F.col("dup_para_char_frac") <= 0.20),
-        )
-        .withColumn(
-            "repetitive",
-            (F.col("unigram_rep") > flag_threshold)
+            "repetitive": (F.col("unigram_rep") > flag_threshold)
             | (F.col("bigram_rep") > flag_threshold),
-        )
+        },
     )
 
 
@@ -462,23 +463,34 @@ def c4_rules(
     per-line predicates, page flags as codegen'd contains(); zero
     shuffle, zero Python. The predicates avoid lookarounds so the
     DuckDB oracle restates them verbatim under RE2."""
+    out = df
+    for stage in _c4_stages(text_col, min_words_per_line, min_lines):
+        out = out.withColumns(stage)
+    return out.drop("__lines", "__kept")
+
+
+@per_context
+def _c4_stages(
+    text_col: str, min_words_per_line: int, min_lines: int
+) -> tuple[dict[str, Column], ...]:
+    """c4_rules' columns, one dict per dependent stage (``__lines`` and
+    ``__kept`` are dropped by the caller)."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    out = df.withColumn(
-        "__lines", F.array_remove(F.split(t, "\n"), "")
-    ).withColumn("__kept", c4_kept_lines(F.col("__lines"), min_words_per_line))
     return (
-        out.withColumn("c4_text", F.array_join(F.col("__kept"), "\n"))
-        .withColumn("c4_lines_total", F.size("__lines").cast("long"))
-        .withColumn("c4_lines_kept", F.size("__kept").cast("long"))
-        .withColumn("c4_has_lorem", F.lower(t).contains("lorem ipsum"))
-        .withColumn("c4_has_brace", t.contains("{"))
-        .withColumn(
-            "c4_pass",
-            ~F.col("c4_has_lorem")
+        {"__lines": F.array_remove(F.split(t, "\n"), "")},
+        {"__kept": c4_kept_lines(F.col("__lines"), min_words_per_line)},
+        {
+            "c4_text": F.array_join(F.col("__kept"), "\n"),
+            "c4_lines_total": F.size("__lines").cast("long"),
+            "c4_lines_kept": F.size("__kept").cast("long"),
+            "c4_has_lorem": F.lower(t).contains("lorem ipsum"),
+            "c4_has_brace": t.contains("{"),
+        },
+        {
+            "c4_pass": ~F.col("c4_has_lorem")
             & ~F.col("c4_has_brace")
             & (F.col("c4_lines_kept") >= min_lines),
-        )
-        .drop("__lines", "__kept")
+        },
     )
 
 
@@ -609,22 +621,22 @@ def gopher_rules(
     arrays; zero shuffle, zero Python. At 10^12 pages the operator is
     scan-bound and composes with any filter pushdown. NULL text behaves
     as empty (fails the word-count and stop-word rules, ratios 0)."""
-    sig = gopher_signals(F.col(text_col), min_words, max_words)
-    out = df
-    for name, expr in sig.items():
-        out = out.withColumn(name, expr)
-    return out
+    return df.withColumns(gopher_signals(text_col, min_words, max_words))
 
 
+@per_context
 def gopher_signals(
-    text: Column,
+    text: Column | str,
     min_words: int = 50,
     max_words: int = 100_000,
 ) -> dict[str, Column]:
     """Expression builder behind gopher_rules (and the ``gopher`` spec
     constraint kind): the seven rule signals plus the composite, keyed
     by output column name, every one a codegen'd regexp_count/rlike
-    expression over ``text``."""
+    expression over ``text`` (built once per session when ``text`` is a
+    column name)."""
+    if isinstance(text, str):
+        text = F.col(text)
     t = F.coalesce(text, F.lit(""))
     # count-of-runs formulations (identical semantics to split+filter,
     # but whole-stage-codegen regex scans instead of interpreted HOFs).

@@ -12,11 +12,16 @@ dropped). Steps are skipped when their knob is None — the pipeline
 degrades to exactly the steps you configure.
 
 Scale shape — each step's work executes EXACTLY ONCE: every step's output
-is materialized as an eager localCheckpoint, the step count is a block
-scan of that materialized frame (never a lineage recompute), the next
-step's plan is rooted at the checkpoint, and the superseded checkpoint's
-blocks are released at the RDD level as soon as the successor has
-materialized. The returned ``kept``/``packs`` frames are themselves
+is materialized as an eager localCheckpoint, and the step's row counts are
+observed (``DataFrame.observe``) during that same pass, so no count job
+runs and no lineage is recomputed. The input count comes from the first
+fused segment's pass, or from one column-pruned scan when the first step
+reads its input twice. The next step's plan is rooted at the checkpoint,
+and the superseded checkpoint's blocks are released at the RDD level as
+soon as the successor has materialized. The rule Columns a step applies
+are built once per session (``colcache.per_context``), so a warm run
+spends its driver time on Spark, not on rebuilding expression trees. The
+returned ``kept``/``packs`` frames are themselves
 checkpoints, so the caller's write is a block scan too — total work is
 one pass per step, not the O(steps²) full-corpus re-derivation that
 per-step ``count()`` on lazy frames would cost. Blocks live in executor
@@ -32,10 +37,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
+from validate_xml_rust_spark.colcache import per_context
 
 
 @dataclass
@@ -138,6 +144,34 @@ def pack_shard(id_col: str, n_shards: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col(id_col), F.lit(13)), F.lit(n_shards)).cast("int")
 
 
+@per_context
+def _row_count() -> Column:
+    """The ``__n`` row-count metric a step's checkpoint pass observes."""
+    return F.count(F.lit(1)).alias("__n")
+
+
+@per_context
+def _cumulative_flags(keep_cols: tuple[str, ...]) -> tuple[Column, ...]:
+    """``flag_1``, ``flag_1 & flag_2``, …: the population each filtering
+    step of a fused segment passes on."""
+    out, cum = [], None
+    for k in keep_cols:
+        cum = F.col(k) if cum is None else (cum & F.col(k))
+        out.append(cum)
+    return tuple(out)
+
+
+@per_context
+def _segment_metrics(keep_cols: tuple[str, ...], count_input: bool) -> tuple[Column, ...]:
+    """A fused segment's observed metrics: ``__c{i}`` rows passing flags
+    1..i, plus the ``__n`` input rows when nothing has counted them."""
+    sums = tuple(
+        F.sum(c.cast("long")).alias(f"__c{i}")
+        for i, c in enumerate(_cumulative_flags(keep_cols))
+    )
+    return ((_row_count(),) if count_input else ()) + sums
+
+
 def _split_scorable(frame: DataFrame, id_col: str):
     """The pipeline's id contract in one place: rows with a UNIQUE
     non-NULL id are scorable/selectable; NULL-id and duplicate-id rows
@@ -206,15 +240,21 @@ def curate(
     sc = spark.sparkContext
     steps: list[dict] = []
     cur = df
-    n = df.count()  # input count: one column-pruned source scan
+    # rows entering the next step; None until a pass has counted the input
+    n: int | None = None
     prev_ids: frozenset = frozenset()  # blocks of the predecessor checkpoint
 
     def log(step: str, out_df: DataFrame) -> DataFrame:
         nonlocal n, prev_ids
-        # the eager checkpoint IS the step's single execution; the count
-        # below scans the materialized blocks (no lineage to recompute)
-        out, ids = eager_checkpoint(out_df)
-        m = out.count()
+        if n is None:
+            # the step's plan may read the input more than once (a join
+            # back), so its pass cannot count the input: scan it
+            n = df.count()
+        # the eager checkpoint IS the step's single execution, and the
+        # observation counts its rows during that pass
+        obs = Observation()
+        out, ids = eager_checkpoint(out_df.observe(obs, _row_count()))
+        m = obs.get["__n"]
         steps.append({"step": step, "rows_in": n, "rows_out": m, "dropped": n - m})
         # successor materialized → predecessor blocks are unreachable
         release_blocks(sc, prev_ids)
@@ -227,19 +267,20 @@ def curate(
     # are queued and materialized as ONE eager checkpoint instead of one
     # per step: the fused frame carries every queued step's transform plus
     # one boolean keep-flag per filtering step; per-step (rows_in,
-    # rows_out) come from a single block-scan aggregate of CUMULATIVE flag
-    # conjunctions — identical numbers to the sequential pipeline (a row
-    # counts for step i iff it passes flags 1..i, which is exactly the
-    # population the sequential version hands step i+1; TRUE&TRUE only,
-    # NULL/FALSE both fail, matching filter()'s NULL-drops semantics).
+    # rows_out) come from sums of CUMULATIVE flag conjunctions, observed
+    # during the checkpoint's own pass — identical numbers to the
+    # sequential pipeline (a row counts for step i iff it passes flags
+    # 1..i, which is exactly the population the sequential version hands
+    # step i+1; TRUE&TRUE only, NULL/FALSE both fail, matching filter()'s
+    # NULL-drops semantics). Builders never drop rows, so the same pass
+    # also counts the segment's input when nothing has counted it yet.
     # Transforms are pure per-row functions, so applying them to rows a
     # later flag drops cannot change any surviving row's bytes. A k-step
-    # narrow segment costs ONE compute pass + one checkpoint + one count
-    # scan instead of k materializations + k counts (measured: the five
-    # preset chains spend most of their non-dedup time here). The final
-    # frame is a filter VIEW over the fused checkpoint's blocks — still
-    # "one pass per step": downstream reads materialized blocks plus a
-    # codegen filter.
+    # narrow segment costs ONE compute pass + one checkpoint instead of k
+    # materializations + k counts (measured: the five preset chains spend
+    # most of their non-dedup time here). The final frame is a filter
+    # VIEW over the fused checkpoint's blocks — still "one pass per
+    # step": downstream reads materialized blocks plus a codegen filter.
     pending: list[tuple[str, object]] = []
 
     def queue(step: str, builder) -> None:
@@ -258,31 +299,30 @@ def curate(
             work, keep = builder(work)
             flags.append((step, keep))
         pending.clear()
-        out, ids = eager_checkpoint(work)
-        aggs, cum = [], None
-        for i, (_, keep) in enumerate(flags):
-            if keep is None:
-                continue
-            cum = F.col(keep) if cum is None else (cum & F.col(keep))
-            aggs.append(F.sum(cum.cast("long")).alias(f"__c{i}"))
-        counts = out.agg(*aggs).collect()[0] if aggs else None
-        running = n
-        for i, (step, keep) in enumerate(flags):
+        keep_cols = tuple(k for _, k in flags if k is not None)
+        metrics = _segment_metrics(keep_cols, n is None)
+        counts: dict = {}
+        if metrics:
+            obs = Observation()
+            out, ids = eager_checkpoint(work.observe(obs, *metrics))
+            counts = obs.get
+        else:
+            out, ids = eager_checkpoint(work)
+        running = counts["__n"] if n is None else n
+        flagged = 0
+        for step, keep in flags:
             if keep is None:
                 steps.append({"step": step, "rows_in": running,
                               "rows_out": running, "dropped": 0})
             else:
-                mo = int(counts[f"__c{i}"] or 0)
+                mo = int(counts[f"__c{flagged}"] or 0)
+                flagged += 1
                 steps.append({"step": step, "rows_in": running,
                               "rows_out": mo, "dropped": running - mo})
                 running = mo
-        keep_cols = [k for _, k in flags if k is not None]
         final = out
         if keep_cols:
-            pred = None
-            for k in keep_cols:
-                pred = F.col(k) if pred is None else (pred & F.col(k))
-            final = out.filter(pred).drop(*keep_cols)
+            final = out.filter(_cumulative_flags(keep_cols)[-1]).drop(*keep_cols)
         release_blocks(sc, prev_ids)
         prev_ids = ids
         n = running
@@ -490,17 +530,19 @@ def curate(
         )
         # materialize the UNFILTERED result once: the token metrics must
         # count excisions in docs that are then dropped for having no
-        # surviving tokens, so the agg runs before the drop filter — both
-        # the agg and the logged step are block scans of this checkpoint
-        # (the excision plan executes exactly once)
+        # surviving tokens, so they are observed during this checkpoint's
+        # pass, before the drop filter; the logged step is a block scan of
+        # the checkpoint (the excision plan executes exactly once)
+        exc_obs = Observation()
         full, full_ids = eager_checkpoint(
-            joined.unionByName(passthrough.select(*joined.columns))
+            joined.unionByName(passthrough.select(*joined.columns)).observe(
+                exc_obs,
+                F.sum("n_tokens_removed").alias("t"),
+                F.sum((F.col("n_spans") > 0).cast("long")).alias("d"),
+                F.sum(F.col("__pt").cast("long")).alias("p"),
+            )
         )
-        agg = full.agg(
-            F.sum("n_tokens_removed").alias("t"),
-            F.sum((F.col("n_spans") > 0).cast("long")).alias("d"),
-            F.sum(F.col("__pt").cast("long")).alias("p"),
-        ).collect()[0]
+        agg = exc_obs.get
         cur = log(
             "excise_passages",
             full.filter(
@@ -512,7 +554,7 @@ def curate(
         steps[-1]["docs_with_excisions"] = int(agg["d"] or 0)
         steps[-1]["rows_passthrough"] = int(agg["p"] or 0)
         # the step checkpoint has materialized → the unfiltered frame and
-        # the prefilter's internal candidate-id checkpoint are unreachable
+        # the excision's internal gram-start checkpoint are unreachable
         release_blocks(sc, full_ids)
         release_blocks(sc, exc_stats.get("ckpt_block_ids", frozenset()))
 
@@ -566,9 +608,9 @@ def curate(
         def _b_c4(frame: DataFrame):
             c4 = c4_rules(frame, text_col, min_lines=c4_min_lines)
             return (
-                c4.withColumn("__keep_c4", F.col("c4_pass"))
-                .withColumn(text_col, F.col("c4_text"))
-                .drop(*C4_COLUMNS),
+                c4.withColumns(
+                    {"__keep_c4": F.col("c4_pass"), text_col: F.col("c4_text")}
+                ).drop(*C4_COLUMNS),
                 "__keep_c4",
             )
 

@@ -3769,8 +3769,8 @@ def q_excise_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = passage_corpus(spark, 400, n_partitions=8)
     st: dict = {}
-    # materialize the (tiny, 400-row) result once, then free the winnow
-    # prefilter's internal candidate-id checkpoint (same pattern as
+    # materialize the (tiny, 400-row) result once, then free the
+    # excision's internal gram-start checkpoint (same pattern as
     # q_near_dedup_components) — also lets the fingerprint suite's two
     # variants scan blocks instead of running the excision plan twice
     out, _ = eager_checkpoint(excise_shared_passages(docs, min_run=8, stats=st))
