@@ -206,3 +206,66 @@ def test_warm_curate_stays_within_py4j_and_job_budgets(spark, tmp_path, monkeypa
     assert report["steps"][-1]["rows_out"] > 0
     assert calls[0] <= 3000, calls[0]
     assert jobs <= 25, jobs
+
+
+def test_store_metadata_launches_no_spark_jobs(spark, tmp_path, monkeypatch):
+    """The durable stores keep their commit state in a driver-side log:
+    reading it (``SignatureStore.generations``, ``open_commits``,
+    ``next_snapshot_id``) and publishing each commit record launch no
+    Spark job. Kept as one-row parquet writes and reads, they took 4, 2
+    and 3 jobs per read and 1 per record."""
+    from pyspark.sql import functions as F
+
+    from validate_xml_rust_spark.operators import outputs, resume
+    from validate_xml_rust_spark.operators.dedup import SignatureStore
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} body " * (1 + i % 4)) for i in range(160)],
+        "doc_id long, text string",
+    ).withColumn("n_tokens", F.length("text"))
+    sketch = spark.createDataFrame(
+        [(i, [i * 100 + k for k in range(32)], [i]) for i in range(6)],
+        "doc_id long, sig array<long>, shingles array<long>",
+    )
+    metrics = spark.createDataFrame(
+        [(0, "r1", 10)], "partition_id int, run_id string, n_rows long"
+    )
+    shards, mdir = str(tmp_path / "shards"), str(tmp_path / "manifest")
+    store = SignatureStore(spark, str(tmp_path / "store"))
+
+    def build() -> None:
+        outputs.write_training_shards(docs.filter("doc_id < 120"), shards, 1500)
+        outputs.append_training_shards(docs.filter("doc_id >= 120"), shards, 1500)
+        store.commit(sketch.filter("doc_id < 3"))
+        store.commit(sketch.filter("doc_id >= 3"))
+        store.compact()
+        resume.write_manifest(metrics, mdir)
+
+    build()
+    reads = {
+        "generations": store.generations,
+        "open_commits": lambda: outputs.open_commits(spark, shards),
+        "next_snapshot_id": lambda: resume.next_snapshot_id(spark, mdir),
+    }
+    jobs = {}
+    for name, read in reads.items():
+        mark = _status_mark(spark)
+        read()
+        jobs[name] = _status_delta(spark, mark)["jobs"]
+    assert jobs == dict.fromkeys(reads, 0), jobs
+
+    from validate_xml_rust_spark import genlog
+
+    append, record_jobs = genlog.append, []
+
+    def counted(root, record):
+        mark = _status_mark(spark)
+        gen = append(root, record)
+        record_jobs.append(_status_delta(spark, mark)["jobs"])
+        return gen
+
+    monkeypatch.setattr(genlog, "append", counted)
+    build()
+    # begin + done for the shard write and the append, two commits and a
+    # compaction, one manifest snapshot
+    assert record_jobs == [0] * 8, record_jobs

@@ -430,17 +430,14 @@ def test_snapshot_source_seam(spark):
     assert seam.filter(F.col("revalidated")).count() == 4  # ids 8..11
 
 
-@pytest.mark.parametrize("source_kind", ["parquet", "directory"])
+@pytest.mark.parametrize("source_kind", ["parquet"])
 def test_snapshot_source_seam_two_implementations(spark, tmp_path, source_kind):
-    """The SnapshotSource seam has TWO implementations — the join-based
-    ParquetSnapshotSource and the generation-addressed catalog
-    DirectorySnapshotSource (broadcast-planned, Iceberg-layout skeleton)
-    — and incremental_verdicts is byte-identical through both: same
-    planted corpus, same carry/delta routing, same verdicts."""
+    """incremental_verdicts through the join-based ParquetSnapshotSource
+    is identical to a from-scratch full validation: same planted corpus,
+    exact carry/delta routing, same verdicts."""
     from pyspark.sql import functions as F
 
     from validate_xml_rust_spark.operators.resume import (
-        DirectorySnapshotSource,
         ParquetSnapshotSource,
         content_fingerprint,
         incremental_verdicts,
@@ -464,18 +461,7 @@ def test_snapshot_source_seam_two_implementations(spark, tmp_path, source_kind):
         "doc_key",
     ).dropDuplicates(["doc_key"])
 
-    if source_kind == "parquet":
-        src = ParquetSnapshotSource(prior, id_col="doc_key")
-    else:
-        root = str(tmp_path / "catalog_root")
-        dsrc = DirectorySnapshotSource(spark, root, id_col="doc_key")
-        assert dsrc.latest() is None
-        # a superseded generation 1, then the real prior as generation 2:
-        # split must read ONLY the latest
-        assert dsrc.commit(prior.limit(10)) == 1
-        assert dsrc.commit(prior) == 2
-        assert dsrc.latest()[0] == 2
-        src = dsrc
+    src = ParquetSnapshotSource(prior, id_col="doc_key")
     out = incremental_verdicts(
         docs, prior, spark, _registry(), fcols, id_col="doc_key",
         source=src,
@@ -493,22 +479,3 @@ def test_snapshot_source_seam_two_implementations(spark, tmp_path, source_kind):
         assert full[(r["doc_key"],)] == (
             r["spec_id"], r["status"], r["error_count"]
         ), r["doc_key"]
-
-
-def test_directory_snapshot_source_first_run_all_delta(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from validate_xml_rust_spark.operators.resume import (
-        DirectorySnapshotSource,
-        content_fingerprint,
-    )
-
-    docs = with_partition_id(pages(spark, 50), 2).withColumn(
-        "content_fp", content_fingerprint(["text", "lang"])
-    )
-    src = DirectorySnapshotSource(spark, str(tmp_path / "empty_root"), id_col="url")
-    matched, delta = src.split(docs, carry_cols=[])
-    assert matched.count() == 0
-    assert delta.count() == 50
-    # full schema survives (the equi-join keys lead, like the parquet source)
-    assert set(delta.columns) == set(docs.columns)

@@ -25,9 +25,10 @@ Scale notes (the part that matters at 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark import genlog
 from validate_xml_rust_spark.colcache import per_context
 from validate_xml_rust_spark.functions.texthash import (
     hamming64,
@@ -816,15 +817,17 @@ class SignatureStore:
     (src/cache.rs:139-316): today's accepted corpus signs itself ONCE and
     every later ingest reuses those rows instead of re-shingling history.
 
-    Layout under ``root`` (the DirectorySnapshotSource catalog pattern,
-    operators/resume.py)::
+    Layout under ``root``::
 
-        root/catalog/        — parquet rows (generation, path, n_docs,
-                               num_perm, bands, shingle_k, committed_at),
-                               append-only; doubles as the parameter pin —
-                               every generation must be signed with the
-                               SAME hash family or band keys stop being
-                               comparable, so reads refuse a mismatch
+        root/_log/<g>.json   — one record per generation (``genlog``):
+                               kind, path, n_docs, num_perm, bands,
+                               shingle_k. Doubles as the parameter
+                               pin — every generation must be signed with
+                               the SAME hash family or band keys stop being
+                               comparable, so reads refuse a mismatch.
+                               ``compact()`` publishes a ``base`` record that
+                               replaces every generation before it: readers
+                               start at the latest base
         root/gen-<g>/bands   — (band int, key long, doc_id) in JOIN layout:
                                candidate generation is a plain equi-join
                                on (band, key); at cluster scale this table
@@ -837,8 +840,13 @@ class SignatureStore:
                                sets (signature-agreement verification
                                only) for a ~5-10× smaller store
 
-    No catalog yet → empty store → first ingest bootstraps generation 1
-    (plain within-slice near_dedup semantics)."""
+    A generation's payload directory is written BEFORE its record, so a
+    crash leaves at most an unpublished ``gen-<g>`` that the next commit
+    overwrites. Single writer: two concurrent committers would write the
+    same ``gen-<g>``. No log yet → empty store → first ingest bootstraps
+    generation 1 (plain within-slice near_dedup semantics). A root that
+    holds the older ``catalog/`` layout and no log is refused: read as
+    empty, the next ingest would overwrite its ``gen-1``."""
 
     def __init__(
         self,
@@ -855,76 +863,60 @@ class SignatureStore:
         self.num_perm, self.bands, self.shingle_k = num_perm, bands, shingle_k
         self.store_shingles = store_shingles
 
-    def _catalog(self) -> DataFrame | None:
+    def generations(self) -> list[tuple[int, str, int]]:
+        """Live ``(generation, path, n_docs)`` rows, oldest first: the
+        latest base record and every commit after it, read from the log
+        on the driver (no Spark job). Also the parameter-pin check: a
+        generation signed with a different hash family is a hard error,
+        not a silent recall loss."""
         import os
 
-        cat = f"{self.root}/catalog"
-        if not os.path.isdir(cat):
-            # crash recovery for compact()'s stage-then-swap: a fully
-            # written staging catalog with no live catalog means the
-            # crash fell between the two renames — finish the swap
-            # rather than reading the store as empty
-            staging = f"{self.root}/catalog.staging"
-            if os.path.isdir(staging) and os.path.exists(
-                os.path.join(staging, "_SUCCESS")
-            ):
-                os.rename(staging, cat)
-        try:
-            self.spark.catalog.refreshByPath(cat)
-            return self.spark.read.parquet(cat)
-        except Exception as e:  # no catalog yet → empty store
-            from pyspark.errors import AnalysisException
-
-            if isinstance(e, AnalysisException):
-                return None
-            raise
-
-    def generations(self) -> list[tuple[int, str, int]]:
-        """Committed ``(generation, path, n_docs)`` rows, oldest first —
-        O(#generations) driver rows (the bounded-collect rule), also the
-        parameter-pin check: a catalog row signed with a different hash
-        family is a hard error, not a silent recall loss."""
-        cat = self._catalog()
-        if cat is None:
-            return []
-        rows = cat.orderBy("generation").collect()
-        for r in rows:
-            got = (int(r["num_perm"]), int(r["bands"]), int(r["shingle_k"]))
-            want = (self.num_perm, self.bands, self.shingle_k)
+        recs = genlog.records(self.root)
+        if not recs and os.path.isdir(f"{self.root}/catalog"):
+            raise ValueError(
+                f"{self.root} holds a catalog/ store layout with no "
+                f"{genlog.LOG_DIR}/ log; it is not read (as an empty store "
+                "the next commit would overwrite gen-1)"
+            )
+        base = max(
+            (i for i, r in enumerate(recs) if r["kind"] == "base"), default=0
+        )
+        want = (self.num_perm, self.bands, self.shingle_k)
+        for r in recs[base:]:
+            got = (r["num_perm"], r["bands"], r["shingle_k"])
             if got != want:
                 raise ValueError(
-                    f"store generation {int(r['generation'])} was signed with "
+                    f"store generation {r['generation']} was signed with "
                     f"(num_perm, bands, shingle_k)={got}, store opened with "
                     f"{want} — band keys are not comparable across families"
                 )
-        return [(int(r["generation"]), r["path"], int(r["n_docs"])) for r in rows]
+        return [(r["generation"], r["path"], r["n_docs"]) for r in recs[base:]]
 
     def latest_generation(self) -> int:
         gens = self.generations()
         return gens[-1][0] if gens else 0
 
-    def bands_frame(self, _gens: list | None = None) -> DataFrame | None:
+    def bands_frame(self) -> DataFrame | None:
         """All committed band rows ``(band, key, doc_id)`` — the
         generation-addressed union read (explicit path selection off the
-        catalog, the Iceberg-snapshot-scan shape). ``_gens`` lets a
-        caller thread ONE ``generations()`` read through several
-        accesses (r7: each call is a driver-side catalog refresh + read
-        + collect; incremental_near_dedup paid it 3-4× per ingest)."""
-        gens = self.generations() if _gens is None else _gens
+        log, the Iceberg-snapshot-scan shape)."""
+        gens = self.generations()
         if not gens:
             return None
         return self.spark.read.parquet(*[f"{p}/bands" for _, p, _ in gens])
 
-    def sketch_frame(self, _gens: list | None = None) -> DataFrame | None:
-        gens = self.generations() if _gens is None else _gens
+    def sketch_frame(self) -> DataFrame | None:
+        gens = self.generations()
         if not gens:
             return None
         return self.spark.read.parquet(*[f"{p}/sketch" for _, p, _ in gens])
 
-    def _write_generation(self, sketch: DataFrame, gen: int) -> int:
+    def _publish(self, kind: str, sketch: DataFrame) -> int:
         """Write one generation dir (sketch + banded layout derived FROM
         THE WRITTEN PARQUET — one cheap re-read of id+sig, never a
-        signature recompute) and return its row count.
+        signature recompute), then publish its log record; returns the
+        generation. The row count comes from an Observation on the
+        sketch write.
 
         Both tables are REPARTITIONED on write — bands by ``key`` (the
         candidate join's equi-key: key-clustered files are the layout
@@ -935,12 +927,17 @@ class SignatureStore:
         of cores — measured as a size-dependent serial term in the 2→8
         scaling contrast (the write-once shuffle here is amortized over
         every future ingest that reads the generation)."""
-        path = f"{self.root}/gen-{gen}"
+        path = f"{self.root}/gen-{self.latest_generation() + 1}"
         npart = self.spark.sparkContext.defaultParallelism
         cols = ["doc_id", "sig"] + (["shingles"] if self.store_shingles else [])
-        sketch.select(*cols).repartition(npart, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/sketch")
+        obs = Observation()
+        (
+            sketch.select(*cols)
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .repartition(npart, "doc_id")
+            .write.mode("overwrite")
+            .parquet(f"{path}/sketch")
+        )
         written = self.spark.read.parquet(f"{path}/sketch")
         rows_per_band = self.num_perm // self.bands
         (
@@ -955,69 +952,34 @@ class SignatureStore:
             .write.mode("overwrite")
             .parquet(f"{path}/bands")
         )
-        return written.count()
+        return genlog.append(self.root, {
+            "kind": kind, "path": path, "n_docs": int(obs.get["n"]),
+            "num_perm": self.num_perm, "bands": self.bands,
+            "shingle_k": self.shingle_k,
+        })
 
-    def _catalog_row(self, gen: int, n: int) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(gen, f"{self.root}/gen-{gen}", n,
-              self.num_perm, self.bands, self.shingle_k)],
-            "generation long, path string, n_docs long, "
-            "num_perm int, bands int, shingle_k int",
-        ).withColumn("committed_at", F.current_timestamp())
-
-    def commit(self, sketch: DataFrame, _gens: list | None = None) -> int:
+    def commit(self, sketch: DataFrame) -> int:
         """Append ``sketch`` — ``(doc_id, sig array<long>, shingles
         array<long>)`` — as the next generation. Older generations remain
         for audit/rollback (the reference's cache generations,
-        src/cache.rs:139-316). ``_gens`` threads a caller's already-read
-        catalog (single-writer contract — the store has no concurrent
-        committers)."""
-        gens = self.generations() if _gens is None else _gens
-        gen = (gens[-1][0] if gens else 0) + 1
-        n = self._write_generation(sketch, gen)
-        self._catalog_row(gen, n).write.mode("append").parquet(
-            f"{self.root}/catalog"
-        )
-        return gen
+        src/cache.rs:139-316)."""
+        return self._publish("commit", sketch)
 
     def compact(self) -> int:
-        """Rewrite all committed generations as ONE (the reference's
+        """Rewrite all live generations as ONE (the reference's
         cache-cleanup analog, src/cache.rs:422-448): the union sketch is
-        written as generation max+1 and the catalog is REPLACED with that
-        single row, so reads stop unioning a long generation chain.
-        Old generation dirs stay on disk unreferenced (audit/rollback —
-        the DirectorySnapshotSource policy). Duplicate doc_ids across
-        generations collapse to one row (identical content → identical
-        sketch; a RE-SUBMITTED id with different content is ambiguous —
-        dedupe upstream). No-op (returns the head generation) on stores
-        with ≤1 generation."""
+        written as the next generation and published as a ``base``
+        record, so reads stop unioning a long generation chain. Older
+        generation dirs stay on disk unreferenced (audit/rollback).
+        Duplicate doc_ids across generations collapse to one row
+        (identical content → identical sketch; a RE-SUBMITTED id with
+        different content is ambiguous — dedupe upstream). No-op (returns
+        the head generation) on stores with ≤1 generation."""
         gens = self.generations()
         if len(gens) <= 1:
             return gens[-1][0] if gens else 0
-        import os
-        import shutil
-
-        union = self.sketch_frame(_gens=gens).dropDuplicates(["doc_id"])
-        gen = gens[-1][0] + 1
-        n = self._write_generation(union, gen)
-        # STAGE-then-SWAP (r6 ADVICE: an in-place overwrite destroys the
-        # healthy catalog the moment the delete starts — a crash
-        # mid-overwrite read the store as EMPTY and the next ingest
-        # silently re-bootstrapped onto gen-1). The replacement catalog
-        # is fully written to a staging dir first; only then is the old
-        # one moved aside and the staging dir renamed into place (both
-        # directory renames — the compacted generation's data was already
-        # durable before either). A crash between the two renames leaves
-        # the staging dir for _catalog()'s recovery path.
-        staging = f"{self.root}/catalog.staging"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        self._catalog_row(gen, n).write.mode("overwrite").parquet(staging)
-        old = f"{self.root}/catalog.pre-compact-{gen}"
-        os.rename(f"{self.root}/catalog", old)
-        os.rename(staging, f"{self.root}/catalog")
-        self.spark.catalog.refreshByPath(f"{self.root}/catalog")
-        return gen
+        union = self.sketch_frame().dropDuplicates(["doc_id"])
+        return self._publish("base", union)
 
 
 def incremental_near_dedup(
@@ -1107,12 +1069,8 @@ def incremental_near_dedup(
     cands = _candidates(sig, bands, rows_per_band, max_bucket)
     within = _verified_pairs(cands, sh, threshold)
 
-    # store candidates: slice band keys ⋈ store banded layout. ONE
-    # catalog read serves the bands frame, the sketch frame, and the
-    # commit below (r7 — generations() is a driver-side refresh + read +
-    # collect, previously paid 3-4× per ingest).
-    _gens = store.generations()
-    store_bands = store.bands_frame(_gens=_gens)
+    # store candidates: slice band keys ⋈ store banded layout
+    store_bands = store.bands_frame()
     if store_bands is None:
         tainted = sig.select(F.col("__id").alias("id")).limit(0)
     else:
@@ -1137,7 +1095,7 @@ def incremental_near_dedup(
             .dropDuplicates(["id_new", "id_old"])
         )
         if verify == "exact":
-            sk = store.sketch_frame(_gens=_gens).select(
+            sk = store.sketch_frame().select(
                 F.col("doc_id").alias("id_old"), F.col("shingles").alias("sh_old")
             )
             ver = (
@@ -1154,7 +1112,7 @@ def incremental_near_dedup(
                 )
             )
         else:
-            sk = store.sketch_frame(_gens=_gens).select(
+            sk = store.sketch_frame().select(
                 F.col("doc_id").alias("id_old"), F.col("sig").alias("sig_old")
             )
             agree = F.expr(
@@ -1220,7 +1178,7 @@ def incremental_near_dedup(
                 F.broadcast(drop), F.col("doc_id") == F.col("__drop"), "left_anti"
             )
         )
-        gen = store.commit(surv_sketch, _gens=_gens)
+        gen = store.commit(surv_sketch)
     if stats is not None:
         stats["generation"] = gen
     release_blocks(sc, ck_ids)

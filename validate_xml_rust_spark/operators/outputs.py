@@ -15,8 +15,12 @@ parquet layout keeps the same pruning behavior in the sandbox.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from validate_xml_rust_spark import genlog
 
 
 def write_results(
@@ -191,10 +195,15 @@ def write_training_shards(
     ``n_shards`` to pin the shard count explicitly (e.g. when the first
     batch of a streaming ingest is not representative of the eventual
     corpus size) instead of deriving it from this frame's token total.
-    The pin lives in ``out_dir/meta`` (one row), NOT just on manifest
-    rows — a zero-row initial write must not lose an explicit pin.
-    A zero-row write WITHOUT an explicit pin writes no meta: the layout
-    is then undecided, and the first real append derives it.
+
+    Commit log (``out_dir/_log``, see ``genlog``): a full write resets
+    the log, records ``begin`` before the first shard byte moves and
+    ``done`` after the manifest lands, so a crash in between reads as an
+    open generation (``open_commits``, ``verify_shards``). The ``done``
+    record carries the n_shards pin, NOT just the manifest rows — a
+    zero-row initial write must not lose an explicit pin. A zero-row
+    write WITHOUT an explicit pin records none: the layout is then
+    undecided, and the first real append derives it.
 
     The input is eager-checkpointed ONCE up front: the sink needs the
     frame three times (token-sum pass for n_shards, the shards write,
@@ -219,23 +228,19 @@ def write_training_shards(
         id_col=id_col,
         tokens_col=tokens_col,
     )
-    # Precondition BEFORE the WAL reset (r6 ADVICE): mode='error' on an
-    # existing store fails without moving a byte — resetting the log
-    # first would destroy the healthy record and make verify_shards
-    # report the fully intact store as half-applied. Fail here instead,
-    # leaving the prior log recoverable.
-    import os as _os
-
-    if mode in ("error", "errorifexists") and _os.path.exists(
+    # Precondition BEFORE the log reset: mode='error' on an existing
+    # store fails without moving a byte — resetting the log first would
+    # destroy the healthy record and make verify_shards report the fully
+    # intact store as half-applied.
+    if mode in ("error", "errorifexists") and os.path.exists(
         f"{out_dir}/shards"
     ):
         raise FileExistsError(
             f"{out_dir}/shards exists and mode={mode!r}; commit log left "
             "untouched"
         )
-    # WAL: a full (re)write RESETS the commit log — generation 1 begins
-    # before the first shard byte moves ([] = the whole store)
-    _log_commit(spark, out_dir, 1, "begin", [], mode="overwrite")
+    genlog.reset(out_dir)
+    begin = genlog.append(out_dir, {"phase": "begin", "touched": []})
     (
         sharded.repartition(n_shards, F.col("shard_id"))
         .sortWithinPartitions("shard_id", id_col)
@@ -251,25 +256,22 @@ def write_training_shards(
         content_col=content_col,
     )
     # n_shards rides the manifest rows for consumers reading only the
-    # manifest; the DURABLE pin is the meta sidecar below
-    manifest = manifest.withColumn("n_shards", F.lit(n_shards).cast("long"))
-    manifest.write.mode(mode).parquet(f"{out_dir}/manifest")
-    spark.catalog.refreshByPath(f"{out_dir}/manifest")
-    stored = spark.read.parquet(f"{out_dir}/manifest")
-    # the meta sidecar is ALWAYS (over)written — a decided layout as one
-    # row, an undecided one (zero-row unpinned write) as zero rows — so
-    # a re-initialized store can never serve a dead generation's pin
-    meta_rows = (
-        [(int(n_shards), int(tokens_per_shard))]
-        if pinned is not None or stored.limit(1).count() > 0
-        else []
+    # manifest; the DURABLE pin is the done record below
+    obs = Observation()
+    (
+        manifest.withColumn("n_shards", F.lit(n_shards).cast("long"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .write.mode(mode)
+        .parquet(f"{out_dir}/manifest")
     )
-    spark.createDataFrame(
-        meta_rows, "n_shards long, tokens_per_shard long"
-    ).write.mode(mode).parquet(f"{out_dir}/meta")
-    _log_commit(spark, out_dir, 1, "done", [])
+    decided = pinned is not None or obs.get["n"] > 0
+    genlog.append(out_dir, {
+        "phase": "done", "begin": begin,
+        "n_shards": int(n_shards) if decided else None,
+    })
     release_blocks(spark.sparkContext, blocks)
-    return stored
+    spark.catalog.refreshByPath(f"{out_dir}/manifest")
+    return spark.read.parquet(f"{out_dir}/manifest")
 
 
 def append_training_shards(
@@ -281,13 +283,17 @@ def append_training_shards(
     content_col: str = "text",
 ) -> DataFrame:
     """Append a new batch to an existing sharded training set WITHOUT
-    rewriting the corpus: n_shards is pinned from the stored manifest
-    (assignment is a pure function of id and n_shards, so existing docs
-    never move), only the shard directories that receive new docs are
-    rewritten (dynamic partition overwrite — untouched shard files stay
-    byte-identical on disk), and the manifest is refreshed to the new
-    totals. At 10^12 docs an append touches O(min(batch, n_shards))
-    partitions, not the corpus.
+    rewriting the corpus: n_shards is pinned from the full write's log
+    record (assignment is a pure function of id and n_shards, so
+    existing docs never move), only the shard directories that receive
+    new docs are rewritten (dynamic partition overwrite — untouched
+    shard files stay byte-identical on disk), and the manifest is
+    refreshed to the new totals. At 10^12 docs an append touches
+    O(min(batch, n_shards)) partitions, not the corpus.
+
+    A store whose log holds no committed full write (never written, an
+    older layout, or a full write that crashed) is refused: re-run
+    ``write_training_shards``.
 
     Appending drifts ``fill_ratio`` upward (the budget denominator is
     fixed); consumers re-shard with ``write_training_shards`` when the
@@ -301,37 +307,31 @@ def append_training_shards(
     from pyspark.errors import AnalysisException
 
     spark = new_df.sparkSession
-    n_shards = None
-    try:
-        spark.catalog.refreshByPath(f"{out_dir}/meta")
-        meta = spark.read.parquet(f"{out_dir}/meta").first()
-        if meta is not None:
-            n_shards = int(meta["n_shards"])
-    except AnalysisException:
-        pass  # pre-meta store layout: fall back to manifest rows
+    muts = _mutations(out_dir)
+    if not muts or muts[0]["done"] is None:
+        raise RuntimeError(
+            f"{out_dir} has no committed full write in its commit log; "
+            "run write_training_shards first"
+        )
+    n_shards = muts[0]["done"]["n_shards"]
+    if n_shards is None:
+        # undecided store (a zero-row initial write with no explicit
+        # pin): appending IS the initial write
+        return write_training_shards(
+            new_df, out_dir, tokens_per_shard,
+            id_col=id_col, tokens_col=tokens_col, content_col=content_col,
+        )
     spark.catalog.refreshByPath(f"{out_dir}/manifest")
     prior = spark.read.parquet(f"{out_dir}/manifest")
-    if n_shards is None:
-        first = prior.select("n_shards").first()
-        if first is None:
-            # undecided store (a zero-row initial write with no explicit
-            # pin writes no meta): appending IS the initial write
-            return write_training_shards(
-                new_df, out_dir, tokens_per_shard,
-                id_col=id_col, tokens_col=tokens_col,
-                content_col=content_col,
-            )
-        n_shards = int(first["n_shards"])
     assigned, _ = shard_assignments(
         new_df, n_shards=n_shards, id_col=id_col, tokens_col=tokens_col
     )
-    touched = [
+    touched = sorted(
         r["shard_id"] for r in assigned.select("shard_id").distinct().collect()
-    ]
+    )
     if not touched:  # empty batch: nothing to rewrite
         return prior
-    gen = _next_generation(spark, out_dir)
-    _log_commit(spark, out_dir, gen, "begin", touched)
+    begin = genlog.append(out_dir, {"phase": "begin", "touched": touched})
     # the rewrite READS the shard dirs it is about to overwrite — the
     # combined rows must be materialized (checkpoint blocks) before the
     # write starts deleting source files
@@ -342,26 +342,20 @@ def append_training_shards(
         )
     except AnalysisException:
         # a pinned zero-row initial write leaves no shard part files —
-        # the store exists (meta + empty manifest) but holds nothing yet
+        # the store exists (log + empty manifest) but holds nothing yet
         old_touched = assigned.limit(0)
     cols = [c for c in old_touched.columns]
     combined, blocks = eager_checkpoint(
         old_touched.unionByName(assigned.select(*cols))
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            combined.repartition(len(touched), F.col("shard_id"))
-            .sortWithinPartitions("shard_id", id_col)
-            .write.mode("overwrite")
-            .partitionBy("shard_id")
-            .parquet(f"{out_dir}/shards")
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
+    (
+        combined.repartition(len(touched), F.col("shard_id"))
+        .sortWithinPartitions("shard_id", id_col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("shard_id")
+        .parquet(f"{out_dir}/shards")
+    )
     refreshed = shard_manifest(
         combined,
         tokens_per_shard,
@@ -378,7 +372,7 @@ def append_training_shards(
     # the manifest overwrite also reads its own prior generation
     manifest, mblocks = eager_checkpoint(manifest)
     manifest.write.mode("overwrite").parquet(f"{out_dir}/manifest")
-    _log_commit(spark, out_dir, gen, "done", touched)
+    genlog.append(out_dir, {"phase": "done", "begin": begin})
     release_blocks(spark.sparkContext, blocks | mblocks)
     # re-read from the sink: the checkpoint frames above just had their
     # blocks released, so they must not escape to the caller
@@ -386,65 +380,33 @@ def append_training_shards(
     return spark.read.parquet(f"{out_dir}/manifest")
 
 
-def _log_commit(
-    spark: SparkSession,
-    out_dir: str,
-    generation: int,
-    phase: str,
-    touched: list[int],
-    mode: str = "append",
-) -> None:
-    """One commit-log record under ``out_dir/commits`` — the shard
-    store's WAL (the DirectorySnapshotSource generation pattern,
-    operators/resume.py; an Iceberg table gets this from its atomic
-    snapshot commit). A mutation writes ``begin`` BEFORE touching any
-    shard directory and ``done`` after its manifest lands, so a crash
-    between them is DETECTABLE as an open generation instead of reading
-    as payload tampering. ``touched=[]`` means the whole store (a full
-    rewrite)."""
-    spark.createDataFrame(
-        [(int(generation), phase, [int(t) for t in touched])],
-        "generation long, phase string, touched array<long>",
-    ).withColumn("committed_at", F.current_timestamp()).write.mode(mode).parquet(
-        f"{out_dir}/commits"
-    )
+def _mutations(out_dir: str) -> list[dict]:
+    """The shard store's mutations in log order: ``generation`` (the
+    ordinal of its ``begin`` record; a full write resets the log, so it
+    is generation 1), ``touched`` shards ([] = the whole store) and
+    ``done`` (its done record, None while open)."""
+    recs = genlog.records(out_dir)
+    dones = {r["begin"]: r for r in recs if r["phase"] == "done"}
+    begins = [r for r in recs if r["phase"] == "begin"]
+    return [
+        {
+            "generation": i,
+            "touched": r["touched"],
+            "done": dones.get(r["generation"]),
+        }
+        for i, r in enumerate(begins, 1)
+    ]
 
 
 def open_commits(spark: SparkSession, out_dir: str) -> list[dict]:
     """Generations with a ``begin`` record but no ``done`` — half-applied
-    mutations. Empty for a healthy store; [] for a pre-commit-log store
-    (backward compatible). O(#mutations) driver rows."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.catalog.refreshByPath(f"{out_dir}/commits")
-        log = spark.read.parquet(f"{out_dir}/commits").collect()
-    except AnalysisException:
-        return []
-    done = {int(r["generation"]) for r in log if r["phase"] == "done"}
+    mutations. Empty for a healthy store, and for a store with no commit
+    log. Read from the log on the driver (no Spark job)."""
     return [
-        {
-            "generation": int(r["generation"]),
-            "touched": [int(t) for t in (r["touched"] or [])],
-        }
-        for r in log
-        if r["phase"] == "begin" and int(r["generation"]) not in done
+        {"generation": m["generation"], "touched": m["touched"]}
+        for m in _mutations(out_dir)
+        if m["done"] is None
     ]
-
-
-def _next_generation(spark: SparkSession, out_dir: str) -> int:
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.catalog.refreshByPath(f"{out_dir}/commits")
-        head = (
-            spark.read.parquet(f"{out_dir}/commits")
-            .agg(F.max("generation").alias("g"))
-            .first()
-        )
-        return (int(head["g"]) if head and head["g"] is not None else 0) + 1
-    except AnalysisException:
-        return 1
 
 
 def verify_shards(
@@ -516,24 +478,18 @@ def verify_shards(
     # the generation, distinctly from payload tampering (whose checksum
     # detail it would otherwise be indistinguishable from). touched=[]
     # (a full rewrite) covers every shard.
-    opens = open_commits(spark, out_dir)
+    muts = _mutations(out_dir)
+    opens = [m for m in muts if m["done"] is None]
+
     # a LATER committed mutation covering the same shard supersedes the
     # open generation there (the recovery path: re-running the failed
     # append commits a new generation over the same shards and the
     # incident closes; a full rewrite resets the whole log)
-    try:
-        spark.catalog.refreshByPath(f"{out_dir}/commits")
-        dones = [
-            (int(r["generation"]), [int(t) for t in (r["touched"] or [])])
-            for r in spark.read.parquet(f"{out_dir}/commits").collect()
-            if r["phase"] == "done"
-        ]
-    except AnalysisException:
-        dones = []
-
     def _resolved(gen: int, shard: int) -> bool:
         return any(
-            g2 > gen and (not t2 or shard in t2) for g2, t2 in dones
+            m["done"] is not None and m["generation"] > gen
+            and (not m["touched"] or shard in m["touched"])
+            for m in muts
         )
 
     whole_gen = max(

@@ -9,8 +9,10 @@ the input against the manifest and processes only the remainder.
 With Iceberg available this would key on snapshot IDs
 (``spark.read.format('iceberg')`` + snapshot expiry); the sandbox fallback
 is a parquet manifest directory with run_id versioning — same contract,
-same join shape. Writes are append-mode parquet (atomic at the file level;
-Iceberg would make them transactional).
+same join shape. Each ``write_manifest`` first takes a snapshot id from the
+directory's generation log (``manifest_dir/_log``, see ``genlog``; Spark's
+parquet listing skips it), then appends its rows (append-mode parquet,
+atomic at the file level; Iceberg would make the pair transactional).
 
 Per-partition lineage + metrics rows (north_rule) are emitted alongside:
 ``partition_id, run_id, n_rows, n_valid, n_invalid, n_error, n_skipped,
@@ -21,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from validate_xml_rust_spark import genlog
 
 MANIFEST_SCHEMA = (
     "partition_id int, run_id string, snapshot_id long, n_rows long, "
@@ -64,32 +68,23 @@ def partition_metrics(verdicts: DataFrame, run_id: str) -> DataFrame:
 
 
 def next_snapshot_id(spark: SparkSession, manifest_dir: str) -> int:
-    """Monotonically increasing snapshot generation: 1 + the highest id
-    already committed (1 for a fresh manifest). With Iceberg this column
-    is replaced by the table's own snapshot id at commit time — the
+    """The snapshot generation the next ``write_manifest`` takes: 1 + the
+    newest id in the manifest's generation log (1 for a fresh manifest),
+    read on the driver (no Spark job). With Iceberg this column is
+    replaced by the table's own snapshot id at commit time — the
     manifest schema is deliberately shaped so that swap-in changes only
-    this function.
-
-    Single-writer assumption (documented contract): the read-then-append
-    is not locked, so two CONCURRENT runs committing to one manifest dir
-    can allocate the same generation. The parquet fallback accepts this
-    (a duplicated snapshot_id degrades lineage granularity, never
-    correctness of the completed-partition set); Iceberg's atomic snapshot
-    commit removes the race outright. ``read_manifest`` distinguishes
-    missing-dir (fresh manifest → generation 1) from transient read
-    errors (re-raised), so numbering can't silently restart at 1."""
-    m = read_manifest(spark, manifest_dir)
-    if m is None or "snapshot_id" not in m.columns:
-        return 1
-    row = m.agg(F.max("snapshot_id").alias("s")).collect()[0]
-    return int(row["s"] or 0) + 1
+    this function and ``write_manifest``."""
+    recs = genlog.records(manifest_dir)
+    return recs[-1]["generation"] + 1 if recs else 1
 
 
 def write_manifest(metrics: DataFrame, manifest_dir: str) -> int:
     """Append completed-partition rows as ONE snapshot generation (the
-    "snapshot commit"); returns the committed snapshot_id."""
-    spark = metrics.sparkSession
-    sid = next_snapshot_id(spark, manifest_dir)
+    "snapshot commit"); returns the committed snapshot_id. The id is
+    taken from the generation log BEFORE the rows are written: a crash
+    in between leaves a gap in the ids, and two concurrent writers never
+    share one."""
+    sid = genlog.append(manifest_dir, {"kind": "snapshot"})
     # cast: F.lit(python int) is INT32, MANIFEST_SCHEMA declares long —
     # mixed physical types in one parquet dir break schema-enforcing readers
     metrics.withColumn("snapshot_id", F.lit(sid).cast("long")).write.mode(
@@ -103,17 +98,15 @@ def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame | None:
         # mergeSchema: a manifest dir written before the snapshot_id column
         # existed gets new-schema files appended beside old ones; without
         # merging, the inferred schema comes from an ARBITRARY footer — an
-        # old one hides snapshot_id and next_snapshot_id would re-issue
-        # generation 1 (duplicate ids). Merged, old rows read as NULL
-        # snapshot_id and max() skips them. The manifest is O(partitions)
-        # files, so the footer sweep is cheap.
+        # old one hides snapshot_id. Merged, old rows read as NULL
+        # snapshot_id. The manifest is O(partitions) files, so the footer
+        # sweep is cheap.
         return spark.read.option("mergeSchema", "true").parquet(manifest_dir)
     except Exception as e:
         # ONLY missing-path/empty-dir (AnalysisException: PATH_NOT_FOUND /
         # UNABLE_TO_INFER_SCHEMA) means "no manifest yet". A transient IO
         # or permission error must NOT read as a fresh manifest — that
-        # would silently restart snapshot numbering at 1 AND re-validate
-        # completed partitions.
+        # would re-validate completed partitions.
         from pyspark.errors import AnalysisException
 
         if isinstance(e, AnalysisException):
@@ -213,11 +206,7 @@ class SnapshotSource:
     - ``delta``: the remaining current rows, untouched (full schema).
 
     ``ParquetSnapshotSource`` below is the engine-agnostic sandbox
-    implementation (two joins on the uniform (id, fp) key);
-    ``DirectorySnapshotSource`` is a SECOND implementation over a
-    directory-of-snapshots catalog (generation-addressed reads, broadcast
-    planning off cataloged row counts) proving the seam carries more than
-    one strategy. An Iceberg
+    implementation (two joins on the uniform (id, fp) key). An Iceberg
     implementation of this same interface replaces the anti-join with the
     table's incremental snapshot-diff scan (`incremental read between
     prior and current snapshot ids): the delta arrives directly from
@@ -264,112 +253,6 @@ class ParquetSnapshotSource(SnapshotSource):
             self.prior_u.select(id_col, fp_col),
             on=[id_col, fp_col], how="left_anti",
         )
-        return matched, delta
-
-
-class DirectorySnapshotSource(SnapshotSource):
-    """Second implementation of the snapshot seam: a directory-of-
-    snapshots CATALOG (the file-layout skeleton of an Iceberg table).
-    Layout under ``root``::
-
-        root/catalog/          — parquet rows (snapshot_id, path, n_rows,
-                                 committed_at), append-only
-        root/snapshots/<sid>/  — one verdict-store parquet per generation
-
-    ``split`` resolves the LATEST committed generation from the catalog
-    and diffs the current corpus against ONLY that snapshot's files — the
-    generation-addressed read an Iceberg snapshot scan performs, here as
-    explicit path selection. Physical strategy also differs from
-    ``ParquetSnapshotSource``: the catalog carries row counts, so a
-    snapshot known to be small (≤ ``broadcast_rows``) is broadcast into
-    both the reuse join and the anti-join instead of sort-merge
-    shuffling the corpus side. ``commit`` writes the next generation —
-    today's verdicts become tomorrow's prior without rewriting history
-    (older generations remain for audit/rollback, the reference's cache
-    generations, src/cache.rs:139-316).
-
-    No catalog yet → empty prior → everything lands in the delta
-    (first-run semantics)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        id_col: str = "url",
-        fp_col: str = "content_fp",
-        broadcast_rows: int = 1_000_000,
-    ) -> None:
-        self.spark, self.root = spark, root
-        self.id_col, self.fp_col = id_col, fp_col
-        self.broadcast_rows = broadcast_rows
-
-    def _catalog(self) -> DataFrame | None:
-        try:
-            self.spark.catalog.refreshByPath(f"{self.root}/catalog")
-            return self.spark.read.parquet(f"{self.root}/catalog")
-        except Exception as e:
-            from pyspark.errors import AnalysisException
-
-            if isinstance(e, AnalysisException):
-                return None  # no catalog yet → no snapshots committed
-            raise
-
-    def latest(self) -> tuple[int, str, int] | None:
-        """(snapshot_id, path, n_rows) of the newest generation, or None."""
-        cat = self._catalog()
-        if cat is None:
-            return None
-        rows = cat.orderBy(F.col("snapshot_id").desc()).limit(1).collect()
-        if not rows:
-            return None
-        r = rows[0]
-        return int(r["snapshot_id"]), r["path"], int(r["n_rows"])
-
-    def commit(self, store: DataFrame) -> int:
-        """Write ``store`` (``(id, fp, spec_id, status, error_count)``)
-        as the next snapshot generation and record it in the catalog."""
-        head = self.latest()
-        sid = (head[0] if head else 0) + 1
-        path = f"{self.root}/snapshots/{sid}"
-        store.write.mode("overwrite").parquet(path)
-        n = self.spark.read.parquet(path).count()
-        self.spark.createDataFrame(
-            [(sid, path, n)], "snapshot_id long, path string, n_rows long"
-        ).withColumn("committed_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(f"{self.root}/catalog")
-        return sid
-
-    def split(
-        self, cur: DataFrame, carry_cols: list[str]
-    ) -> tuple[DataFrame, DataFrame]:
-        id_col, fp_col = self.id_col, self.fp_col
-        head = self.latest()
-        payload = [id_col, fp_col, "spec_id", "status", "error_count"]
-        if head is None:
-            # first run: an empty prior typed off the CURRENT frame (no
-            # assumptions about the id type) — everything is delta
-            prior = (
-                cur.select(id_col, fp_col).limit(0)
-                .withColumn("spec_id", F.lit(None).cast("string"))
-                .withColumn("status", F.lit(None).cast("string"))
-                .withColumn("error_count", F.lit(None).cast("int"))
-            )
-            n_rows = 0
-        else:
-            _, path, n_rows = head
-            prior = self.spark.read.parquet(path).select(*payload).dropDuplicates(
-                [id_col, fp_col]
-            )
-        small = n_rows <= self.broadcast_rows
-        reuse_side = F.broadcast(prior) if small else prior
-        matched = cur.select(id_col, fp_col, *carry_cols).join(
-            reuse_side, on=[id_col, fp_col], how="inner"
-        )
-        anti_side = prior.select(id_col, fp_col)
-        if small:
-            anti_side = F.broadcast(anti_side)
-        delta = cur.join(anti_side, on=[id_col, fp_col], how="left_anti")
         return matched, delta
 
 
