@@ -494,6 +494,7 @@ def test_cli_shards_and_datasheet(tmp_path, capsys):
     # drift (a deleted shard dir) exits 2 through the standard ladder
     assert main([shards, "--verify-shards", "-q"]) == 0
     import glob
+    import os
     import shutil
 
     victim = sorted(glob.glob(f"{shards}/shards/shard_id=*"))[0]
@@ -502,6 +503,11 @@ def test_cli_shards_and_datasheet(tmp_path, capsys):
     assert code3 == 2
     printed = capsys.readouterr().out
     assert "missing from store" in printed
+    # a write begun but never committed (its done record lost): every
+    # shard is a structural error naming the open generation
+    os.remove(f"{shards}/_log/2.json")
+    assert main([shards, "--verify-shards"]) == 2
+    assert "generation 1 begun but never committed" in capsys.readouterr().out
 
 
 def test_cli_datasheet_empty_input_and_missing_text(tmp_path, capsys):

@@ -261,31 +261,6 @@ def test_mixture_epochs_default_and_zero_factor(spark):
         mixture_epochs(df, {"a": -1.0}, source_col="source", key_col="doc_id")
 
 
-def test_mixture_factors_hits_token_budget(spark):
-    from validate_xml_rust_spark.operators.curation import (
-        mixture_epochs,
-        mixture_factors,
-    )
-
-    rows = [(i, "wiki" if i < 100 else "web", 10) for i in range(1100)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, n_tok int")
-    # wiki has 1k tokens, web 10k; ask for a 50/50 mix of 4k tokens
-    f = mixture_factors(
-        df, {"wiki": 0.5, "web": 0.5}, source_col="source",
-        token_budget=4000, token_col="n_tok",
-    )
-    assert abs(f["wiki"] - 2.0) < 1e-9  # 2000/1000 → 2 epochs
-    assert abs(f["web"] - 0.2) < 1e-9
-    out = mixture_epochs(df, f, source_col="source", key_col="doc_id",
-                         default_factor=0.0)
-    toks = {
-        r["source"]: r["t"]
-        for r in out.groupBy("source").agg(F.sum("n_tok").alias("t")).collect()
-    }
-    assert toks["wiki"] == 2000  # integer factor → exact
-    assert 1400 <= toks["web"] <= 2600  # fractional → ~2000
-
-
 def test_mixture_epochs_null_source_and_null_key(spark):
     from validate_xml_rust_spark.operators.curation import mixture_epochs
 

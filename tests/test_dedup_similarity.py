@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from validate_xml_rust_spark.operators.dedup import (
     exact_dedup,
     exact_duplicates,
-    minhash_candidates,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
@@ -102,8 +101,6 @@ def test_incremental_dedup_against_store(spark):
 
 def test_minhash_finds_identical_and_near(spark):
     d = _docs(spark)
-    cands = {(r["id_a"], r["id_b"]) for r in minhash_candidates(d).collect()}
-    assert (0, 1) in cands  # identical docs always collide in every band
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in minhash_near_duplicates(d, threshold=0.5).collect()
@@ -772,51 +769,6 @@ def test_semantic_dedup_null_and_uncastable_ids_survive(spark):
     got = [(r["vec_id"]) for r in kept.collect()]
     assert sorted(x for x in got if x is not None) == [5]
     assert got.count(None) == 2
-
-
-def test_tune_lsh_params_knee_tracks_threshold():
-    from validate_xml_rust_spark.operators.dedup import tune_lsh_params
-
-    lo = tune_lsh_params(0.3, num_perm=32)
-    hi = tune_lsh_params(0.9, num_perm=32)
-    for p in (lo, hi):
-        assert p["bands"] * p["rows_per_band"] == 32
-        assert 0 <= p["fp"] <= 1 and 0 <= p["fn"] <= 1
-    # a higher target threshold needs longer rows (steeper, later knee)
-    assert hi["rows_per_band"] > lo["rows_per_band"]
-    assert lo["knee"] < 0.5 < hi["knee"] + 0.35
-    # the chosen knee lands near the requested threshold
-    assert abs(lo["knee"] - 0.3) < 0.25
-    assert abs(hi["knee"] - 0.9) < 0.25
-
-
-def test_tune_lsh_params_weights_shift_choice():
-    from validate_xml_rust_spark.operators.dedup import tune_lsh_params
-
-    recall = tune_lsh_params(0.8, num_perm=64, fp_weight=0.05, fn_weight=0.95)
-    precision = tune_lsh_params(0.8, num_perm=64, fp_weight=0.95, fn_weight=0.05)
-    # recall-weighted → more bands (shorter rows) than precision-weighted
-    assert recall["bands"] >= precision["bands"]
-    assert recall["fn"] <= precision["fn"]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        tune_lsh_params(1.5)
-
-
-def test_tune_lsh_params_drives_near_dedup(spark):
-    from validate_xml_rust_spark.operators.dedup import (
-        near_dedup,
-        tune_lsh_params,
-    )
-    from validate_xml_rust_spark.sources.corpus import synthetic_documents
-
-    p = tune_lsh_params(0.6, num_perm=32)
-    out = near_dedup(
-        synthetic_documents(spark, 300, 8),
-        threshold=0.6, num_perm=32, bands=p["bands"],
-    )
-    assert 0 < out.count() < 300
 
 
 def test_dedup_weights_soft_groups(spark):

@@ -16,16 +16,10 @@ from pyspark.sql.readwriter import DataFrameWriter
 from validate_xml_rust_spark import genlog
 from validate_xml_rust_spark.operators.dedup import SignatureStore
 from validate_xml_rust_spark.operators.outputs import (
-    append_training_shards,
-    open_commits,
     verify_shards,
     write_training_shards,
 )
-from validate_xml_rust_spark.operators.resume import (
-    next_snapshot_id,
-    read_manifest,
-    write_manifest,
-)
+from validate_xml_rust_spark.operators.resume import read_manifest, write_manifest
 
 
 def test_append_takes_next_free_generation_on_race(tmp_path, monkeypatch):
@@ -171,21 +165,22 @@ def _check_signature(spark, store, before, published, compact):
     assert store.sketch_frame().count() == n_live + 2
 
 
-def _check_shards(spark, out, open_gen, touched):
-    opens = open_commits(spark, out)
-    audit = {r["shard_id"]: r for r in verify_shards(spark, out, 1500).collect()}
-    if open_gen is None:
-        assert opens == []
-        assert {r["status"] for r in audit.values()} == {"valid"}
+def _persistent_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _check_shards(spark, out, half_applied):
+    """A healthy store audits all valid; a half-applied write makes every
+    shard an error naming the open generation (the log's only write)."""
+    audit = verify_shards(spark, out, 1500).collect()
+    assert audit
+    if not half_applied:
+        assert {r["status"] for r in audit} == {"valid"}
         return
-    assert [o["generation"] for o in opens] == [open_gen]
-    named = f"generation {open_gen} begun but never committed"
-    for sid, row in audit.items():
-        if touched is None or sid in touched:
-            assert row["status"] == "error", (sid, row)
-            assert any(named in d for d in row["error_details"]), row
-        else:
-            assert row["status"] == "valid", (sid, row)
+    named = "generation 1 begun but never committed"
+    for row in audit:
+        assert row["status"] == "error", row
+        assert any(named in d for d in row["error_details"]), row
 
 
 CRASH_POINTS = [
@@ -203,11 +198,6 @@ CRASH_POINTS = [
     ("shard_write", "write:/manifest"),
     ("shard_write", "record:2"),
     ("shard_write", "linked:2"),
-    ("shard_append", "record:1"),
-    ("shard_append", "write:/shards"),
-    ("shard_append", "write:/manifest"),
-    ("shard_append", "record:2"),
-    ("shard_append", "linked:2"),
     ("manifest", "record:1"),
     ("manifest", "linked:1"),
     ("manifest", "write:/resume"),
@@ -220,9 +210,10 @@ CRASH_POINTS = [
 )
 def test_store_survives_crash_at_every_step(spark, tmp_path, monkeypatch, store, step):
     """Crash one commit at ``step``, reopen the store: its generations are
-    exactly the committed ones, a half-applied shard mutation is named by
-    verify_shards, manifest snapshot ids stay unique, and the next commit
-    succeeds with a higher generation."""
+    exactly the committed ones, a half-applied shard write is named by
+    verify_shards, manifest snapshot ids stay unique, the next commit
+    succeeds with a higher generation, and the crashed call leaves no
+    persisted blocks behind."""
     root = str(tmp_path / "store")
     if store == "signature_legacy_catalog":
         # the older layout: a parquet catalog beside gen-1, no log
@@ -237,53 +228,29 @@ def test_store_survives_crash_at_every_step(spark, tmp_path, monkeypatch, store,
         assert sorted(os.listdir(f"{root}/gen-1/sketch")) == before
         return
 
-    if store.startswith("signature"):
-        compact = store == "signature_compact"
-        sig, before, op = _signature_store(spark, root, compact)
+    def crash(op) -> None:
+        blocks = _persistent_ids(spark)
         _arm(monkeypatch, step)
         with pytest.raises(_Crash):
             op()
         monkeypatch.undo()
+        assert _persistent_ids(spark) == blocks
+
+    if store.startswith("signature"):
+        compact = store == "signature_compact"
+        sig, before, op = _signature_store(spark, root, compact)
+        crash(op)
         _check_signature(
             spark, sig, before, step.startswith("linked"), compact
         )
     elif store == "shard_write":
         write_training_shards(_docs(spark, 0, 120), root, 1500)
-        _arm(monkeypatch, step)
-        with pytest.raises(_Crash):
-            write_training_shards(_docs(spark, 0, 160), root, 1500)
-        monkeypatch.undo()
+        crash(lambda: write_training_shards(_docs(spark, 0, 160), root, 1500))
         begun = step in ("write:/shards", "write:/manifest", "record:2")
-        _check_shards(spark, root, 1 if begun else None, None)
-        if step not in ("reset", "linked:2"):
-            # the log holds no committed full write: appends are refused
-            with pytest.raises(RuntimeError, match="no committed full write"):
-                append_training_shards(_docs(spark, 500, 520), root, 1500)
-        m = write_training_shards(_docs(spark, 0, 160), root, 1500)
-        _check_shards(spark, root, None, None)
-        n_shards = {r["n_shards"] for r in m.collect()}
-        m2 = append_training_shards(_docs(spark, 500, 520), root, 1500)
-        assert {r["n_shards"] for r in m2.collect()} == n_shards
-        assert [r["phase"] for r in genlog.records(root)] == [
-            "begin", "done", "begin", "done",
-        ]
-        _check_shards(spark, root, None, None)
-    elif store == "shard_append":
-        write_training_shards(_docs(spark, 0, 120), root, 1500)
-        batch = _docs(spark, 1000, 1040)
-        _arm(monkeypatch, step)
-        with pytest.raises(_Crash):
-            append_training_shards(batch, root, 1500)
-        monkeypatch.undo()
-        begun = step in ("write:/shards", "write:/manifest", "record:2")
-        touched = set(genlog.records(root)[2]["touched"]) if begun else None
-        _check_shards(spark, root, 2 if begun else None, touched)
-        append_training_shards(batch, root, 1500)
-        # the re-run is a later generation, and it supersedes an open one
-        begins = [r for r in genlog.records(root) if r["phase"] == "begin"]
-        assert len(begins) == (2 if step == "record:1" else 3)
-        audit = verify_shards(spark, root, 1500).collect()
-        assert {r["status"] for r in audit} == {"valid"}
+        _check_shards(spark, root, begun)
+        write_training_shards(_docs(spark, 0, 160), root, 1500)
+        assert [r["phase"] for r in genlog.records(root)] == ["begin", "done"]
+        _check_shards(spark, root, False)
     elif store == "manifest":
         mdir = f"{root}/resume"
 
@@ -294,16 +261,13 @@ def test_store_survives_crash_at_every_step(spark, tmp_path, monkeypatch, store,
             )
 
         assert write_manifest(metrics("r1"), mdir) == 1
-        _arm(monkeypatch, step)
-        with pytest.raises(_Crash):
-            write_manifest(metrics("r2"), mdir)
-        monkeypatch.undo()
+        crash(lambda: write_manifest(metrics("r2"), mdir))
         published = step != "record:1"
-        assert next_snapshot_id(spark, mdir) == (3 if published else 2)
+        assert genlog.records(mdir)[-1]["generation"] == (2 if published else 1)
         rows = read_manifest(spark, mdir).collect()
         assert {(r["run_id"], r["snapshot_id"]) for r in rows} == {("r1", 1)}
         sid = write_manifest(metrics("r3"), mdir)
-        assert sid == next_snapshot_id(spark, mdir) - 1 == (3 if published else 2)
+        assert sid == (3 if published else 2)
         by_run = {}
         for r in read_manifest(spark, mdir).collect():
             by_run.setdefault(r["snapshot_id"], set()).add(r["run_id"])

@@ -64,7 +64,6 @@ def _persistent_ids(spark) -> set[int]:
 DEDUP_OPERATORS = [
     "minhash_near_duplicates",
     "simhash_near_duplicates",
-    "minhash_candidates",
     "winnow_candidate_pairs",
     "shared_passage_candidates",
 ]
@@ -210,12 +209,12 @@ def test_warm_curate_stays_within_py4j_and_job_budgets(spark, tmp_path, monkeypa
 
 def test_store_metadata_launches_no_spark_jobs(spark, tmp_path, monkeypatch):
     """The durable stores keep their commit state in a driver-side log:
-    reading it (``SignatureStore.generations``, ``open_commits``,
-    ``next_snapshot_id``) and publishing each commit record launch no
-    Spark job. Kept as one-row parquet writes and reads, they took 4, 2
-    and 3 jobs per read and 1 per record."""
+    reading it (``SignatureStore.generations``) and publishing each commit
+    record launch no Spark job. Kept as one-row parquet writes and reads,
+    they took 4 jobs per read and 1 per record."""
     from pyspark.sql import functions as F
 
+    from validate_xml_rust_spark import genlog
     from validate_xml_rust_spark.operators import outputs, resume
     from validate_xml_rust_spark.operators.dedup import SignatureStore
 
@@ -234,27 +233,16 @@ def test_store_metadata_launches_no_spark_jobs(spark, tmp_path, monkeypatch):
     store = SignatureStore(spark, str(tmp_path / "store"))
 
     def build() -> None:
-        outputs.write_training_shards(docs.filter("doc_id < 120"), shards, 1500)
-        outputs.append_training_shards(docs.filter("doc_id >= 120"), shards, 1500)
+        outputs.write_training_shards(docs, shards, 1500)
         store.commit(sketch.filter("doc_id < 3"))
         store.commit(sketch.filter("doc_id >= 3"))
         store.compact()
         resume.write_manifest(metrics, mdir)
 
     build()
-    reads = {
-        "generations": store.generations,
-        "open_commits": lambda: outputs.open_commits(spark, shards),
-        "next_snapshot_id": lambda: resume.next_snapshot_id(spark, mdir),
-    }
-    jobs = {}
-    for name, read in reads.items():
-        mark = _status_mark(spark)
-        read()
-        jobs[name] = _status_delta(spark, mark)["jobs"]
-    assert jobs == dict.fromkeys(reads, 0), jobs
-
-    from validate_xml_rust_spark import genlog
+    mark = _status_mark(spark)
+    store.generations()
+    assert _status_delta(spark, mark)["jobs"] == 0
 
     append, record_jobs = genlog.append, []
 
@@ -266,6 +254,6 @@ def test_store_metadata_launches_no_spark_jobs(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(genlog, "append", counted)
     build()
-    # begin + done for the shard write and the append, two commits and a
-    # compaction, one manifest snapshot
-    assert record_jobs == [0] * 8, record_jobs
+    # begin + done for the shard write, two commits and a compaction, one
+    # manifest snapshot
+    assert record_jobs == [0] * 6, record_jobs

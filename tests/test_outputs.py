@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from validate_xml_rust_spark.operators.outputs import (
-    read_failures,
-    read_violations_for,
-    write_results,
-)
+from validate_xml_rust_spark.operators.outputs import write_results
 from validate_xml_rust_spark.operators.validate import validate
 from validate_xml_rust_spark.plans import inspect
 from validate_xml_rust_spark.sources.pages import LANGS, pages, with_partition_id
@@ -31,7 +27,7 @@ def test_partitioned_outputs_and_pruning(spark, tmp_path):
     write_results(res.verdicts, res.violations(), out)
 
     # read-side: status filter becomes a PARTITION filter (pruned scan)
-    fails = read_failures(spark, out)
+    fails = spark.read.parquet(f"{out}/verdicts").filter(F.col("status") != "valid")
     plan = inspect.formatted_plan(fails)
     assert "PartitionFilters" in plan and "status" in plan
     total = spark.read.parquet(f"{out}/verdicts").count()
@@ -39,7 +35,9 @@ def test_partitioned_outputs_and_pruning(spark, tmp_path):
     assert total == 3000 and 0 < n_fails < 100
 
     # per-constraint drill-down reads one directory
-    v = read_violations_for(spark, out, "url_format")
+    v = spark.read.parquet(f"{out}/violations").filter(
+        F.col("constraint_id") == "url_format"
+    )
     assert v.count() > 0
     assert v.filter(F.col("constraint_id") != "url_format").count() == 0
     vplan = inspect.formatted_plan(v)
@@ -194,75 +192,6 @@ def test_write_training_shards_roundtrip_and_manifest(spark, tmp_path):
     assert all(m[k]["n_docs"] == m2[k]["n_docs"] for k in m)
 
 
-def test_append_training_shards_incremental(spark, tmp_path):
-    from validate_xml_rust_spark.operators.outputs import (
-        append_training_shards,
-        shard_assignments,
-        shard_manifest,
-        write_training_shards,
-    )
-
-    def mk(lo, hi):
-        return spark.createDataFrame(
-            [(i, f"doc {i} body " * (1 + i % 5)) for i in range(lo, hi)],
-            "doc_id long, text string",
-        ).withColumn("n_tokens", F.length("text"))
-
-    out = str(tmp_path / "train")
-    m0 = write_training_shards(mk(0, 300), out, tokens_per_shard=2000)
-    n0 = int(m0.select("n_shards").first()["n_shards"])
-    import os
-
-    def file_listing():
-        got = {}
-        for d in os.listdir(f"{out}/shards"):
-            if d.startswith("shard_id="):
-                got[d] = sorted(
-                    f
-                    for f in os.listdir(f"{out}/shards/{d}")
-                    if f.endswith(".parquet")
-                )
-        return got
-
-    before = file_listing()
-    batch = mk(300, 340)
-    m1 = append_training_shards(batch, out, tokens_per_shard=2000)
-    # n_shards pinned: existing docs never moved shards
-    assert {int(r["n_shards"]) for r in m1.collect()} == {n0}
-    back = spark.read.parquet(f"{out}/shards")
-    assert back.count() == 340
-    # assignment identical to a pinned-n assignment over the union
-    expect, _ = shard_assignments(mk(0, 340), n_shards=n0)
-    exp = {r["doc_id"]: r["shard_id"] for r in expect.collect()}
-    assert {r["doc_id"]: r["shard_id"] for r in back.collect()} == exp
-    # untouched shard directories kept their exact files (no rewrite)
-    touched = {
-        f"shard_id={r['shard_id']}"
-        for r in shard_assignments(batch, n_shards=n0)[0]
-        .select("shard_id")
-        .distinct()
-        .collect()
-    }
-    after = file_listing()
-    for d, files in before.items():
-        if d not in touched:
-            assert after[d] == files, f"untouched {d} was rewritten"
-    # refreshed manifest == a from-scratch manifest over the union
-    fresh = {
-        r["shard_id"]: (r["n_docs"], r["n_tokens"], r["content_sum"])
-        for r in shard_manifest(expect, 2000).collect()
-    }
-    assert {
-        r["shard_id"]: (r["n_docs"], r["n_tokens"], r["content_sum"])
-        for r in m1.collect()
-    } == fresh
-    # empty batch: no-op, same manifest back
-    m2 = append_training_shards(
-        mk(0, 0), out, tokens_per_shard=2000
-    )
-    assert m2.count() == m1.count()
-
-
 def test_verify_shards_detects_tamper_and_drift(spark, tmp_path):
     import glob
     import os
@@ -335,7 +264,6 @@ def test_verify_shards_detects_tamper_and_drift(spark, tmp_path):
 
 def test_shard_sink_null_id_and_empty_store_bootstrap(spark, tmp_path):
     from validate_xml_rust_spark.operators.outputs import (
-        append_training_shards,
         shard_assignments,
         shard_manifest,
         write_training_shards,
@@ -359,25 +287,18 @@ def test_shard_sink_null_id_and_empty_store_bootstrap(spark, tmp_path):
     if 0 in m2:
         assert m[0]["content_sum"] != m2[0]["content_sum"]
 
-    # bootstrap: initial write of ZERO rows, then append == fresh write
+    # bootstrap: initial write of ZERO rows commits an empty store, and a
+    # full write over it replaces it
     out = str(tmp_path / "train")
     empty = spark.createDataFrame([], "doc_id long, text string, n_tokens int")
-    write_training_shards(empty, out, tokens_per_shard=1000)
+    assert write_training_shards(empty, out, tokens_per_shard=1000).count() == 0
     batch = spark.createDataFrame(
         [(i, f"doc {i} " * (1 + i % 3)) for i in range(50)],
         "doc_id long, text string",
     ).withColumn("n_tokens", F.length("text"))
-    m1 = append_training_shards(batch, out, tokens_per_shard=1000)
+    m1 = write_training_shards(batch, out, tokens_per_shard=1000)
     assert m1.count() > 0
     assert spark.read.parquet(f"{out}/shards").count() == 50
-    # and a second append now pins the bootstrap's n_shards
-    n0 = int(m1.select("n_shards").first()["n_shards"])
-    more = spark.createDataFrame(
-        [(100 + i, f"extra {i}") for i in range(5)], "doc_id long, text string"
-    ).withColumn("n_tokens", F.length("text"))
-    m2b = append_training_shards(more, out, tokens_per_shard=1000)
-    assert {int(r["n_shards"]) for r in m2b.collect()} == {n0}
-    assert spark.read.parquet(f"{out}/shards").count() == 55
 
 
 def test_verify_shards_empty_store(spark, tmp_path):
@@ -392,118 +313,3 @@ def test_verify_shards_empty_store(spark, tmp_path):
     # empty store: no shard part files exist — the audit reports an
     # empty (trivially consistent) store instead of crashing
     assert verify_shards(spark, out, 1000).count() == 0
-
-
-def test_shard_pin_survives_empty_bootstrap_write(spark, tmp_path):
-    """An explicit n_shards pin on a ZERO-row initial write must survive
-    to the first real append (the pin lives in out_dir/meta, not on
-    manifest rows that don't exist)."""
-    from validate_xml_rust_spark.operators.outputs import (
-        append_training_shards,
-        write_training_shards,
-    )
-
-    out = str(tmp_path / "train")
-    empty = spark.createDataFrame([], "doc_id long, text string, n_tokens int")
-    write_training_shards(empty, out, tokens_per_shard=1000, n_shards=7)
-    batch = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(40)], "doc_id long, text string"
-    ).withColumn("n_tokens", F.length("text"))
-    m = append_training_shards(batch, out, tokens_per_shard=1000)
-    assert {int(r["n_shards"]) for r in m.collect()} == {7}
-    assert {
-        r["shard_id"] for r in spark.read.parquet(f"{out}/shards").collect()
-    } <= set(range(7))
-
-
-def test_meta_reset_on_unpinned_empty_overwrite(spark, tmp_path):
-    """Re-initializing a store with a zero-row UNPINNED write resets the
-    layout: the next append derives n_shards from its own batch instead
-    of serving the dead generation's pin."""
-    from validate_xml_rust_spark.operators.outputs import (
-        append_training_shards,
-        write_training_shards,
-    )
-
-    out = str(tmp_path / "train")
-
-    def mk(n):
-        return spark.createDataFrame(
-            [(i, "body " * 40) for i in range(n)], "doc_id long, text string"
-        ).withColumn("n_tokens", F.length("text"))
-
-    m0 = write_training_shards(mk(500), out, tokens_per_shard=2000)
-    assert int(m0.select("n_shards").first()["n_shards"]) > 10
-    # reset: zero rows, no pin
-    write_training_shards(mk(0), out, tokens_per_shard=2000)
-    m1 = append_training_shards(mk(5), out, tokens_per_shard=2000)
-    assert {int(r["n_shards"]) for r in m1.collect()} == {1}
-
-
-def test_half_applied_append_names_generation(spark, tmp_path, monkeypatch):
-    """Commit-log WAL: an append killed between its shard overwrite and
-    its manifest write leaves an OPEN generation; the audit reports the
-    touched shards as errors NAMING that generation (distinct from
-    tampering), and a successful re-append closes it."""
-    import pytest
-
-    from validate_xml_rust_spark.operators import outputs as mod
-    from validate_xml_rust_spark.operators.outputs import (
-        append_training_shards,
-        open_commits,
-        verify_shards,
-        write_training_shards,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i} body " * (1 + i % 4)) for i in range(120)],
-        "doc_id long, text string",
-    ).withColumn("n_tokens", F.length("text"))
-    out = str(tmp_path / "train")
-    write_training_shards(df, out, tokens_per_shard=1500)
-    assert open_commits(spark, out) == []  # gen 1 begun AND done
-
-    batch = spark.createDataFrame(
-        [(1000 + i, f"new doc {i} content " * 3) for i in range(40)],
-        "doc_id long, text string",
-    ).withColumn("n_tokens", F.length("text"))
-
-    # kill the append AFTER the shard dirs are rewritten but BEFORE the
-    # manifest lands: shard_manifest is the first post-write step
-    real = mod.shard_manifest
-
-    def boom(*a, **k):
-        raise RuntimeError("killed mid-append")
-
-    monkeypatch.setattr(mod, "shard_manifest", boom)
-    with pytest.raises(RuntimeError, match="killed mid-append"):
-        append_training_shards(batch, out, tokens_per_shard=1500)
-    monkeypatch.setattr(mod, "shard_manifest", real)
-
-    opens = open_commits(spark, out)
-    assert len(opens) == 1 and opens[0]["generation"] == 2
-    touched = set(opens[0]["touched"])
-    assert touched  # the batch mapped to at least one shard
-
-    audit = {r["shard_id"]: r for r in verify_shards(spark, out, 1500).collect()}
-    for sid in touched:
-        row = audit[sid]
-        assert row["status"] == "error"
-        assert any(
-            "generation 2 begun but never committed" in d
-            for d in row["error_details"]
-        ), row["error_details"]
-    # untouched shards stay valid — the incident is scoped, not global
-    for sid, row in audit.items():
-        if sid not in touched:
-            assert row["status"] == "valid", (sid, row)
-
-    # recovery: re-run the SAME append; generation 3 commits over the
-    # same shards and supersedes the open generation 2 — the audit is
-    # clean again (gen 2 never wrote 'done', but every shard it touched
-    # has a LATER committed mutation)
-    append_training_shards(batch, out, tokens_per_shard=1500)
-    gens = {o["generation"] for o in open_commits(spark, out)}
-    assert gens == {2}  # still open in the raw log — but superseded
-    v2 = verify_shards(spark, out, 1500)
-    assert {r["status"] for r in v2.collect()} == {"valid"}

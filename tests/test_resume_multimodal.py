@@ -8,14 +8,14 @@ from pyspark.sql import functions as F
 from validate_xml_rust_spark.operators.multimodal import (
     decode_image,
     extract_features,
-    frame_sample_plan,
-    resize_plan,
     synthetic_media,
 )
 from validate_xml_rust_spark.operators.resume import (
+    completed_partitions,
     partition_metrics,
-    pending_rows,
-    run_with_resume,
+    pending_against,
+    read_manifest,
+    write_manifest,
 )
 from validate_xml_rust_spark.sources.pages import LANGS, pages, with_partition_id
 from validate_xml_rust_spark.specs import Constraint, Spec, SpecRegistry
@@ -32,27 +32,42 @@ def _registry() -> SpecRegistry:
     return SpecRegistry().add(spec, route_keys=LANGS)
 
 
+def _pending(df, spark, manifest):
+    """The rows of ``df`` whose partition the manifest does not hold."""
+    done = completed_partitions(spark, manifest)
+    return df if done is None else pending_against(df, done)
+
+
+def _resume(df, spark, manifest, run_id) -> int:
+    """One resumed run as the CLI composes it: validate the pending
+    partitions and commit them as one snapshot; returns how many
+    partitions the run committed."""
+    from validate_xml_rust_spark.operators.validate import validate
+
+    todo = _pending(df, spark, manifest)
+    n = todo.select("partition_id").distinct().count()
+    if n:
+        verdicts = validate(todo, spark, _registry()).verdicts
+        write_manifest(partition_metrics(verdicts, run_id), manifest)
+    return n
+
+
 def test_resume_skips_completed_partitions(spark, tmp_path):
     manifest = str(tmp_path / "manifest")
     df = with_partition_id(pages(spark, 1000), 8)
     # first run: everything pending
-    verdicts, n1 = run_with_resume(df, spark, _registry(), manifest, "run-1")
-    assert n1 == 8 and verdicts is not None
+    assert _resume(df, spark, manifest, "run-1") == 8
     # second run over the same input: nothing pending
-    verdicts2, n2 = run_with_resume(df, spark, _registry(), manifest, "run-2")
-    assert n2 == 0 and verdicts2 is None
+    assert _resume(df, spark, manifest, "run-2") == 0
     # a new partition appears → only it is pending
     extra = with_partition_id(pages(spark, 1000), 8).withColumn(
         "partition_id", F.lit(99)
     )
-    todo = pending_rows(df.unionByName(extra), spark, manifest)
+    todo = _pending(df.unionByName(extra), spark, manifest)
     assert todo.select("partition_id").distinct().collect() == [
         spark.createDataFrame([(99,)], "partition_id int").collect()[0]
     ]
-    _, n3 = run_with_resume(
-        df.unionByName(extra), spark, _registry(), manifest, "run-3"
-    )
-    assert n3 == 1
+    assert _resume(df.unionByName(extra), spark, manifest, "run-3") == 1
 
 
 def test_manifest_snapshot_generations(spark, tmp_path):
@@ -62,24 +77,21 @@ def test_manifest_snapshot_generations(spark, tmp_path):
     manifest = str(tmp_path / "manifest_gen")
     df = with_partition_id(pages(spark, 800), 8)
     first = df.filter(F.col("partition_id") < 4)
-    _, n1 = run_with_resume(first, spark, _registry(), manifest, "run-1")
-    assert n1 == 4
-    m1 = spark.read.parquet(manifest)
+    assert _resume(first, spark, manifest, "run-1") == 4
+    m1 = read_manifest(spark, manifest)
     assert {r["snapshot_id"] for r in m1.select("snapshot_id").collect()} == {1}
     # resumed run over the full input: only partitions 4-7 are pending,
     # and they commit as generation 2
-    _, n2 = run_with_resume(df, spark, _registry(), manifest, "run-2")
-    assert n2 == 4
+    assert _resume(df, spark, manifest, "run-2") == 4
     gens = {
         r["partition_id"]: r["snapshot_id"]
-        for r in spark.read.parquet(manifest).collect()
+        for r in read_manifest(spark, manifest).collect()
     }
     assert set(gens) == set(range(8))
     assert all(gens[p] == 1 for p in range(4))
     assert all(gens[p] == 2 for p in range(4, 8))
     # both generations count as completed — nothing pending
-    _, n3 = run_with_resume(df, spark, _registry(), manifest, "run-3")
-    assert n3 == 0
+    assert _resume(df, spark, manifest, "run-3") == 0
 
 
 def test_manifest_upgrade_from_pre_snapshot_schema(spark, tmp_path):
@@ -88,11 +100,6 @@ def test_manifest_upgrade_from_pre_snapshot_schema(spark, tmp_path):
     merge schemas (an arbitrary old footer would hide snapshot_id and
     re-issue generation 1), old rows surface as NULL snapshot_id, and the
     committed column is physically long (the declared type)."""
-    from validate_xml_rust_spark.operators.resume import (
-        next_snapshot_id,
-        read_manifest,
-        write_manifest,
-    )
     from validate_xml_rust_spark.operators.validate import validate
 
     manifest = str(tmp_path / "manifest_mixed")
@@ -101,7 +108,7 @@ def test_manifest_upgrade_from_pre_snapshot_schema(spark, tmp_path):
     metrics = partition_metrics(res.verdicts, "legacy-run")
     # legacy writer: no snapshot_id column at all
     metrics.write.mode("append").parquet(manifest)
-    assert next_snapshot_id(spark, manifest) == 1
+    assert dict(read_manifest(spark, manifest).dtypes).get("snapshot_id") is None
     # two new-schema commits on top of the legacy files
     assert write_manifest(partition_metrics(res.verdicts, "run-1"), manifest) == 1
     assert write_manifest(partition_metrics(res.verdicts, "run-2"), manifest) == 2
@@ -110,7 +117,6 @@ def test_manifest_upgrade_from_pre_snapshot_schema(spark, tmp_path):
     gens = [r["snapshot_id"] for r in m.select("snapshot_id").collect()]
     assert sorted(g for g in gens if g is not None) == [1] * 4 + [2] * 4
     assert sum(1 for g in gens if g is None) == 4  # legacy rows, not dropped
-    assert next_snapshot_id(spark, manifest) == 3
 
 
 def test_partition_metrics_shape(spark):
@@ -185,15 +191,6 @@ def test_real_decoder_is_stubbed():
         decode_image(b"\x89PNG fake")
 
 
-def test_resize_and_frame_plans(spark):
-    media = synthetic_media(spark, 90)
-    rp = resize_plan(media).collect()
-    assert rp and all(r["dst_w"] <= 224 and r["dst_h"] <= 224 for r in rp)
-    fp = frame_sample_plan(media, every_n=10)
-    rows = fp.collect()
-    assert rows and all(r["frame_idx"] % 10 == 0 for r in rows)
-
-
 def test_media_corrupt_payload_contained(spark):
     # X9: null/corrupt payloads yield null features, never task failures
     rows = [(0, "image", None, None), (1, "image", bytearray(b"ok-bytes"), None)]
@@ -205,21 +202,6 @@ def test_media_corrupt_payload_contained(spark):
     got = {r["id"]: r for r in extract_features(df).collect()}
     assert got[0]["features"] is None and got[0]["payload_bytes"] == 0
     assert got[1]["features"] is not None and got[1]["payload_bytes"] == 8
-
-
-def test_hll_baselines(spark):
-    from validate_xml_rust_spark.operators.profile import hll_baselines
-    from validate_xml_rust_spark.sources.pages import pages as _pages
-
-    df = with_partition_id(_pages(spark, 1000), 4)
-    b = hll_baselines(df, ["lang", "url"]).collect()
-    assert len(b) == 4
-    for r in b:
-        assert r["lang__approx"] <= 7  # 5 langs + xx + fuzz
-        assert r["lang__n"] > 0
-        # mergeable binary sketch present when Spark supports it
-        if "lang__hll" in r.asDict():
-            assert r["lang__hll"] is None or len(bytes(r["lang__hll"])) > 0
 
 
 def _inc_registry() -> SpecRegistry:

@@ -422,8 +422,8 @@ def ngram_coverage_udf(
 
 def minhash_signature_from_text(text: Column, k: int = 3, num_perm: int = 32) -> Column:
     """Fused shingle+MinHash in ONE Arrow round trip: token hashes JVM-side,
-    then window-combine + permutation-min in numpy. The hot path for
-    minhash_candidates (one Python worker hop instead of two)."""
+    then window-combine + permutation-min in numpy (one Python worker hop
+    instead of two)."""
     mult = _window_multipliers(k)
     a, b = _perm_params(num_perm)
 

@@ -191,32 +191,6 @@ def mixture_epochs(
     )
 
 
-def mixture_factors(
-    df: DataFrame,
-    weights: dict[str, float],
-    source_col: str,
-    token_budget: int,
-    token_col: str,
-) -> dict[str, float]:
-    """Derive per-source mixing factors from TARGET corpus weights: for
-    target share w_s of a ``token_budget``-token training mix, the
-    factor is ``budget·w_s / tokens_s`` (tokens_s = source's total).
-    Feed the result to mixture_epochs. One bounded aggregate —
-    n_sources result rows — is the only action."""
-    totals = {
-        r["s"]: r["t"]
-        for r in df.groupBy(F.col(source_col).alias("s"))
-        .agg(F.sum(F.col(token_col)).alias("t"))
-        .collect()
-    }
-    out: dict[str, float] = {}
-    for s, w in weights.items():
-        t = totals.get(s, 0)
-        if t and t > 0:
-            out[s] = token_budget * w / float(t)
-    return out
-
-
 def _word_bigrams(tok_col: Column) -> Column:
     """Positional word-bigram strings of a MATERIALIZED token-array
     column (plain attribute — embedding an expression tree here would

@@ -136,91 +136,6 @@ def dedup_weights(
     )
 
 
-def tune_lsh_params(
-    threshold: float,
-    num_perm: int = 32,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-) -> dict:
-    """Choose MinHash-LSH banding ``(bands, rows_per_band)`` for a target
-    Jaccard ``threshold`` — the standard S-curve recipe (Leskovec/
-    Rajaraman/Ullman, Mining of Massive Datasets §3.4: a pair of
-    similarity s collides with probability 1−(1−s^r)^b; the curve's
-    knee sits near (1/b)^(1/r)). Over every factorization b·r =
-    num_perm, minimizes the weighted false-positive/false-negative
-    probability mass (∫ of the curve below the threshold, ∫ of its
-    complement above) by driver-side numeric integration — pure
-    arithmetic, no Spark job.
-
-    Returns ``{"bands", "rows_per_band", "fp", "fn", "knee"}``; feed
-    ``bands`` (and ``num_perm``) to minhash_candidates / near_dedup.
-    Raising ``fn_weight`` buys recall with more, shorter bands;
-    ``fp_weight`` buys candidate-set precision with longer rows."""
-    if not (0.0 < threshold < 1.0):
-        raise ValueError(f"threshold must be in (0,1): {threshold}")
-    best: dict | None = None
-    steps = 500
-    for r in range(1, num_perm + 1):
-        if num_perm % r:
-            continue
-        b = num_perm // r
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p / steps
-            else:
-                fn += (1.0 - p) / steps
-        err = fp_weight * fp + fn_weight * fn
-        if best is None or err < best["_err"]:
-            best = {
-                "bands": b, "rows_per_band": r,
-                "fp": round(fp, 6), "fn": round(fn, 6),
-                "knee": round((1.0 / b) ** (1.0 / r), 6),
-                "_err": err,
-            }
-    assert best is not None
-    best.pop("_err")
-    return best
-
-
-def minhash_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """LSH candidate pairs ``(id_a, id_b)`` with id_a < id_b (distinct).
-
-    Pipeline: signature (narrow) → explode band keys (×bands rows) →
-    self-join per bucket (shuffle on uniform band-key hash) → distinct.
-    Returned as an eager checkpoint, the only blocks the call leaves."""
-    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
-    from validate_xml_rust_spark.functions.texthash import (
-        minhash_signature_from_text,
-    )
-
-    # Materialize signatures: Catalyst's project-collapse would otherwise
-    # inline the full num_perm-permutation MinHash expression into every
-    # band key AND both self-join sides (~10× recompute measured). The
-    # checkpoint is tiny: id + num_perm longs per doc.
-    sig, sig_ids = eager_checkpoint(
-        df.select(
-            F.col(id_col).alias("__id"),
-            minhash_signature_from_text(F.col(text_col), shingle_k, num_perm).alias(
-                "__sig"
-            ),
-        )
-    )
-    out, _ = eager_checkpoint(_candidates(sig, bands, num_perm // bands, max_bucket))
-    release_blocks(df.sparkSession.sparkContext, sig_ids)
-    return out
-
-
 def _candidates(
     sig: DataFrame, bands: int, rows_per_band: int, max_bucket: int = 1000
 ) -> DataFrame:
@@ -1029,7 +944,7 @@ def incremental_near_dedup(
 
     Scale shape: slice shingles+signatures checkpointed once (corpus-pass
     #1 of 1); within-slice pairs via the capped band self-join
-    (minhash_candidates); store candidates via ONE equi-join of the
+    (``_candidates``); store candidates via ONE equi-join of the
     slice's exploded band keys against the store's banded layout (store
     side pre-bucketed by key at cluster scale → only the slice shuffles);
     components over the pair subgraph only; the drop set is a broadcast

@@ -114,31 +114,3 @@ def extract_features(
             )
 
     return df.mapInPandas(fn, out_schema)
-
-
-def resize_plan(df: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """Resize *planning* is pure metadata math — keep it JVM-side; only the
-    pixel work (stubbed) would go through mapInPandas."""
-    w = F.col("meta.width")
-    h = F.col("meta.height")
-    scale = F.least(F.lit(target_w) / w, F.lit(target_h) / h)
-    return df.filter(F.col("kind") == "image").select(
-        "id",
-        w.alias("src_w"),
-        h.alias("src_h"),
-        F.round(w * scale).cast("int").alias("dst_w"),
-        F.round(h * scale).cast("int").alias("dst_h"),
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plan for videos: explode frame indices JVM-side."""
-    return (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-    )

@@ -15,9 +15,7 @@ parquet layout keeps the same pruning behavior in the sandbox.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from validate_xml_rust_spark import genlog
@@ -38,22 +36,6 @@ def write_results(
     )
     violations.write.mode(mode).partitionBy("constraint_id").parquet(
         f"{out_dir}/violations"
-    )
-
-
-def read_failures(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The P7 read path: only non-valid partitions are scanned (partition
-    pruning — assert via PartitionFilters in the plan)."""
-    return spark.read.parquet(f"{out_dir}/verdicts").filter(
-        F.col("status") != "valid"
-    )
-
-
-def read_violations_for(
-    spark: SparkSession, out_dir: str, constraint_id: str
-) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/violations").filter(
-        F.col("constraint_id") == constraint_id
     )
 
 
@@ -96,7 +78,7 @@ def shard_assignments(
     ``n_shards`` is taken directly or derived as
     ``ceil(Σ tokens / tokens_per_shard)`` (one aggregate pass; the only
     full-corpus dependence, and the reason assignment is split from the
-    write — callers doing incremental appends pass a pinned n_shards).
+    write — callers with a fixed layout pass n_shards and skip the pass).
     Token-balance across shards is law-of-large-numbers (each shard is a
     uniform 1/n sample of docs): at 10⁴+ docs/shard the spread is ~1%,
     with no global sort and no sequential fold.
@@ -181,8 +163,6 @@ def write_training_shards(
     id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
     content_col: str = "text",
-    mode: str = "overwrite",
-    n_shards: int | None = None,
     checkpoint: bool = True,
 ) -> DataFrame:
     """Write a curated corpus as token-budgeted training shards plus a
@@ -191,222 +171,63 @@ def write_training_shards(
     does not fan every task out into every shard directory) and
     ``out_dir/manifest/`` with the per-shard summary. Rows are sorted by
     id within each shard so shard files are byte-reproducible run over
-    run. Returns the manifest frame, re-read from the sink. Pass
-    ``n_shards`` to pin the shard count explicitly (e.g. when the first
-    batch of a streaming ingest is not representative of the eventual
-    corpus size) instead of deriving it from this frame's token total.
+    run. Returns the manifest frame, re-read from the sink.
 
-    Commit log (``out_dir/_log``, see ``genlog``): a full write resets
-    the log, records ``begin`` before the first shard byte moves and
+    Commit log (``out_dir/_log``, see ``genlog``): the write resets the
+    log, records ``begin`` before the first shard byte moves and
     ``done`` after the manifest lands, so a crash in between reads as an
-    open generation (``open_commits``, ``verify_shards``). The ``done``
-    record carries the n_shards pin, NOT just the manifest rows — a
-    zero-row initial write must not lose an explicit pin. A zero-row
-    write WITHOUT an explicit pin records none: the layout is then
-    undecided, and the first real append derives it.
+    open generation in ``verify_shards``.
 
     The input is eager-checkpointed ONCE up front: the sink needs the
     frame three times (token-sum pass for n_shards, the shards write,
     the manifest aggregation), and without the checkpoint each pass
     would re-execute the caller's full upstream lineage (the repo's
     measured multi-branch tax); all three run as block scans instead,
-    and the blocks are released before returning. Callers whose frame
-    is ALREADY materialized (a prior checkpoint/persist) pass
-    ``checkpoint=False`` to skip the second payload copy."""
+    and the blocks are released before returning, also when a step
+    raises. Callers whose frame is ALREADY materialized (a prior
+    checkpoint/persist) pass ``checkpoint=False`` to skip the second
+    payload copy."""
     from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
 
     spark = df.sparkSession
-    pinned = n_shards
     if checkpoint:
         ck, blocks = eager_checkpoint(df)
     else:
         ck, blocks = df, frozenset()
-    sharded, n_shards = shard_assignments(
-        ck,
-        tokens_per_shard=tokens_per_shard,
-        n_shards=n_shards,
-        id_col=id_col,
-        tokens_col=tokens_col,
-    )
-    # Precondition BEFORE the log reset: mode='error' on an existing
-    # store fails without moving a byte — resetting the log first would
-    # destroy the healthy record and make verify_shards report the fully
-    # intact store as half-applied.
-    if mode in ("error", "errorifexists") and os.path.exists(
-        f"{out_dir}/shards"
-    ):
-        raise FileExistsError(
-            f"{out_dir}/shards exists and mode={mode!r}; commit log left "
-            "untouched"
-        )
-    genlog.reset(out_dir)
-    begin = genlog.append(out_dir, {"phase": "begin", "touched": []})
-    (
-        sharded.repartition(n_shards, F.col("shard_id"))
-        .sortWithinPartitions("shard_id", id_col)
-        .write.mode(mode)
-        .partitionBy("shard_id")
-        .parquet(f"{out_dir}/shards")
-    )
-    manifest = shard_manifest(
-        sharded,
-        tokens_per_shard,
-        id_col=id_col,
-        tokens_col=tokens_col,
-        content_col=content_col,
-    )
-    # n_shards rides the manifest rows for consumers reading only the
-    # manifest; the DURABLE pin is the done record below
-    obs = Observation()
-    (
-        manifest.withColumn("n_shards", F.lit(n_shards).cast("long"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode(mode)
-        .parquet(f"{out_dir}/manifest")
-    )
-    decided = pinned is not None or obs.get["n"] > 0
-    genlog.append(out_dir, {
-        "phase": "done", "begin": begin,
-        "n_shards": int(n_shards) if decided else None,
-    })
-    release_blocks(spark.sparkContext, blocks)
-    spark.catalog.refreshByPath(f"{out_dir}/manifest")
-    return spark.read.parquet(f"{out_dir}/manifest")
-
-
-def append_training_shards(
-    new_df: DataFrame,
-    out_dir: str,
-    tokens_per_shard: int,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-    content_col: str = "text",
-) -> DataFrame:
-    """Append a new batch to an existing sharded training set WITHOUT
-    rewriting the corpus: n_shards is pinned from the full write's log
-    record (assignment is a pure function of id and n_shards, so
-    existing docs never move), only the shard directories that receive
-    new docs are rewritten (dynamic partition overwrite — untouched
-    shard files stay byte-identical on disk), and the manifest is
-    refreshed to the new totals. At 10^12 docs an append touches
-    O(min(batch, n_shards)) partitions, not the corpus.
-
-    A store whose log holds no committed full write (never written, an
-    older layout, or a full write that crashed) is refused: re-run
-    ``write_training_shards``.
-
-    Appending drifts ``fill_ratio`` upward (the budget denominator is
-    fixed); consumers re-shard with ``write_training_shards`` when the
-    manifest says fill has outgrown the budget. Duplicate ids between
-    batch and corpus are NOT collapsed here — run incremental_dedup
-    upstream; a dup lands (deterministically) in its shard twice.
-
-    Returns the refreshed full manifest."""
-    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
-
-    from pyspark.errors import AnalysisException
-
-    spark = new_df.sparkSession
-    muts = _mutations(out_dir)
-    if not muts or muts[0]["done"] is None:
-        raise RuntimeError(
-            f"{out_dir} has no committed full write in its commit log; "
-            "run write_training_shards first"
-        )
-    n_shards = muts[0]["done"]["n_shards"]
-    if n_shards is None:
-        # undecided store (a zero-row initial write with no explicit
-        # pin): appending IS the initial write
-        return write_training_shards(
-            new_df, out_dir, tokens_per_shard,
-            id_col=id_col, tokens_col=tokens_col, content_col=content_col,
-        )
-    spark.catalog.refreshByPath(f"{out_dir}/manifest")
-    prior = spark.read.parquet(f"{out_dir}/manifest")
-    assigned, _ = shard_assignments(
-        new_df, n_shards=n_shards, id_col=id_col, tokens_col=tokens_col
-    )
-    touched = sorted(
-        r["shard_id"] for r in assigned.select("shard_id").distinct().collect()
-    )
-    if not touched:  # empty batch: nothing to rewrite
-        return prior
-    begin = genlog.append(out_dir, {"phase": "begin", "touched": touched})
-    # the rewrite READS the shard dirs it is about to overwrite — the
-    # combined rows must be materialized (checkpoint blocks) before the
-    # write starts deleting source files
-    spark.catalog.refreshByPath(f"{out_dir}/shards")
     try:
-        old_touched = spark.read.parquet(f"{out_dir}/shards").filter(
-            F.col("shard_id").isin(touched)
+        sharded, n_shards = shard_assignments(
+            ck,
+            tokens_per_shard=tokens_per_shard,
+            id_col=id_col,
+            tokens_col=tokens_col,
         )
-    except AnalysisException:
-        # a pinned zero-row initial write leaves no shard part files —
-        # the store exists (log + empty manifest) but holds nothing yet
-        old_touched = assigned.limit(0)
-    cols = [c for c in old_touched.columns]
-    combined, blocks = eager_checkpoint(
-        old_touched.unionByName(assigned.select(*cols))
-    )
-    (
-        combined.repartition(len(touched), F.col("shard_id"))
-        .sortWithinPartitions("shard_id", id_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id")
-        .parquet(f"{out_dir}/shards")
-    )
-    refreshed = shard_manifest(
-        combined,
-        tokens_per_shard,
-        id_col=id_col,
-        tokens_col=tokens_col,
-        content_col=content_col,
-    )
-    manifest = (
-        prior.filter(~F.col("shard_id").isin(touched))
-        .drop("n_shards")
-        .unionByName(refreshed)
-        .withColumn("n_shards", F.lit(n_shards).cast("long"))
-    )
-    # the manifest overwrite also reads its own prior generation
-    manifest, mblocks = eager_checkpoint(manifest)
-    manifest.write.mode("overwrite").parquet(f"{out_dir}/manifest")
-    genlog.append(out_dir, {"phase": "done", "begin": begin})
-    release_blocks(spark.sparkContext, blocks | mblocks)
-    # re-read from the sink: the checkpoint frames above just had their
-    # blocks released, so they must not escape to the caller
+        genlog.reset(out_dir)
+        begin = genlog.append(out_dir, {"phase": "begin"})
+        (
+            sharded.repartition(n_shards, F.col("shard_id"))
+            .sortWithinPartitions("shard_id", id_col)
+            .write.mode("overwrite")
+            .partitionBy("shard_id")
+            .parquet(f"{out_dir}/shards")
+        )
+        manifest = shard_manifest(
+            sharded,
+            tokens_per_shard,
+            id_col=id_col,
+            tokens_col=tokens_col,
+            content_col=content_col,
+        )
+        # n_shards rides the manifest rows for consumers reading only the
+        # manifest
+        manifest.withColumn("n_shards", F.lit(n_shards).cast("long")).write.mode(
+            "overwrite"
+        ).parquet(f"{out_dir}/manifest")
+        genlog.append(out_dir, {"phase": "done", "begin": begin})
+    finally:
+        release_blocks(spark.sparkContext, blocks)
     spark.catalog.refreshByPath(f"{out_dir}/manifest")
     return spark.read.parquet(f"{out_dir}/manifest")
 
-
-def _mutations(out_dir: str) -> list[dict]:
-    """The shard store's mutations in log order: ``generation`` (the
-    ordinal of its ``begin`` record; a full write resets the log, so it
-    is generation 1), ``touched`` shards ([] = the whole store) and
-    ``done`` (its done record, None while open)."""
-    recs = genlog.records(out_dir)
-    dones = {r["begin"]: r for r in recs if r["phase"] == "done"}
-    begins = [r for r in recs if r["phase"] == "begin"]
-    return [
-        {
-            "generation": i,
-            "touched": r["touched"],
-            "done": dones.get(r["generation"]),
-        }
-        for i, r in enumerate(begins, 1)
-    ]
-
-
-def open_commits(spark: SparkSession, out_dir: str) -> list[dict]:
-    """Generations with a ``begin`` record but no ``done`` — half-applied
-    mutations. Empty for a healthy store, and for a store with no commit
-    log. Read from the log on the driver (no Spark job)."""
-    return [
-        {"generation": m["generation"], "touched": m["touched"]}
-        for m in _mutations(out_dir)
-        if m["done"] is None
-    ]
 
 
 def verify_shards(
@@ -436,7 +257,7 @@ def verify_shards(
 
     One scan of the payload + the tiny manifest, joined full-outer on
     shard_id — at 10^12 docs this is the cheap audit you run after every
-    append. Compose with ``summarize``/``exit_code`` for the CLI ladder."""
+    write. Compose with ``summarize``/``exit_code`` for the CLI ladder."""
     from pyspark.errors import AnalysisException
 
     spark.catalog.refreshByPath(f"{out_dir}/manifest")
@@ -473,50 +294,19 @@ def verify_shards(
         F.col("content_sum").alias("o_sum"),
     )
     j = m.join(o, "shard_id", "full_outer")
-    # commit-log check: a shard touched by a BEGUN-but-never-COMMITTED
-    # mutation is half-applied — report it as a structural error NAMING
-    # the generation, distinctly from payload tampering (whose checksum
-    # detail it would otherwise be indistinguishable from). touched=[]
-    # (a full rewrite) covers every shard.
-    muts = _mutations(out_dir)
-    opens = [m for m in muts if m["done"] is None]
-
-    # a LATER committed mutation covering the same shard supersedes the
-    # open generation there (the recovery path: re-running the failed
-    # append commits a new generation over the same shards and the
-    # incident closes; a full rewrite resets the whole log)
-    def _resolved(gen: int, shard: int) -> bool:
-        return any(
-            m["done"] is not None and m["generation"] > gen
-            and (not m["touched"] or shard in m["touched"])
-            for m in muts
+    # commit-log check: a write BEGUN but never COMMITTED is half-applied
+    # — every shard is a structural error NAMING the generation, distinct
+    # from payload tampering (whose checksum detail it would otherwise be
+    # indistinguishable from). The log holds one write (it resets on
+    # each), so an open begin is its last record and covers the store.
+    recs = genlog.records(out_dir)
+    half_applied = F.lit(None).cast("string")
+    if recs and recs[-1]["phase"] == "begin":
+        half_applied = F.lit(
+            f"shard write generation {recs[-1]['generation']} begun but "
+            "never committed — half-applied write, not tampering; re-run "
+            "write_training_shards"
         )
-
-    whole_gen = max(
-        (c["generation"] for c in opens if not c["touched"]), default=None
-    )
-    per_shard = {}
-    for c in opens:
-        for t in c["touched"]:
-            if not _resolved(c["generation"], t):
-                per_shard[t] = max(per_shard.get(t, 0), c["generation"])
-    open_gen = F.lit(None).cast("long")
-    if per_shard:
-        gen_map = F.create_map(
-            *[F.lit(x) for kv in per_shard.items() for x in kv]
-        )
-        open_gen = gen_map[F.col("shard_id")].cast("long")
-    if whole_gen is not None:
-        open_gen = F.greatest(open_gen, F.lit(whole_gen).cast("long"))
-    half_applied = F.when(
-        open_gen.isNotNull(),
-        F.concat(
-            F.lit("append generation "),
-            open_gen.cast("string"),
-            F.lit(" begun but never committed — half-applied write, "
-                  "not tampering; re-run the append"),
-        ),
-    )
     checks = [
         (
             F.col("m_docs").isNotNull() & F.col("o_docs").isNotNull()
@@ -553,7 +343,7 @@ def verify_shards(
     )
     status = (
         F.when(
-            open_gen.isNotNull()
+            half_applied.isNotNull()
             | F.col("o_docs").isNull()
             | F.col("m_docs").isNull(),
             F.lit("error"),

@@ -8,8 +8,7 @@ regardless of row count → scales to 10^12 rows).
 
 Length histograms are a separate ``groupBy(bucket)`` (second query — a
 histogram's group key depends on the data so it cannot fuse into the wide
-agg row). HLL sketch aggregates (``hll_sketch_agg``, Spark 3.5+) provide
-mergeable per-partition baselines for the drift checks."""
+agg row)."""
 
 from __future__ import annotations
 
@@ -180,22 +179,6 @@ def numeric_percentiles(
         )
         out = part if out is None else out.unionByName(part)
     return out
-
-
-def hll_baselines(
-    df: DataFrame, columns: list[str], by: str = "partition_id"
-) -> DataFrame:
-    """Mergeable per-partition HLL sketches (drift-check baselines,
-    FIXTURES.md §3). Uses ``hll_sketch_agg`` when available (Spark 3.5+),
-    else falls back to ``approx_count_distinct`` scalars."""
-    has_hll = hasattr(F, "hll_sketch_agg")
-    aggs = []
-    for c in columns:
-        if has_hll:
-            aggs.append(F.hll_sketch_agg(F.col(c).cast("string")).alias(f"{c}__hll"))
-        aggs.append(F.approx_count_distinct(c).alias(f"{c}__approx"))
-        aggs.append(F.count(F.lit(1)).alias(f"{c}__n"))
-    return df.groupBy(by).agg(*aggs)
 
 
 def fd_violations(

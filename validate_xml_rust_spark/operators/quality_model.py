@@ -39,7 +39,6 @@ identical).
 
 from __future__ import annotations
 
-import math
 import re
 from dataclasses import dataclass
 
@@ -265,102 +264,3 @@ def calibration_report(
             ).alias("frac_pos"),
         )
     )
-
-
-def expected_calibration_error(
-    df: DataFrame,
-    prob_col: str = "quality_prob",
-    label_col: str = "label",
-    n_bins: int = 10,
-) -> float:
-    """ECE over equal-width probability bins: Σ (n_b/N)·|acc_b − conf_b|.
-    One aggregation; the scalar comes back to the driver."""
-    p = F.col(prob_col).cast("double")
-    b = F.least(
-        F.lit(n_bins - 1), F.floor(p * F.lit(n_bins))
-    )
-    bins = (
-        df.filter(p.isNotNull() & ~F.isnan(p) & F.col(label_col).isNotNull())
-        .groupBy(b.alias("__b"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.col(prob_col)).alias("conf"),
-            F.avg(F.col(label_col).cast("double")).alias("acc"),
-        )
-        .collect()
-    )
-    total = sum(r["n"] for r in bins) or 1
-    return sum(r["n"] / total * abs(r["acc"] - r["conf"]) for r in bins)
-
-
-def platt_calibrate(
-    df: DataFrame,
-    score_col: str = "quality_logit",
-    label_col: str = "label",
-    sample_cap: int = 20_000,
-    max_iter: int = 50,
-) -> tuple[float, float]:
-    """Platt scaling (Platt 1999, the public recipe): fit (A, B) so
-    sigmoid(A·score + B) is calibrated against the labels, by Newton
-    iterations on the driver over a BOUNDED sample (the IVF-training
-    pattern: ≤ sample_cap rows via content-hash order — deterministic up
-    to ties, and tied (score, label) rows are interchangeable for the
-    fit — never the full corpus). Uses Platt's smoothed targets
-    (N⁺+1)/(N⁺+2), 1/(N⁻+2) so perfect separation cannot push A to
-    infinity. Returns (A, B); apply with ``apply_calibration``."""
-    rows = (
-        df.select(
-            F.col(score_col).cast("double").alias("s"),
-            F.col(label_col).cast("double").alias("y"),
-        )
-        .filter(
-            F.col("s").isNotNull()
-            & ~F.isnan(F.col("s"))
-            & F.col("y").isNotNull()
-        )
-        # label tie-break after the hash (the train_quality_model rule):
-        # equal-score rows at the cap boundary must be interchangeable
-        .orderBy(F.md5(F.col("s").cast("string")), F.col("y"))
-        .limit(sample_cap)
-        .collect()
-    )
-    s = np.array([r["s"] for r in rows])
-    y = np.array([r["y"] for r in rows])
-    n_pos, n_neg = float(y.sum()), float(len(y) - y.sum())
-    t = np.where(y > 0, (n_pos + 1.0) / (n_pos + 2.0), 1.0 / (n_neg + 2.0))
-    # standard Platt initialization (Lin/Lin/Weng 2007), SIGN-ADAPTED to
-    # this code's p = sigmoid(a·s + b) convention (LibSVM's B0 belongs
-    # to p = 1/(1+exp(A·f+B))): start at the POSITIVE-class prior, A=0 —
-    # starting at A=1 saturates the sigmoid on wide-logit models and
-    # zeroes the Hessian before the first step
-    a, b = 0.0, math.log((n_pos + 1.0) / (n_neg + 1.0))
-    for _ in range(max_iter):
-        z = np.clip(a * s + b, -35, 35)
-        p = 1.0 / (1.0 + np.exp(-z))
-        g = p - t
-        ga, gb = float((g * s).sum()), float(g.sum())
-        w = p * (1.0 - p)
-        haa = float((w * s * s).sum()) + 1e-9
-        hab = float((w * s).sum())
-        hbb = float(w.sum()) + 1e-9
-        det = haa * hbb - hab * hab
-        if abs(det) < 1e-12:
-            break
-        da = (gb * hab - ga * hbb) / det
-        db = (ga * hab - gb * haa) / det
-        a, b = a + da, b + db
-        if abs(da) < 1e-10 and abs(db) < 1e-10:
-            break
-    return float(a), float(b)
-
-
-def apply_calibration(
-    df: DataFrame,
-    a: float,
-    b: float,
-    score_col: str = "quality_logit",
-    out_col: str = "calibrated_prob",
-) -> DataFrame:
-    """Codegen'd application of a fitted Platt scaler — zero shuffle."""
-    z = F.lit(a) * F.col(score_col).cast("double") + F.lit(b)
-    return df.withColumn(out_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))

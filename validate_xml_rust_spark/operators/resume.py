@@ -67,17 +67,6 @@ def partition_metrics(verdicts: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def next_snapshot_id(spark: SparkSession, manifest_dir: str) -> int:
-    """The snapshot generation the next ``write_manifest`` takes: 1 + the
-    newest id in the manifest's generation log (1 for a fresh manifest),
-    read on the driver (no Spark job). With Iceberg this column is
-    replaced by the table's own snapshot id at commit time — the
-    manifest schema is deliberately shaped so that swap-in changes only
-    this function and ``write_manifest``."""
-    recs = genlog.records(manifest_dir)
-    return recs[-1]["generation"] + 1 if recs else 1
-
-
 def write_manifest(metrics: DataFrame, manifest_dir: str) -> int:
     """Append completed-partition rows as ONE snapshot generation (the
     "snapshot commit"); returns the committed snapshot_id. The id is
@@ -132,48 +121,6 @@ def pending_against(
         df[partition_col] == done["partition_id"],
         "left_anti",
     )
-
-
-def pending_rows(
-    df: DataFrame, spark: SparkSession, manifest_dir: str,
-    partition_col: str = "partition_id",
-) -> DataFrame:
-    """Rows whose partition is NOT in the manifest — the resume join."""
-    done = completed_partitions(spark, manifest_dir)
-    if done is None:
-        return df
-    return pending_against(df, done, partition_col)
-
-
-def run_with_resume(
-    df: DataFrame,
-    spark: SparkSession,
-    registry,
-    manifest_dir: str,
-    run_id: str,
-    route_col: str = "lang",
-    partition_col: str = "partition_id",
-):
-    """Validate only not-yet-completed partitions, then commit them to the
-    manifest. Returns (verdicts_df_or_None, n_pending_partitions)."""
-    from validate_xml_rust_spark.operators.validate import validate
-
-    todo = pending_rows(df, spark, manifest_dir, partition_col)
-    if todo.limit(1).count() == 0:
-        return None, 0
-    res = validate(todo, spark, registry, route_col=route_col, partition_col=partition_col)
-    verdicts = res.verdicts
-    write_manifest(partition_metrics(verdicts, run_id), manifest_dir)
-    # count what this run committed by re-reading the manifest (cheap, and
-    # avoids recomputing the validation pipeline a second time)
-    n = (
-        spark.read.parquet(manifest_dir)
-        .filter(F.col("run_id") == run_id)
-        .select("partition_id")
-        .distinct()
-        .count()
-    )
-    return verdicts, n
 
 
 def content_fingerprint(cols: list[str]) -> "F.Column":

@@ -32,6 +32,17 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 OUTPUT_SCHEMA = "key string, url string, is_duplicate boolean, n_seen_before long"
 STATE_SCHEMA = "n_seen long"
 
+PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("partition_id", T.IntegerType()),
+    ]
+)
+
 
 def _dedup_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -62,8 +73,6 @@ def streaming_first_seen_dedup(
     ``max_files_per_trigger=1`` replays one arrival file per micro-batch
     (file order = modification time, oldest first) — the deterministic
     replay mode the first-seen gate query uses."""
-    from validate_xml_rust_spark.streaming.incremental import PAGES_SCHEMA
-
     reader = spark.readStream.schema(schema or PAGES_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
