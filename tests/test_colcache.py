@@ -58,3 +58,15 @@ def test_memoized_rules_give_identical_rows_on_a_second_frame(spark):
     colcache.clear()
     assert rules(a) != want  # Columns built while applying them to a ...
     assert rules(b) == want  # ... and reused on b
+
+
+def test_equal_scalars_of_different_types_are_different_keys(spark):
+    """1, 1.0 and True are one dict key, but a builder may format them
+    differently (host_quality's message prints its threshold)."""
+
+    @colcache.per_context
+    def build(x, nested=()):
+        return f"< {x} {nested}"
+
+    assert [build(1), build(1.0), build(True)] == ["< 1 ()", "< 1.0 ()", "< True ()"]
+    assert build(0, (1,)) != build(0, (1.0,))

@@ -1,4 +1,5 @@
-"""Every package function has a production caller.
+"""Every package function has a production caller, and no package code
+builds a DataFrame from a Python list.
 
 A top-level function of ``validate_xml_rust_spark`` is reachable when a
 production entry point refers to it, directly or through other reachable
@@ -133,3 +134,31 @@ def test_every_package_function_has_a_production_caller():
     )
     stale = sorted(ALLOWED.keys() - found)
     assert not stale, f"allowlisted but reachable or gone, drop them: {stale}"
+
+
+def list_built_frames() -> list[str]:
+    """``module:line`` of each package ``createDataFrame`` call whose data
+    argument is a list literal or comprehension."""
+    found = []
+    for f in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                continue
+            data = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg == "data"), None
+            )
+            if isinstance(data, (ast.List, ast.ListComp)):
+                found.append(f"{f.relative_to(PKG).as_posix()}:{node.lineno}")
+    return found
+
+
+def test_no_package_frame_is_built_from_a_list():
+    """A list (even an empty one) becomes a pickled RDD that a
+    Python-worker job converts; ``session.local_frame`` builds the same
+    rows as a pyarrow Table, a JVM LocalRelation."""
+    found = list_built_frames()
+    assert not found, f"build these from a pyarrow Table (session.local_frame): {found}"

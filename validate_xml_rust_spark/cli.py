@@ -179,6 +179,7 @@ def main(argv: list[str] | None = None) -> int:
     from validate_xml_rust_spark.operators.report import report
     from validate_xml_rust_spark.operators.summary import exit_code, summarize
     from validate_xml_rust_spark.operators.validate import validate
+    from validate_xml_rust_spark.session import local_frame
     from validate_xml_rust_spark.sources.pages import LANGS, pages, with_partition_id
     from validate_xml_rust_spark.sources.scan import glob_filters, read_pages_dir
     from validate_xml_rust_spark.specs import Constraint, Spec, SpecRegistry
@@ -302,7 +303,7 @@ def main(argv: list[str] | None = None) -> int:
             ln.strip() for ln in lines
             if ln.strip() and not ln.lstrip().startswith("#")
         ]
-        return spark.createDataFrame([(d,) for d in domains], "domain string")
+        return local_frame(spark, "domain string", {"domain": domains})
 
     # crawl-side policy BEFORE validation (the cheapest filters first —
     # same position pipeline.curate gives them)
@@ -501,9 +502,9 @@ def main(argv: list[str] | None = None) -> int:
                 "url", "content_fp", "spec_id", "status", "error_count"
             )
         except Exception:
-            prior = spark.createDataFrame(
-                [], "url string, content_fp string, spec_id string, "
-                    "status string, error_count int",
+            prior = local_frame(
+                spark, "url string, content_fp string, spec_id string, "
+                       "status string, error_count int",
             )
         # full output (partition_id, details, violations) whenever a sink
         # needs it: --output parquet, --manifest metrics, or a -v report.
@@ -704,9 +705,9 @@ def main(argv: list[str] | None = None) -> int:
                 "url", "content_fp", "spec_id", "status", "error_count"
             )
         except Exception:
-            prior_store = spark.createDataFrame(
-                [], "url string, content_fp string, spec_id string, "
-                    "status string, error_count int",
+            prior_store = local_frame(
+                spark, "url string, content_fp string, spec_id string, "
+                       "status string, error_count int",
             )
         new_rows = res.verdicts.select(
             F.col("url").cast("string").alias("url"),

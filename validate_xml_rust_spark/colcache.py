@@ -48,7 +48,7 @@ def per_context(fn):
         ):
             return fn(*args, **kwargs)
         memo = _MEMOS.setdefault(sc, {})
-        key = (build, args, tuple(sorted(kwargs.items())))
+        key = (build, _typed(args), _typed(tuple(sorted(kwargs.items()))))
         try:
             out = memo[key]
         except KeyError:
@@ -56,6 +56,16 @@ def per_context(fn):
         return dict(out) if isinstance(out, dict) else out
 
     return build
+
+
+def _typed(value):
+    """``value`` with the type of every scalar in it: 1, 1.0 and True are
+    equal dict keys, but a builder may format them differently."""
+    if isinstance(value, tuple):
+        return tuple, tuple(map(_typed, value))
+    if isinstance(value, frozenset):
+        return frozenset, frozenset(map(_typed, value))
+    return type(value), value
 
 
 def clear() -> None:

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.session import local_frame
+
 EOW = "</w>"  # end-of-word marker (Sennrich-style word-internal BPE)
 
 
@@ -125,10 +127,11 @@ class Bpe:
         return "".join(pieces).replace(EOW, " ").strip()
 
     def to_df(self, spark):
-        return spark.createDataFrame(
-            [(r, a, b) for r, (a, b) in enumerate(self.merges)],
-            "rank long, left string, right string",
-        )
+        return local_frame(spark, "rank long, left string, right string", {
+            "rank": list(range(len(self.merges))),
+            "left": [a for a, _ in self.merges],
+            "right": [b for _, b in self.merges],
+        })
 
     @classmethod
     def from_df(cls, df) -> "Bpe":

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from validate_xml_rust_spark import genlog
 from validate_xml_rust_spark.colcache import per_context
+from validate_xml_rust_spark.session import local_frame
 from validate_xml_rust_spark.functions.texthash import (
     hamming64,
     jaccard,
@@ -310,22 +311,6 @@ def simhash_near_duplicates(
     return out
 
 
-def _local_frame(spark, rows: list[tuple], id_type) -> DataFrame:
-    """``(id, component)`` driver rows as a JVM LocalRelation via one Arrow
-    table. A list (or an EMPTY pandas frame) becomes a pickled RDD that a
-    Python-worker job converts: ~0.25 s at perfbench's curate scale."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField("id", id_type), T.StructField("component", id_type)]
-    )
-    ids, comps = zip(*rows) if rows else ((), ())
-    return spark.createDataFrame(
-        pa.table({"id": list(ids), "component": list(comps)}), schema
-    )
-
-
 def connected_components(
     pairs: DataFrame, max_iterations: int = 20, stats: dict | None = None
 ) -> DataFrame:
@@ -383,11 +368,12 @@ def connected_components(
                 a, b = b, a
             parent[b] = a  # root stays the MIN member
         nodes = sorted({x for pair in head for x in pair})
+        t = edges.schema["src"].dataType.simpleString()
         labels, _ = eager_checkpoint(
-            _local_frame(
+            local_frame(
                 pairs.sparkSession,
-                [(n, find(n)) for n in nodes],
-                edges.schema["src"].dataType,
+                f"id {t}, component {t}",
+                {"id": nodes, "component": [find(n) for n in nodes]},
             )
         )
         if stats is not None:

@@ -29,13 +29,15 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark import colcache
 from validate_xml_rust_spark.functions.grambuckets import (
     gram_bucket_counts,
     word_grams,
 )
+from validate_xml_rust_spark.session import local_frame
 
 KS_ALPHA_COEFF = {0.10: 1.22, 0.05: 1.36, 0.01: 1.63}
 
@@ -226,20 +228,21 @@ def psi_drift_check(
 
     Unlike the KS/chi² checks this needs NO Python at all: the only
     shuffle is the (partition × category) count aggregation (map-side
-    combined, ≤ P·K rows); the category grid is expanded from a literal
-    array and every PSI term is a codegen'd expression. The baseline map
-    rides as a literal — never joined row-wise. The closed-form statistic
+    combined, ≤ P·K rows); the category grid is expanded from a constant
+    array and every PSI term is a codegen'd expression. The baseline is
+    never joined row-wise: its map, the category grid and the fold into
+    ``__OTHER__`` are each ONE SQL expression holding every category as
+    an escaped literal (``_sql_str``), built in one py4j round trip per
+    call rather than one ``F.lit`` per category. The closed-form statistic
     makes it fully restatable in SQL, so the gate query cross-verifies the
     arithmetic end to end (chi²/KS gates verify only the statistic their
     oracles can reach).
     """
-    cats = sorted(baseline_counts)
     counts = (
         df.filter(F.col(column).isNotNull())
         .groupBy(
             F.col(partition_col).cast("int").alias("__pid"),
-            F.when(F.col(column).cast("string").isin(cats), F.col(column).cast("string"))
-            .otherwise("__OTHER__")
+            _fold_other(f"CAST({_ident(column)} AS STRING)", baseline_counts)
             .alias("__cat"),
         )
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -272,30 +275,38 @@ def psi_from_counts(
         raise ValueError(f"unknown divergence stat: {stat!r}")
     cats = sorted(baseline_counts)
     all_cats = cats + ["__OTHER__"]
-    k = float(len(all_cats))
-    m = float(sum(baseline_counts.values())) or 1.0
-    base_map = F.create_map(
-        *[x for c in cats for x in (F.lit(c), F.lit(float(baseline_counts[c])))]
+    # the per-category constants: one expression each, whatever K is
+    base_map = F.expr("map(" + ", ".join(
+        f"{_sql_str(c)}, {float(baseline_counts[c])!r}D" for c in cats
+    ) + ")")
+    grid_cats = F.expr("array(" + ", ".join(map(_sql_str, all_cats)) + ")")
+    cols = _psi_columns(
+        column, stat, float(len(all_cats)),
+        float(sum(baseline_counts.values())) or 1.0,
+        float(smooth), float(threshold), min_rows,
     )
-
-    per_pid = (
-        counts.groupBy("__pid")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("__cat", "__n"))).alias("__m"),
-            F.sum("__n").cast("double").alias("__tot"),
-        )
-    )
+    per_pid = counts.groupBy("__pid").agg(*cols["per_pid"])
     grid = per_pid.select(
-        "__pid",
-        "__tot",
-        F.explode(F.array(*[F.lit(c) for c in all_cats])).alias("__cat"),
-        "__m",
+        "__pid", "__tot", F.explode(grid_cats).alias("__cat"), "__m"
     ).select(
-        "__pid",
-        "__tot",
-        F.coalesce(F.element_at("__m", F.col("__cat")), F.lit(0)).cast("double").alias("__o"),
+        "__pid", "__tot", cols["observed"],
         F.coalesce(F.element_at(base_map, F.col("__cat")), F.lit(0.0)).alias("__b"),
     )
+    return (
+        grid.withColumn("__t", cols["term"])
+        .groupBy("__pid")
+        .agg(*cols["stat"])
+        .select(*cols["out"])
+    )
+
+
+@colcache.per_context
+def _psi_columns(
+    column: str, stat: str, k: float, m: float, smooth: float,
+    threshold: float, min_rows: int,
+) -> dict:
+    """The baseline-independent Columns of ``psi_from_counts``: ``k``
+    categories (the OTHER bucket included), ``m`` baseline observations."""
     p = (F.col("__o") + smooth) / (F.col("__tot") + smooth * k)
     q = (F.col("__b") + smooth) / (m + smooth * k)
     if stat == "psi":
@@ -303,25 +314,57 @@ def psi_from_counts(
     else:  # js
         mid = (p + q) / 2
         term = (p * F.log(p / mid) + q * F.log(q / mid)) / 2
-    return (
-        grid.withColumn("__t", term)
-        .groupBy("__pid")
-        .agg(
+    return {
+        "per_pid": (
+            F.map_from_entries(F.collect_list(F.struct("__cat", "__n"))).alias("__m"),
+            F.sum("__n").cast("double").alias("__tot"),
+        ),
+        "observed": F.coalesce(F.element_at("__m", F.col("__cat")), F.lit(0))
+        .cast("double").alias("__o"),
+        "term": term,
+        "stat": (
             F.when(F.max("__tot") < min_rows, F.lit(0.0))
             .otherwise(F.round(F.sum("__t"), 6))
             .alias("statistic"),
             F.max("__tot").cast("long").alias("n"),
-        )
-        .select(
+        ),
+        "out": (
             F.col("__pid").alias("partition_id"),
             F.lit(column).alias("column_name"),
             F.lit(stat).alias("test"),
-            "statistic",
-            F.lit(float(threshold)).alias("threshold"),
+            F.col("statistic"),
+            F.lit(threshold).alias("threshold"),
             F.lit(None).cast("double").alias("p_value"),
-            "n",
+            F.col("n"),
             (F.col("statistic") > threshold).alias("drifted"),
-        )
+        ),
+    }
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash and quote escaped;
+    any other character, non-ASCII included, stands for itself)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _ident(name: str) -> str:
+    """A column name as ``F.col`` reads it, spelled for SQL text: each
+    dot-separated part backquoted (a name already holding backquotes is
+    taken as quoted)."""
+    if "`" in name:
+        return name
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def _fold_other(value_sql: str, cats) -> Column:
+    """``value_sql`` where it is one of ``cats``, else ``'__OTHER__'``:
+    one CASE expression, one round trip for any number of categories."""
+    if not cats:
+        return F.lit("__OTHER__")
+    in_list = ", ".join(map(_sql_str, sorted(cats)))
+    return F.expr(
+        f"CASE WHEN {value_sql} IN ({in_list}) THEN {value_sql} "
+        "ELSE '__OTHER__' END"
     )
 
 
@@ -428,16 +471,23 @@ def embedding_drift_check(
     for r in counts_rows:
         cat = r["__cat"] if r["__cat"] in baseline_counts else "__OTHER__"
         folded[(r["__pid"], cat)] = folded.get((r["__pid"], cat), 0) + r["__n"]
-    counts = assigned.sparkSession.createDataFrame(
-        [(p, c, n) for (p, c), n in sorted(folded.items())],
-        "__pid int, __cat string, __n long",
+    keys = sorted(folded)
+    counts = local_frame(
+        assigned.sparkSession, "__pid int, __cat string, __n long",
+        {"__pid": [p for p, _ in keys], "__cat": [c for _, c in keys],
+         "__n": [folded[k] for k in keys]},
     )
     return psi_from_counts(counts, "cluster", baseline_counts, **psi_kw)
 
 
 def drift_violations(drift_df: DataFrame) -> DataFrame:
     """Drifted partitions → violation rows in the engine contract."""
-    return drift_df.filter(F.col("drifted")).select(
+    return drift_df.filter(F.col("drifted")).select(*_drift_violation_columns())
+
+
+@colcache.per_context
+def _drift_violation_columns() -> tuple[Column, ...]:
+    return (
         F.concat(F.lit("partition:"), F.col("partition_id").cast("string")).alias("url"),
         F.concat(F.lit("drift_"), F.col("test"), F.lit("_"), F.col("column_name")).alias(
             "constraint_id"
@@ -452,6 +502,20 @@ def drift_violations(drift_df: DataFrame) -> DataFrame:
             F.lit("p"),
             F.col("p_value").cast("string"),
         ).alias("message"),
+    )
+
+
+@colcache.per_context
+def _vocab_columns(text_col: str, partition_col: str) -> tuple:
+    """vocab_drift's gram text, partition key and count-row renames."""
+    return (
+        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
+        F.col(partition_col).cast("int"),
+        (
+            F.col("__k").alias("__pid"),
+            F.col("b").cast("string").alias("__cat"),
+            F.col("__c").alias("__n"),
+        ),
     )
 
 
@@ -523,16 +587,10 @@ def vocab_drift(
     # mapInPandas pass + an exact integer sum); `vocab_bucket_counts`
     # remains the exploded reference twin, parity-tested, and the shape
     # the streaming vocab gate consumes.
+    text, key, renamed = _vocab_columns(text_col, partition_col)
     cnts = gram_bucket_counts(
-        df,
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-        partial(word_grams, bigrams=False),
-        n_buckets, seed, key=F.col(partition_col).cast("int"),
-    ).select(
-        F.col("__k").alias("__pid"),
-        F.col("b").cast("string").alias("__cat"),
-        F.col("__c").alias("__n"),
-    )
+        df, text, partial(word_grams, bigrams=False), n_buckets, seed, key=key,
+    ).select(*renamed)
     cnts, block_ids = eager_checkpoint(cnts)
     if handles is not None:
         handles["ckpt_block_ids"] = block_ids
@@ -553,10 +611,7 @@ def vocab_drift(
         # categories outside the baseline fold to __OTHER__
         # (psi_from_counts' contract; self-baseline is a subset already)
         cnts = cnts.withColumn(
-            "__cat",
-            F.when(
-                F.col("__cat").isin(sorted(baseline)), F.col("__cat")
-            ).otherwise("__OTHER__"),
+            "__cat", _fold_other("`__cat`", baseline)
         ).groupBy("__pid", "__cat").agg(F.sum("__n").alias("__n"))
     return psi_from_counts(
         cnts, "vocab", baseline,

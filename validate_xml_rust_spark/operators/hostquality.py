@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.colcache import per_context
 from validate_xml_rust_spark.operators.skew import salted_agg
 
 
@@ -47,11 +48,8 @@ def _quality_sums(
         quality_col = "quality"
     else:
         scored = df
-    q6 = F.round(F.col(quality_col), 6).cast("decimal(18,6)")
-    pred = F.lit(True)
-    for k in keys:
-        pred = pred & F.col(k).isNotNull()
-    base = scored.filter(pred).select(*[F.col(k) for k in keys], q6.alias("__q"))
+    pred, cols = _sum_input_columns(tuple(keys), quality_col)
+    base = scored.filter(pred).select(*cols)
     return salted_agg(
         base,
         keys,
@@ -61,8 +59,23 @@ def _quality_sums(
     )
 
 
+@per_context
+def _sum_input_columns(keys: tuple, quality_col: str) -> tuple:
+    """(no NULL key predicate, the keys plus the 6dp DECIMAL score)."""
+    q6 = F.round(F.col(quality_col), 6).cast("decimal(18,6)")
+    pred = F.lit(True)
+    for k in keys:
+        pred = pred & F.col(k).isNotNull()
+    return pred, (*[F.col(k) for k in keys], q6.alias("__q"))
+
+
 def _project_mean(agg: DataFrame, keys: list[str]) -> DataFrame:
-    return agg.select(
+    return agg.select(*_mean_columns(tuple(keys)))
+
+
+@per_context
+def _mean_columns(keys: tuple) -> tuple:
+    return (
         *[F.col(k) for k in keys],
         F.col("n_docs").cast("long").alias("n_docs"),
         F.when(
@@ -71,6 +84,38 @@ def _project_mean(agg: DataFrame, keys: list[str]) -> DataFrame:
                 F.col("__sum_q").cast("double") / F.col("__n_scored"), 6
             ),
         ).alias("mean_quality"),
+    )
+
+
+@per_context
+def _bad_columns(mq: float, md: int, grain: str) -> tuple:
+    """(the below-threshold predicate, the violation projection) over
+    ``(group_value, n_docs, mean_quality, cid)`` rows."""
+    return (
+        (F.col("n_docs") >= md)
+        & F.col("mean_quality").isNotNull()
+        & (F.col("mean_quality") < mq),
+        (
+            F.col("group_value").alias("url"),
+            F.col("cid").alias("constraint_id"),
+            F.col("mean_quality").cast("string").alias("observed_value"),
+            F.concat(
+                F.lit(f"{grain} mean quality "),
+                F.col("mean_quality").cast("string"),
+                F.lit(f" < {mq} over "),
+                F.col("n_docs").cast("string"),
+                F.lit(" docs"),
+            ).alias("message"),
+        ),
+    )
+
+
+@per_context
+def _group_stats_columns(group_col: str, constraint_id: str) -> tuple:
+    return (
+        F.col(group_col).cast("string").alias("group_value"),
+        F.col("n_docs"), F.col("mean_quality"),
+        F.lit(constraint_id).alias("cid"),
     )
 
 
@@ -186,32 +231,14 @@ def host_quality_violations(
     Domain thresholds default to the host thresholds."""
 
     def _bad(stats: DataFrame, mq: float, md: int, grain: str) -> DataFrame:
-        return stats.filter(
-            (F.col("n_docs") >= md)
-            & F.col("mean_quality").isNotNull()
-            & (F.col("mean_quality") < mq)
-        ).select(
-            F.col("group_value").alias("url"),
-            F.col("cid").alias("constraint_id"),
-            F.col("mean_quality").cast("string").alias("observed_value"),
-            F.concat(
-                F.lit(f"{grain} mean quality "),
-                F.col("mean_quality").cast("string"),
-                F.lit(f" < {mq} over "),
-                F.col("n_docs").cast("string"),
-                F.lit(" docs"),
-            ).alias("message"),
-        )
+        pred, cols = _bad_columns(mq, md, grain)
+        return stats.filter(pred).select(*cols)
 
     if domain_col is None:
         stats = group_quality_stats(
             df, group_col=group_col, text_col=text_col,
             quality_col=quality_col, n_salts=n_salts,
-        ).select(
-            F.col(group_col).cast("string").alias("group_value"),
-            "n_docs", "mean_quality",
-            F.lit(constraint_id).alias("cid"),
-        )
+        ).select(*_group_stats_columns(group_col, constraint_id))
         return _bad(stats, min_mean_quality, min_docs, "host")
     rolled = rollup_quality_stats(
         df, host_col=group_col, domain_col=domain_col, text_col=text_col,

@@ -45,8 +45,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from validate_xml_rust_spark.colcache import per_context
 
 from validate_xml_rust_spark.operators.validate import ValidationResult, validate
 from validate_xml_rust_spark.specs import Constraint, SpecRegistry
@@ -409,8 +411,8 @@ def validate_full(
             ref, _failed = extract_spec_ref(F.col("html"))
             scoped = df.filter(ref == sid)
         else:
-            keys = [k for k, v in registry.routes.items() if v == sid]
-            scoped = df.filter(F.col(route_col).isin(keys)) if keys else None
+            keys = tuple(k for k, v in registry.routes.items() if v == sid)
+            scoped = df.filter(_routed(route_col, keys)) if keys else None
         if scoped is None:
             continue
         for c in tcs:
@@ -424,3 +426,9 @@ def validate_full(
         table_violations=table_v,
         ckpt_block_ids=frozenset(ckpt_ids),
     )
+
+
+@per_context
+def _routed(route_col: str, keys: tuple[str, ...]) -> Column:
+    """Rows whose route key sends them to one spec."""
+    return F.col(route_col).isin(list(keys))

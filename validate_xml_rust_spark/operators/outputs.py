@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from validate_xml_rust_spark import genlog
+from validate_xml_rust_spark.session import local_frame
 
 
 def write_results(
@@ -269,8 +270,8 @@ def verify_shards(
         # an empty store writes a manifest but no shard part files
         # (partitionBy emits nothing for zero rows) — audit it as an
         # empty payload, not a crash
-        payload = spark.createDataFrame(
-            [],
+        payload = local_frame(
+            spark,
             f"`{id_col}` string, `{content_col}` string, "
             f"`{tokens_col}` int, shard_id long",
         )

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.session import local_frame
+
 
 def profile(
     df: DataFrame, columns: list[str] | None = None, exact: bool = False
@@ -141,8 +143,8 @@ def numeric_percentiles(
     identical probabilities so the trade is measured, not asserted; the
     pytest pins the sketch within rank tolerance of exact."""
     if not columns:
-        return df.sparkSession.createDataFrame(
-            [], "column_name string, p double, value double"
+        return local_frame(
+            df.sparkSession, "column_name string, p double, value double"
         )
     fn = "percentile" if exact else "approx_percentile"
     acc = "" if exact else f", {accuracy}"

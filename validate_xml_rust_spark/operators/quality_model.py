@@ -47,6 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.session import local_frame
+
 TOKEN_SPLIT = r"[^a-z0-9]+"
 BIAS_TOKEN = "__bias__"
 WEIGHTS_SCHEMA = "token string, weight decimal(18,9)"
@@ -78,10 +80,11 @@ class QualityModel:
     bias: float
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        rows = [(BIAS_TOKEN, round(self.bias, 9))] + [
-            (t, round(w, 9)) for t, w in sorted(self.weights.items())
-        ]
-        return spark.createDataFrame(rows, "token string, weight double").select(
+        tokens = sorted(self.weights)
+        return local_frame(spark, "token string, weight double", {
+            "token": [BIAS_TOKEN, *tokens],
+            "weight": [round(self.bias, 9), *(round(self.weights[t], 9) for t in tokens)],
+        }).select(
             "token", F.col("weight").cast("decimal(18,9)").alias("weight")
         )
 

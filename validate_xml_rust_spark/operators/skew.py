@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.colcache import per_context
+
 AggSpec = tuple  # (op, col?, alias)
 
 
@@ -67,15 +69,24 @@ def salted_agg(
     n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase salted groupBy. ``aggs``: [(op, col_or_None, alias), ...]."""
+    groups, partials, merges = _salted_columns(
+        tuple(keys), tuple(map(tuple, aggs)), n_salts
+    )
+    return df.groupBy(*groups).agg(*partials).groupBy(*keys).agg(*merges)
+
+
+@per_context
+def _salted_columns(keys: tuple, aggs: tuple, n_salts: int) -> tuple:
+    """(phase-1 grouping Columns with the salt, partial aggregates, merge
+    aggregates) — built once per session and argument set."""
     salt = F.pmod(
         F.xxhash64(F.monotonically_increasing_id(), F.lit(23)), F.lit(n_salts)
     ).alias("__salt")
-    partials = [
-        _partial(op, col, alias) for (op, col, alias) in aggs
-    ]
-    phase1 = df.groupBy(*[F.col(k) for k in keys], salt).agg(*partials)
-    merges = [_merge(op, alias) for (op, col, alias) in aggs]
-    return phase1.groupBy(*keys).agg(*merges)
+    return (
+        (*[F.col(k) for k in keys], salt),
+        tuple(_partial(op, col, alias) for (op, col, alias) in aggs),
+        tuple(_merge(op, alias) for (op, col, alias) in aggs),
+    )
 
 
 def host_stats_salted(

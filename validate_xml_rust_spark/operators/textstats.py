@@ -102,6 +102,11 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     - ``quality``: clamped blend (length-normalized, penalizing
       punctuation soup and unnaturally long words)
     """
+    return df.withColumns(_quality_columns(text_col))
+
+
+@per_context
+def _quality_columns(text_col: str) -> dict[str, Column]:
     t = F.coalesce(F.col(text_col), F.lit(""))
     n = F.greatest(F.length(t), F.lit(1))
     alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
@@ -130,13 +135,13 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         ),
         6,
     )
-    return (
-        df.withColumn("alpha_ratio", F.round(alpha_ratio, 6))
-        .withColumn("punct_ratio", F.round(punct_ratio, 6))
-        .withColumn("stopword_ratio", F.round(stopword_ratio, 6))
-        .withColumn("mean_word_len", F.round(mean_word_len, 6))
-        .withColumn("quality", quality)
-    )
+    return {
+        "alpha_ratio": F.round(alpha_ratio, 6),
+        "punct_ratio": F.round(punct_ratio, 6),
+        "stopword_ratio": F.round(stopword_ratio, 6),
+        "mean_word_len": F.round(mean_word_len, 6),
+        "quality": quality,
+    }
 
 
 # every column repetition_stats adds — pipeline steps that use it as a

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.colcache import per_context
+
 # two independent 64-bit key hashes (JVM-side xxhash64) seed the k Bloom
 # probe positions via double hashing: idx_i = h1 + i*h2 (mod m)
 _BLOOM_SEED = 101
@@ -201,17 +203,13 @@ def duplicate_keys(
     if bloom:
         df = bloom_suspects(df, keys, bloom_bits=bloom_bits, stats=stats)
         bloom_bc = df._bloom_broadcast
-    key_cols = [F.col(k) for k in keys]
-    nn = df
+    cols = _dup_columns(tuple(keys), n_salts)
     if salted:
-        salt = F.pmod(
-            F.xxhash64(F.monotonically_increasing_id(), F.lit(7)), F.lit(n_salts)
-        ).alias("__salt")
-        partial = nn.groupBy(*key_cols, salt).agg(F.count(F.lit(1)).alias("__partial"))
-        counts = partial.groupBy(*keys).agg(F.sum("__partial").alias("n_dup"))
+        partial = df.groupBy(*cols["salted_keys"]).agg(cols["partial"])
+        counts = partial.groupBy(*keys).agg(cols["merge"])
     else:
-        counts = nn.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_dup"))
-    out = counts.filter(F.col("n_dup") > 1)
+        counts = df.groupBy(*keys).agg(cols["count"])
+    out = counts.filter(cols["dup"])
     if bloom_bc is not None:
         # carry the suspect-bloom Broadcast handle (see bloom_suspects
         # docstring: eager release is the caller's option, ContextCleaner
@@ -237,20 +235,43 @@ def uniqueness_violations(
     ``broadcast=False`` for corpora where the duplicate-key set itself can
     exceed the broadcast ceiling (e.g. a crawl where most urls repeat):
     falls back to a shuffle join on the uniform key hash."""
+    cols = _violation_columns(tuple(keys), constraint_id, id_col)
     nn = df
-    for k in keys:
-        nn = nn.filter(F.col(k).isNotNull())
+    for not_null in cols["not_null"]:
+        nn = nn.filter(not_null)
     dups = duplicate_keys(nn, keys, n_salts=n_salts)
     # Join back to recover the id of each offending row. The dup set is
     # usually tiny vs the table → broadcast it (escape hatch above).
     joined = nn.join(F.broadcast(dups) if broadcast else dups, on=keys, how="inner")
-    return joined.select(
-        F.col(id_col).cast("string").alias("url"),
-        F.lit(constraint_id).alias("constraint_id"),
-        F.concat_ws("|", *[F.col(k).cast("string") for k in keys]).alias(
-            "observed_value"
+    return joined.select(*cols["out"])
+
+
+@per_context
+def _dup_columns(keys: tuple, n_salts: int) -> dict:
+    salt = F.pmod(
+        F.xxhash64(F.monotonically_increasing_id(), F.lit(7)), F.lit(n_salts)
+    ).alias("__salt")
+    return {
+        "salted_keys": (*[F.col(k) for k in keys], salt),
+        "partial": F.count(F.lit(1)).alias("__partial"),
+        "merge": F.sum("__partial").alias("n_dup"),
+        "count": F.count(F.lit(1)).alias("n_dup"),
+        "dup": F.col("n_dup") > 1,
+    }
+
+
+@per_context
+def _violation_columns(keys: tuple, constraint_id: str, id_col: str) -> dict:
+    return {
+        "not_null": tuple(F.col(k).isNotNull() for k in keys),
+        "out": (
+            F.col(id_col).cast("string").alias("url"),
+            F.lit(constraint_id).alias("constraint_id"),
+            F.concat_ws("|", *[F.col(k).cast("string") for k in keys]).alias(
+                "observed_value"
+            ),
+            F.concat(
+                F.lit("duplicate key (n="), F.col("n_dup").cast("string"), F.lit(")")
+            ).alias("message"),
         ),
-        F.concat(
-            F.lit("duplicate key (n="), F.col("n_dup").cast("string"), F.lit(")")
-        ).alias("message"),
-    )
+    }

@@ -32,7 +32,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from validate_xml_rust_spark.specs import SpecRegistry
+from validate_xml_rust_spark import colcache
+from validate_xml_rust_spark.session import local_frame
+from validate_xml_rust_spark.specs import SpecRegistry, _compiled
 
 VIOLATION_STRUCT = (
     "array<struct<constraint_id:string,observed_value:string,"
@@ -94,9 +96,10 @@ def resolve_spec(
         return df.withColumn("spec_id", F.lit(override_spec_id))
     if not registry.routes:
         return df.withColumn("spec_id", F.lit(None).cast("string"))
-    routes_df = spark.createDataFrame(
-        [(k, v) for k, v in sorted(registry.routes.items())],
-        "route_key string, spec_id string",
+    keys, spec_ids = zip(*sorted(registry.routes.items()))
+    routes_df = local_frame(
+        spark, "route_key string, spec_id string",
+        {"route_key": list(keys), "spec_id": list(spec_ids)},
     )
     return df.join(
         F.broadcast(routes_df), df[route_col] == routes_df["route_key"], "left"
@@ -112,16 +115,8 @@ class ValidationResult:
     def violations(self) -> DataFrame:
         """Violation rows ``(url, constraint_id, observed_value, message)``
         — the north-star contract. Explode is a narrow op (no shuffle)."""
-        v = self.verdicts.select(
-            "url", "partition_id", F.explode("violation_entries").alias("v")
-        )
-        return v.select(
-            "url",
-            "partition_id",
-            F.col("v.constraint_id").alias("constraint_id"),
-            F.col("v.observed_value").alias("observed_value"),
-            F.col("v.message").alias("message"),
-        )
+        explode, fields = _violation_columns()
+        return self.verdicts.select(*explode).select(*fields)
 
 
 def validate(
@@ -153,23 +148,55 @@ def validate(
       a reference is ``skipped``. ``override_spec_id`` wins over both
       (the ``--schema`` flag semantics, src/validator.rs:613-618).
     """
-    compiled = registry.compiled()
+    registry.compiled()  # each distinct spec compiles once per session
     if partition_col is None or partition_col not in df.columns:
         df = df.withColumn("partition_id", F.lit(0))
         partition_col = "partition_id"
 
     if route_mode == "content" and override_spec_id is None:
-        sid, failed = extract_spec_ref(F.col(html_col))
-        resolved = df.withColumn("spec_id", sid).withColumn("__extract_failed", failed)
+        resolved = df.withColumns(_extract_columns(html_col))
     else:
         resolved = resolve_spec(df, spark, registry, route_col, override_spec_id)
         resolved = resolved.withColumn("__extract_failed", F.lit(False))
 
-    # Per-spec violation arrays dispatched by spec_id (CASE WHEN chain).
+    keep = tuple(c for c in (keep_cols or []) if c not in (id_col, partition_col))
+    viol, cols = _verdict_columns(registry.content_key(), id_col, partition_col, keep)
+    verdicts = resolved.withColumn("all_entries", viol).select(*cols)
+    return ValidationResult(verdicts=verdicts)
+
+
+@colcache.per_context
+def _violation_columns() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    return (
+        (F.col("url"), F.col("partition_id"),
+         F.explode("violation_entries").alias("v")),
+        (
+            F.col("url"),
+            F.col("partition_id"),
+            F.col("v.constraint_id").alias("constraint_id"),
+            F.col("v.observed_value").alias("observed_value"),
+            F.col("v.message").alias("message"),
+        ),
+    )
+
+
+@colcache.per_context
+def _extract_columns(html_col: str) -> dict[str, Column]:
+    sid, failed = extract_spec_ref(F.col(html_col))
+    return {"spec_id": sid, "__extract_failed": failed}
+
+
+@colcache.per_context
+def _verdict_columns(
+    specs: tuple, id_col: str, partition_col: str, keep_cols: tuple[str, ...]
+) -> tuple[Column, tuple[Column, ...]]:
+    """The verdict Columns of a registry whose specs have content ``specs``
+    (``SpecRegistry.content_key()``): the per-spec CASE chain of violation
+    arrays over ``spec_id`` (applied first, as ``all_entries``), then the
+    verdict projection. Built once per content and column names."""
+    compiled = {sid: _compiled(sid, cons) for sid, cons in specs}
     known_ids = sorted(compiled)
     if known_ids:
-        viol: Column = F.lit(None).cast(VIOLATION_STRUCT)
-        # Build when-chain; start from the first spec.
         chain = None
         for sid in known_ids:
             arr = compiled[sid].violations_array()
@@ -181,7 +208,6 @@ def validate(
 
     spec_known = F.col("spec_id").isin(known_ids) if known_ids else F.lit(False)
 
-    with_v = resolved.withColumn("all_entries", viol)
     err_entries = F.filter(F.col("all_entries"), lambda x: x["severity"] == "error")
     inv_entries = F.filter(F.col("all_entries"), lambda x: x["severity"] == "invalid")
 
@@ -210,8 +236,7 @@ def validate(
     # Violation rows carry BOTH severities (an error row still reports what
     # fired); skipped/missing-spec rows have none.
     violation_entries = F.coalesce(F.col("all_entries"), _empty_violations())
-
-    verdicts = with_v.select(
+    return viol, (
         F.col(id_col).alias("url"),
         F.col(partition_col).alias("partition_id"),
         F.col("spec_id"),
@@ -219,7 +244,5 @@ def validate(
         error_count.cast("int").alias("error_count"),
         error_details.alias("error_details"),
         violation_entries.alias("violation_entries"),
-        *[F.col(c) for c in (keep_cols or []) if c not in
-          (id_col, partition_col)],
+        *[F.col(c) for c in keep_cols],
     )
-    return ValidationResult(verdicts=verdicts)

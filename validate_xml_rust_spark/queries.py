@@ -25,6 +25,7 @@ from validate_xml_rust_spark.operators.referential import referential_violations
 from validate_xml_rust_spark.operators.summary import summarize
 from validate_xml_rust_spark.operators.uniqueness import duplicate_keys
 from validate_xml_rust_spark.operators.validate import validate
+from validate_xml_rust_spark.session import local_frame
 from validate_xml_rust_spark.specs import Constraint, Spec, SpecRegistry
 
 
@@ -2188,7 +2189,7 @@ def q_url_policy_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     urls = _synth_urls(_t(spark, sf_dir, "documents"))
 
     def blocked_counts(domains: list, tag: str) -> DataFrame:
-        bl = spark.createDataFrame([(d,) for d in domains], "domain string")
+        bl = local_frame(spark, "domain string", {"domain": domains})
         hits = domain_blocklist_flags(
             urls, bl, host_out="canonical_url"
         ).filter(F.col("blocked"))
@@ -2211,11 +2212,10 @@ def q_url_policy_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         robots_exclusion_flags,
     )
 
-    bl = spark.createDataFrame([("h2.example.com",)], "domain string")
-    rb = spark.createDataFrame(
-        [("h2.example.com",), ("h5.example.com",), ("h6.example.com",)],
-        "domain string",
-    )
+    bl = local_frame(spark, "domain string", {"domain": ["h2.example.com"]})
+    rb = local_frame(spark, "domain string", {
+        "domain": ["h2.example.com", "h5.example.com", "h6.example.com"],
+    })
     flagged = robots_exclusion_flags(
         domain_blocklist_flags(urls, bl), rb, host_out="__h"
     )
@@ -2485,7 +2485,7 @@ def q_resume_pending(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").withColumn(
         "partition_id", (F.col("doc_id") % 8).cast("int")
     )
-    done = spark.createDataFrame([(0,), (3,), (5,)], "partition_id int")
+    done = local_frame(spark, "partition_id int", {"partition_id": [0, 3, 5]})
     return pending_against(docs, done).select("doc_id", "partition_id")
 
 

@@ -195,7 +195,8 @@ def load_spec(
     _opener=None,
 ) -> Spec:
     """Resolve → fetch (cache-aware) → sanity-check → parse. The "compile
-    once" step then happens in SpecRegistry.compiled() on the driver."""
+    once" step then happens in SpecRegistry.compiled(), which compiles
+    each distinct spec once per SparkContext (memoized on its content)."""
     raw = cache.get(url) if cache else None
     if raw is None:
         if classify_source(url) == "remote":

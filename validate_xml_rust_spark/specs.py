@@ -8,10 +8,15 @@ engine's analog: a *spec* is a declarative list of constraints; ``compile_spec``
 is the "parse once" step producing vectorized Column-expression checks that
 are then applied to every row of a DataFrame ("validate many").
 
-Compilation happens exactly once on the driver (the moka ``try_get_with``
-single-flight of src/cache.rs:51-66 is unnecessary in Spark: the compiled
-form is a plan fragment, shipped to executors inside the serialized plan /
-broadcast — X2 in SURVEY.md §4).
+Compilation happens once per distinct spec per SparkContext, on the
+driver: ``SpecRegistry.compiled()`` memoizes ``compile_spec`` through
+``colcache.per_context``, keyed on the spec's content (its id and each
+constraint's ``to_json()``), the analog of the reference's ``CachedSchema``
+(src/cache.rs:124-136). A changed spec is a new key; an unchanged one
+returns the Column objects built before, so a warm run rebuilds no rule
+expression. The moka ``try_get_with`` single-flight of src/cache.rs:51-66
+is unnecessary in Spark: the compiled form is a plan fragment, shipped to
+executors inside the serialized plan / broadcast — X2 in SURVEY.md §4.
 
 Row-scope constraint kinds (compiled to pure Column expressions — JVM-side,
 whole-stage-codegen'd, no Python in the hot path):
@@ -48,6 +53,8 @@ from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from validate_xml_rust_spark import colcache
 
 ROW_KINDS = frozenset(
     {"not_null", "regex", "range", "isin", "length", "utf8", "expr",
@@ -400,5 +407,27 @@ class SpecRegistry:
         self.routes[key] = spec_id
         return self
 
+    def content_key(self) -> tuple:
+        """The specs' content as a hashable key: ``(spec_id, (constraint
+        JSON, ...))`` per spec, in spec_id order. Routes are not part of
+        it: they pick a spec per row, they do not change its Columns."""
+        return tuple(
+            (sid, tuple(c.to_json() for c in self.specs[sid].constraints))
+            for sid in sorted(self.specs)
+        )
+
     def compiled(self) -> dict[str, CompiledSpec]:
-        return {sid: compile_spec(s) for sid, s in self.specs.items()}
+        """Each spec compiled once per SparkContext (see the module
+        docstring): a warm call returns the Columns built before."""
+        return {sid: _compiled(sid, cons) for sid, cons in self.content_key()}
+
+
+@colcache.per_context
+def _compiled(spec_id: str, constraints: tuple[str, ...]) -> CompiledSpec:
+    """``compile_spec`` of the spec whose content is ``constraints``
+    (``Constraint.to_json()`` strings): the result depends on the
+    content alone, so a registry mutated in place never reuses a stale
+    compile."""
+    return compile_spec(spec_from_dict(
+        {"spec_id": spec_id, "constraints": [json.loads(c) for c in constraints]}
+    ))
