@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from validate_xml_rust_spark import colcache
 from validate_xml_rust_spark.session import local_frame
-from validate_xml_rust_spark.specs import SpecRegistry, _compiled
+from validate_xml_rust_spark.specs import SpecRegistry, compiled_spec
 
 VIOLATION_STRUCT = (
     "array<struct<constraint_id:string,observed_value:string,"
@@ -148,7 +148,9 @@ def validate(
       a reference is ``skipped``. ``override_spec_id`` wins over both
       (the ``--schema`` flag semantics, src/validator.rs:613-618).
     """
-    registry.compiled()  # each distinct spec compiles once per session
+    # compile first (once per distinct spec per session): a bad spec fails
+    # here, before any plan is built, and the compile is a step of its own
+    registry.compiled()
     if partition_col is None or partition_col not in df.columns:
         df = df.withColumn("partition_id", F.lit(0))
         partition_col = "partition_id"
@@ -194,7 +196,7 @@ def _verdict_columns(
     (``SpecRegistry.content_key()``): the per-spec CASE chain of violation
     arrays over ``spec_id`` (applied first, as ``all_entries``), then the
     verdict projection. Built once per content and column names."""
-    compiled = {sid: _compiled(sid, cons) for sid, cons in specs}
+    compiled = {sid: compiled_spec(sid, cons) for sid, cons in specs}
     known_ids = sorted(compiled)
     if known_ids:
         chain = None

@@ -419,11 +419,11 @@ class SpecRegistry:
     def compiled(self) -> dict[str, CompiledSpec]:
         """Each spec compiled once per SparkContext (see the module
         docstring): a warm call returns the Columns built before."""
-        return {sid: _compiled(sid, cons) for sid, cons in self.content_key()}
+        return {sid: compiled_spec(sid, cons) for sid, cons in self.content_key()}
 
 
 @colcache.per_context
-def _compiled(spec_id: str, constraints: tuple[str, ...]) -> CompiledSpec:
+def compiled_spec(spec_id: str, constraints: tuple[str, ...]) -> CompiledSpec:
     """``compile_spec`` of the spec whose content is ``constraints``
     (``Constraint.to_json()`` strings): the result depends on the
     content alone, so a registry mutated in place never reuses a stale
