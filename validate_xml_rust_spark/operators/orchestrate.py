@@ -49,7 +49,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from validate_xml_rust_spark.colcache import per_context
-
 from validate_xml_rust_spark.operators.validate import ValidationResult, validate
 from validate_xml_rust_spark.specs import Constraint, SpecRegistry
 

@@ -2694,7 +2694,9 @@ def q_exit_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     # bigint on both sides — the driver's value hash canonicalizes int32
     # and int64 differently (CLAUDE.md gate-typing rule)
-    return spark.createDataFrame(rows, "scenario string, exit_code long")
+    return local_frame(spark, "scenario string, exit_code long", {
+        "scenario": [s for s, _ in rows], "exit_code": [c for _, c in rows],
+    })
 
 
 ORACLE_EXIT_CODES = """
@@ -3355,13 +3357,11 @@ def q_curate_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, spark, benchmark=bench, near_dup_threshold=None,
         max_repetition=0.2, sample_rate=0.25,
     )
-    rows = [
-        (s["step"], s["rows_in"], s["rows_out"], s["dropped"])
-        for s in res.report["steps"]
-    ]
+    steps = res.report["steps"]
     res.release()
-    return spark.createDataFrame(
-        rows, "step string, rows_in long, rows_out long, dropped long"
+    return local_frame(
+        spark, "step string, rows_in long, rows_out long, dropped long",
+        {k: [s[k] for s in steps] for k in ("step", "rows_in", "rows_out", "dropped")},
     )
 
 

@@ -427,7 +427,9 @@ def compiled_spec(spec_id: str, constraints: tuple[str, ...]) -> CompiledSpec:
     """``compile_spec`` of the spec whose content is ``constraints``
     (``Constraint.to_json()`` strings): the result depends on the
     content alone, so a registry mutated in place never reuses a stale
-    compile."""
+    compile. A ``pandas_check`` names its checker, so a checker
+    registered again under the same name takes effect after
+    ``colcache.clear()``."""
     return compile_spec(spec_from_dict(
         {"spec_id": spec_id, "constraints": [json.loads(c) for c in constraints]}
     ))
