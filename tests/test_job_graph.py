@@ -1,8 +1,9 @@
 """Repeated runs in one session repeat their Spark work exactly: each
 near-dedup operator runs the same stages and shuffles the same records
 every time (no racing cache fills), leaves only its result's blocks behind,
-runs its shingle / winnowing UDF once per document, and a warm curate run
-reuses the generated classes of the first instead of recompiling them."""
+runs its shingle / winnowing UDF once per document, and a warm curate or
+validate_full run reuses the memoized Columns and generated classes of the
+first instead of rebuilding them."""
 
 from __future__ import annotations
 
