@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from validate_xml_rust_spark import genlog
 from validate_xml_rust_spark.colcache import per_context
-from validate_xml_rust_spark.session import local_frame
 from validate_xml_rust_spark.functions.texthash import (
     hamming64,
     jaccard,
@@ -39,6 +38,7 @@ from validate_xml_rust_spark.functions.texthash import (
     shingles_with_signature,
     simhash64,
 )
+from validate_xml_rust_spark.session import local_frame
 
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
