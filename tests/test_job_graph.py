@@ -174,12 +174,13 @@ def test_warm_curate_run_compiles_almost_nothing(spark, tmp_path):
 
 def test_warm_curate_stays_within_py4j_and_job_budgets(spark, tmp_path, monkeypatch):
     """A warm dolma curate() reuses its memoized rule Columns and takes its
-    step counts from observations on the checkpoint passes: at most 3,000
+    step counts from observations on the checkpoint passes: at most 1,400
     py4j round trips (a counting hook on the gateway client's
     ``send_command``) and 25 Spark jobs (status-store delta) over 300
-    prose docs. Measured 2,160-2,410 calls and 20 jobs; rebuilding every
-    rule expression and counting with separate jobs took ~7,200 calls and
-    28 jobs."""
+    prose docs. Measured 1,055-1,160 calls and 20 jobs; with the dedup
+    operators rebuilding their Columns it took 2,160-2,410 calls, and
+    rebuilding every rule expression and counting with separate jobs
+    ~7,200 calls and 28 jobs."""
     from validate_xml_rust_spark.pipeline import curate, preset_kwargs
     from validate_xml_rust_spark.sources.corpus import prose_documents
 
@@ -206,7 +207,7 @@ def test_warm_curate_stays_within_py4j_and_job_budgets(spark, tmp_path, monkeypa
     monkeypatch.undo()
     jobs = _status_delta(spark, mark)["jobs"]
     assert report["steps"][-1]["rows_out"] > 0
-    assert calls[0] <= 3000, calls[0]
+    assert calls[0] <= 1400, calls[0]
     assert jobs <= 25, jobs
 
 

@@ -94,15 +94,22 @@ def exact_dedup(
         fp, fcol, drop_cols = fingerprint(df, text_col), "fingerprint", ["fingerprint", "__keep"]
     else:
         fp, fcol, drop_cols = df, fingerprint_col, ["__keep"]
-    keep = fp.filter(F.col(fcol).isNotNull()).groupBy(fcol).agg(
-        F.min(id_col).alias("__keep")
-    )
-    survive = (
+    has_fp, keeper, survive = _exact_dedup_columns(id_col, fcol)
+    keep = fp.filter(has_fp).groupBy(fcol).agg(keeper)
+    return fp.join(keep, fcol, "left").filter(survive).drop(*drop_cols)
+
+
+@per_context
+def _exact_dedup_columns(id_col: str, fcol: str) -> tuple[Column, Column, Column]:
+    """exact_dedup's has-fingerprint filter, keeper aggregate and survivor
+    filter."""
+    return (
+        F.col(fcol).isNotNull(),
+        F.min(id_col).alias("__keep"),
         F.col(fcol).isNull()
         | (F.col(id_col) == F.col("__keep"))
-        | (F.col(id_col).isNull() & F.col("__keep").isNull())
+        | (F.col(id_col).isNull() & F.col("__keep").isNull()),
     )
-    return fp.join(keep, fcol, "left").filter(survive).drop(*drop_cols)
 
 
 def dedup_weights(
@@ -142,15 +149,12 @@ def _candidates(
 ) -> DataFrame:
     """Candidate pairs ``(id_a, id_b)`` from a materialized ``(__id, __sig)``
     signature frame, which the plan reads twice (bucket widths + pairs)."""
-    banded = sig.select(
-        "__id", F.explode(lsh_band_keys("__sig", bands, rows_per_band)).alias("b")
-    ).select("__id", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
+    c = _candidate_columns(bands, rows_per_band, max_bucket)
+    banded = sig.select("__id", c["explode"]).select("__id", *c["band_key"])
 
     # Defensive cap on degenerate buckets (near-empty shingle sets collide).
-    sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__bw"))
-    banded = banded.join(
-        sizes.filter(F.col("__bw") <= max_bucket).drop("__bw"), ["band", "key"]
-    )
+    sizes = banded.groupBy("band", "key").agg(c["width"])
+    banded = banded.join(sizes.filter(c["capped"]).drop("__bw"), ["band", "key"])
 
     # Pair generation per bucket via collect_list + narrow explode (r7,
     # guide §2.4): the capped join's output is already partitioned on
@@ -162,19 +166,25 @@ def _candidates(
     # in a streaming explode instead of a join. Identical pair set
     # (id_a < id_b within a shared bucket, distinct across bands) —
     # equality asserted against the self-join form at 100k docs.
-    buckets = banded.groupBy("band", "key").agg(
-        F.collect_list("__id").alias("__ids")
-    )
-    return (
-        buckets.select(F.explode("__ids").alias("id_a"), F.col("__ids"))
-        .select(
-            "id_a",
-            F.explode(
-                F.filter(F.col("__ids"), lambda x: x > F.col("id_a"))
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
+    buckets = banded.groupBy("band", "key").agg(c["ids"])
+    return buckets.select(c["id_a"], "__ids").select("id_a", c["id_b"]).distinct()
+
+
+@per_context
+def _candidate_columns(bands: int, rows_per_band: int, max_bucket: int) -> dict:
+    """_candidates' Columns: the band explode and its fields, the bucket
+    width and its cap, the per-bucket id list and the two pair explodes."""
+    return {
+        "explode": F.explode(lsh_band_keys("__sig", bands, rows_per_band)).alias("b"),
+        "band_key": (F.col("b.band").alias("band"), F.col("b.key").alias("key")),
+        "width": F.count(F.lit(1)).alias("__bw"),
+        "capped": F.col("__bw") <= max_bucket,
+        "ids": F.collect_list("__id").alias("__ids"),
+        "id_a": F.explode("__ids").alias("id_a"),
+        "id_b": F.explode(F.filter(F.col("__ids"), lambda x: x > F.col("id_a"))).alias(
+            "id_b"
+        ),
+    }
 
 
 def _shingle_signature_checkpoint(
@@ -189,20 +199,20 @@ def _shingle_signature_checkpoint(
     document once (shingles_with_signature)."""
     from validate_xml_rust_spark.ckpt import eager_checkpoint
 
-    return eager_checkpoint(
-        df.select(
-            F.col(id_col).alias("__sid"),
-            _shingle_signature(text_col, shingle_k, num_perm),
-        ).select(
-            "__sid", F.col("__ss.sh").alias("__sh"), F.col("__ss.sig").alias("__sig")
-        )
-    )
+    pair, split = _shingle_signature_columns(id_col, text_col, shingle_k, num_perm)
+    return eager_checkpoint(df.select(*pair).select("__sid", *split))
 
 
 @per_context
-def _shingle_signature(text_col: str, shingle_k: int, num_perm: int) -> Column:
-    return shingles_with_signature(shingle_hashes(text_col, shingle_k), num_perm).alias(
-        "__ss"
+def _shingle_signature_columns(
+    id_col: str, text_col: str, shingle_k: int, num_perm: int
+) -> tuple[tuple[Column, Column], tuple[Column, Column]]:
+    """``(__sid, __ss)`` from one UDF call, then ``__ss`` split into
+    ``(__sh, __sig)``."""
+    ss = shingles_with_signature(shingle_hashes(text_col, shingle_k), num_perm)
+    return (
+        (F.col(id_col).alias("__sid"), ss.alias("__ss")),
+        (F.col("__ss.sh").alias("__sh"), F.col("__ss.sig").alias("__sig")),
     )
 
 
@@ -210,16 +220,25 @@ def _verified_pairs(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFr
     """``(id_a, id_b, jaccard)``: the candidate pairs whose exact Jaccard
     over the ``(__sid, __sh)`` shingle sets, rounded to 6 dp, reaches
     ``threshold``."""
-
-    def side(s: str) -> DataFrame:
-        return sh.select(F.col("__sid").alias(f"id_{s}"), F.col("__sh").alias(f"sh_{s}"))
-
+    side_a, side_b, score, passes = _verify_columns(threshold)
     return (
-        cands.join(side("a"), "id_a")
-        .join(side("b"), "id_b")
-        .withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
+        cands.join(sh.select(*side_a), "id_a")
+        .join(sh.select(*side_b), "id_b")
+        .withColumn("jaccard", score)
+        .filter(passes)
         .select("id_a", "id_b", "jaccard")
+    )
+
+
+@per_context
+def _verify_columns(threshold: float) -> tuple:
+    """_verified_pairs' Columns: the shingle table renamed to each pair
+    side, the rounded Jaccard and its threshold filter."""
+    return (
+        (F.col("__sid").alias("id_a"), F.col("__sh").alias("sh_a")),
+        (F.col("__sid").alias("id_b"), F.col("__sh").alias("sh_b")),
+        F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6),
+        F.col("jaccard") >= threshold,
     )
 
 
@@ -248,17 +267,26 @@ def minhash_near_duplicates(
     # down to the ids in some pair BEFORE the two verify joins, which then
     # shuffle only the candidates' arrays (1/3 of the ids and 2/3 fewer
     # array bytes on the 100k prose corpus). Identical output.
-    sig = ck.select(F.col("__sid").alias("__id"), "__sig")
+    sig_id, cid_a, cid_b, in_pair_on = _pair_id_columns()
+    sig = ck.select(sig_id, "__sig")
     cands, cand_ids = eager_checkpoint(_candidates(sig, bands, num_perm // bands))
-    in_pair = (
-        cands.select(F.col("id_a").alias("__cid"))
-        .unionByName(cands.select(F.col("id_b").alias("__cid")))
-        .distinct()
-    )
-    sh = sh.join(F.broadcast(in_pair), sh["__sid"] == F.col("__cid"), "left_semi")
+    in_pair = cands.select(cid_a).unionByName(cands.select(cid_b)).distinct()
+    sh = sh.join(F.broadcast(in_pair), in_pair_on, "left_semi")
     out, _ = eager_checkpoint(_verified_pairs(cands, sh, threshold))
     release_blocks(df.sparkSession.sparkContext, ck_ids | cand_ids)
     return out
+
+
+@per_context
+def _pair_id_columns() -> tuple[Column, Column, Column, Column]:
+    """minhash_near_duplicates' signature id, both pair ids as ``__cid`` and
+    the shingle table's semi-join condition on them."""
+    return (
+        F.col("__sid").alias("__id"),
+        F.col("id_a").alias("__cid"),
+        F.col("id_b").alias("__cid"),
+        F.col("__sid") == F.col("__cid"),
+    )
 
 
 def simhash_near_duplicates(
@@ -338,13 +366,8 @@ def connected_components(
 
     from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
 
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-    )
+    c = _component_columns()
+    edges = pairs.select(*c["forward"]).unionByName(pairs.select(*c["backward"])).distinct()
     driver_max = int(os.environ.get("VXRS_CC_DRIVER_MAX_EDGES", str(1 << 19)))
     # one bounded collect: a pair table longer than the gate goes distributed
     head = pairs.select("id_a", "id_b").limit(driver_max + 1).collect()
@@ -384,9 +407,7 @@ def connected_components(
     sc = pairs.sparkSession.sparkContext
     edges, edge_ids = eager_checkpoint(edges)
     labels, ckpt_ids = eager_checkpoint(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
+        edges.select(c["src_id"]).distinct().withColumn("component", c["id"])
     )
     # The sum-based convergence test (see loop) needs a numeric label
     # domain; string/other id types keep the join-based probe (a DECIMAL
@@ -398,13 +419,7 @@ def connected_components(
         labels.schema["component"].dataType,
         (ByteType, ShortType, IntegerType, LongType),
     )
-    label_sum = (
-        labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if numeric_ids
-        else None
-    )
+    label_sum = labels.agg(c["label_sum"]).collect()[0]["s"] if numeric_ids else None
     # Iteration hygiene for web-scale pair tables: every round REPLACES the
     # labels frame with an eager localCheckpoint — the round is materialized
     # anyway (the convergence count), and with pointer jumping the logical
@@ -416,33 +431,18 @@ def connected_components(
         neighbor = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
-            .agg(F.min("component").alias("nbr"))
+            .agg(c["nbr"])
         )
-        propagated = (
-            labels.join(neighbor, labels["id"] == neighbor["src"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr"), F.col("component"))
-                ).alias("component"),
-            )
+        propagated = labels.join(neighbor, labels["id"] == neighbor["src"], "left").select(
+            "id", c["propagate"]
         )
         # pointer jumping: component ← component's component (labels only
         # ever hold existing node ids, so the self-join always resolves);
         # this is what turns O(diameter) chains into O(log diameter)
-        hop = propagated.select(
-            F.col("id").alias("__cid"), F.col("component").alias("__ccomp")
-        )
-        updated = (
-            propagated.join(hop, propagated["component"] == hop["__cid"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("__ccomp"), F.col("component")),
-                ).alias("component"),
-            )
-        )
+        hop = propagated.select(*c["hop"])
+        updated = propagated.join(
+            hop, propagated["component"] == hop["__cid"], "left"
+        ).select("id", c["jump"])
         new_labels, new_ckpt_ids = eager_checkpoint(updated)
         if numeric_ids:
             # convergence test WITHOUT a join (r7): labels are MONOTONE —
@@ -451,13 +451,7 @@ def connected_components(
             # block-scan DECIMAL aggregate (exact, overflow-free) over
             # the new checkpoint replaces the u⋈l inequality probe — one
             # fewer shuffle join per round, same fixpoint (guide §2.4).
-            new_sum = (
-                new_labels.agg(
-                    F.sum(
-                        F.col("component").cast("decimal(38,0)")
-                    ).alias("s")
-                ).collect()[0]["s"]
-            )
+            new_sum = new_labels.agg(c["label_sum"]).collect()[0]["s"]
             changed = 0 if new_sum == label_sum else 1
             label_sum = new_sum
         else:
@@ -482,6 +476,25 @@ def connected_components(
             break
     release_blocks(sc, edge_ids)
     return labels
+
+
+@per_context
+def _component_columns() -> dict:
+    """connected_components' Columns: the pair table as forward and
+    backward edges, the initial labels, the exact label sum, and each
+    round's neighbor minimum, propagation and pointer jump."""
+    comp = F.col("component")
+    return {
+        "forward": (F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        "backward": (F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+        "src_id": F.col("src").alias("id"),
+        "id": F.col("id"),
+        "label_sum": F.sum(comp.cast("decimal(38,0)")).alias("s"),
+        "nbr": F.min("component").alias("nbr"),
+        "propagate": F.least(comp, F.coalesce(F.col("nbr"), comp)).alias("component"),
+        "hop": (F.col("id").alias("__cid"), comp.alias("__ccomp")),
+        "jump": F.least(comp, F.coalesce(F.col("__ccomp"), comp)).alias("component"),
+    }
 
 
 def quality_keepers(
@@ -565,10 +578,9 @@ def near_dedup(
         df, id_col, text_col, threshold=threshold, **minhash_kwargs
     )
     comp = connected_components(pairs)
+    c = _near_dedup_columns(id_col, keeper_score_col)
     if keeper_score_col is None:
-        drop_frame = comp.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias("__drop")
-        )
+        drop_frame = comp.filter(c["dup"]).select(c["drop"])
     else:
         # quality-aware keeper: slice the corpus to (id, score) for dup
         # ids only (one column-pruned pass through a broadcast semi
@@ -576,15 +588,10 @@ def near_dedup(
         # multiple times, and without the checkpoint each read would
         # re-scan the corpus
         sc_small, sc_ids = eager_checkpoint(
-            df.select(
-                F.col(id_col).alias("id"),
-                F.col(keeper_score_col).alias("__kscore"),
-            ).join(F.broadcast(comp.select("id")), "id", "left_semi")
+            df.select(*c["score"]).join(F.broadcast(comp.select("id")), "id", "left_semi")
         )
         keep = quality_keepers(comp, sc_small, "id", "__kscore")
-        drop_frame = keep.filter(F.col("id") != F.col("keeper")).select(
-            F.col("id").alias("__drop")
-        )
+        drop_frame = keep.filter(c["not_keeper"]).select(c["drop"])
     # materialize the (tiny — dup ids only) drop set, then release the
     # pairs and final-label checkpoints: the caller's anti-join references
     # only the drop blocks, so nothing near-dup-sized outlives the call
@@ -596,7 +603,22 @@ def near_dedup(
     release_blocks(df.sparkSession.sparkContext, block_ids_of(pairs) | block_ids_of(comp))
     if broadcast_drop:
         drop = F.broadcast(drop)
-    return df.join(drop, df[id_col] == F.col("__drop"), "left_anti")
+    return df.join(drop, c["dropped"], "left_anti")
+
+
+@per_context
+def _near_dedup_columns(id_col: str, keeper_score_col: str | None) -> dict:
+    """near_dedup's Columns: the non-root and non-keeper member filters,
+    the drop id, the keeper-score slice and the anti-join condition."""
+    return {
+        "dup": F.col("id") != F.col("component"),
+        "not_keeper": F.col("id") != F.col("keeper"),
+        "drop": F.col("id").alias("__drop"),
+        "score": ()
+        if keeper_score_col is None
+        else (F.col(id_col).alias("id"), F.col(keeper_score_col).alias("__kscore")),
+        "dropped": F.col(id_col) == F.col("__drop"),
+    }
 
 
 def leakage_safe_split(

@@ -40,6 +40,10 @@ def get_spark(
     ~cores for local" rule; on a real cluster this would be sized to
     2-3x total executor cores. The driver heap is ``$SPARK_DRIVER_MEMORY``
     else half the host's RAM (``_default_driver_memory``).
+
+    Python workers fork from ``validate_xml_rust_spark.pydaemon``, so the
+    package must be importable on the worker path (the driver's working
+    directory or ``PYTHONPATH``), as every engine UDF already needs.
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -72,6 +76,9 @@ def get_spark(
         # entries (0.3-0.7 s), 0 at 1000 (5 once in 4 iterations); warm
         # validate iterations compile 0-6 at either size.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Python workers fork from pydaemon: a task stops re-reading every
+        # zip and jar on the worker path (125-205 ms per task on 3.11).
+        .config("spark.python.daemon.module", "validate_xml_rust_spark.pydaemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
