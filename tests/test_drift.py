@@ -272,3 +272,61 @@ def test_vocab_drift_detects_vocabulary_shift(spark):
     # output schema matches the drift-suite contract
     cols = set(vocab_drift(base).columns)
     assert {"partition_id", "column_name", "test", "statistic", "n"} <= cols
+
+
+def _persisted_ids(spark) -> set:
+    return {
+        int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
+def test_vocab_drift_leaves_nothing_persisted(spark):
+    """The (partition × bucket) counts are collected and finished on the
+    driver: a call without ``handles`` strands no block set, and a
+    ``handles`` dict comes back empty."""
+    from validate_xml_rust_spark.operators.drift import vocab_drift
+
+    df = spark.createDataFrame(
+        [(i, i % 3, f"alpha beta gamma {i % 11}") for i in range(90)],
+        "doc_id long, partition_id int, text string",
+    )
+    before = _persisted_ids(spark)
+    vocab_drift(df, n_buckets=16).collect()
+    handles: dict = {}
+    vocab_drift(df, n_buckets=16, handles=handles).collect()
+    assert _persisted_ids(spark) == before
+    assert handles == {}
+
+
+def test_embedding_drift_keeps_a_null_partition(spark):
+    """A NULL partition id is its own group next to the others, as in the
+    all-Spark PSI plan, not a sort error on the driver."""
+    from validate_xml_rust_spark.operators.drift import embedding_drift_check
+
+    anchors = np.array([[10.0, 0.0], [0.0, 10.0]])
+    rows = [(0, [10.0, 0.1])] * 30 + [(0, [0.1, 10.0])] * 30
+    rows += [(None, [10.0, 0.1])] * 25
+    df = spark.createDataFrame(rows, "partition_id int, embedding array<double>")
+    out = {r["partition_id"]: r for r in embedding_drift_check(df, "embedding", anchors).collect()}
+    assert set(out) == {0, None}
+    assert out[None]["n"] == 25 and out[0]["n"] == 60
+
+
+def test_psi_numeric_self_baseline_matches_two_pass(spark):
+    """The one-pass self-baseline gives the rows of baselining the bins
+    first and running the all-Spark PSI plan over them."""
+    from validate_xml_rust_spark.operators.drift import (
+        numeric_bin_col,
+        psi_drift_check,
+        psi_numeric_drift_check,
+    )
+
+    rows = [(pid, float(v % 100)) for pid in (0, 1) for v in range(200)]
+    rows += [(2, float(v % 100) + 200.0) for v in range(200)] + [(2, None)]
+    d = spark.createDataFrame(rows, "partition_id int, x double")
+    binned = d.withColumn("__bin", numeric_bin_col("x", 0, 400, 10))
+    want = psi_drift_check(
+        binned, "__bin", categorical_baseline(binned, "__bin")
+    ).withColumn("column_name", F.lit("x"))
+    got = psi_numeric_drift_check(d, "x", lo=0, hi=400, n_bins=10)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

@@ -96,6 +96,30 @@ def test_validate_full_drift(spark):
     assert v[0]["constraint_id"] == "cat_drift"  # the SPEC's id, not the derived one
 
 
+def test_validate_full_vocab_drift_holds_no_blocks(spark):
+    """A vocab drift constraint finishes its count table on the driver:
+    the result carries no checkpoint blocks, and nothing stays persisted
+    once its violations are read, before or after release()."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    rows = [
+        (f"https://h/{i}", "h", "en", i % 3,
+         "zorb flux quasar nebula" if i % 3 == 2 else "the quick brown fox")
+        for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, SCHEMA + ", text string")
+    spec = Spec("web-v1", (Constraint("vd", "text", "drift", {"test": "vocab"}),))
+    before = persisted()
+    res = validate_full(df, spark, SpecRegistry().add(spec, route_keys=["en"]))
+    v = res.table_violations.collect()
+    assert [r["url"] for r in v] == ["partition:2"]
+    assert res.ckpt_block_ids == frozenset()
+    assert persisted() == before
+    res.release()
+    assert persisted() == before
+
+
 def test_validate_full_content_mode_scoping(spark):
     rows = [
         ("https://a/1", b'<meta name="spec" content="web-v1"/>', "en", 0),

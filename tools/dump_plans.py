@@ -561,9 +561,9 @@ def main() -> None:
         )
     )
 
-    # 23. Vocabulary drift — token explode (narrow) + ONE map-side-
-    # combined (P × n_buckets) count; baseline + statistic both read the
-    # checkpointed counts (single corpus pass)
+    # 23. Vocabulary drift — the Arrow partial-count pass + ONE map-side-
+    # combined (P × n_buckets) count, collected; baseline + statistic both
+    # read the collected counts (single corpus pass)
     from validate_xml_rust_spark.operators.drift import vocab_drift
 
     vd = vocab_drift(
@@ -575,11 +575,13 @@ def main() -> None:
     out.append(
         section(
             "Vocabulary drift (bucketed token distribution, one corpus pass)",
-            f"Exchanges: {inspect.count_exchanges(vd)} — the statistic "
-            "reads the CHECKPOINTED (P × n_buckets) counts (LogicalRDD "
-            "root), so the corpus-sized token explode ran exactly once "
-            "for baseline AND statistic; the visible plan is the tiny "
-            "grid expansion over the aggregated frame.",
+            f"Exchanges: {inspect.count_exchanges(vd)} — the (P × "
+            "n_buckets) counts were COLLECTED and folded on the driver, "
+            "so the statistic reads them back as a LocalRelation / "
+            "LocalTableScan root: the corpus-sized token count ran "
+            "exactly once for baseline AND statistic, nothing stays "
+            "persisted, and the visible plan is the tiny grid expansion "
+            "over the collected counts.",
             inspect.physical_plan(vd)[:3000],
         )
     )

@@ -7,6 +7,11 @@ Architecture (scale-first):
   computed once by ``numeric_baseline``/``categorical_baseline`` — one
   aggregation each) and is closed over by the grouped-map function — i.e.
   broadcast in the task closure, never joined row-wise.
+- A check whose category is costly to derive (vocabulary buckets,
+  embedding clusters, self-baselined numeric bins) counts
+  (partition × category) in one pass and finishes the ≤ P·K-row table
+  on the driver (``_psi_collected``): baseline and statistic read the
+  same collected rows.
 - The *check* is a grouped-map ``applyInPandas`` over ``partition_id`` —
   the UDAF analog (SURVEY.md §2.8). Each group sees only its partition's
   column values; Arrow batches in, one stats row out. This is the only
@@ -409,13 +414,23 @@ def psi_numeric_drift_check(
     ``lo``/``hi`` come from the baseline snapshot's profile (fixed bin
     edges — NEVER recompute them per run, or the comparison silently
     re-anchors). ``baseline_counts``: bin→count from the reference
-    snapshot; None = self-baseline against the whole frame.
+    snapshot; None = self-baseline against the whole frame, summed from
+    the one (partition × bin) count pass that also feeds the statistic.
     """
-    binned = df.withColumn("__bin", numeric_bin_col(column, lo, hi, n_bins))
+    bins = numeric_bin_col(column, lo, hi, n_bins)
     if baseline_counts is None:
-        baseline_counts = categorical_baseline(binned, "__bin")
+        counts = (
+            df.filter(bins.isNotNull())
+            .groupBy(
+                F.col(partition_col).cast("int").alias("__pid"),
+                bins.alias("__cat"),
+            )
+            .agg(F.count(F.lit(1)).alias("__n"))
+        )
+        return _psi_collected(counts, column, None, **psi_kw)
     out = psi_drift_check(
-        binned, "__bin", baseline_counts, partition_col=partition_col, **psi_kw
+        df.withColumn("__bin", bins), "__bin", baseline_counts,
+        partition_col=partition_col, **psi_kw,
     )
     return out.withColumn("column_name", F.lit(column))
 
@@ -444,40 +459,50 @@ def embedding_drift_check(
     NULL vectors are excluded (consistent with the scalar checks' NULL
     rule — a missing embedding is missing data, not a cluster). The
     expensive Arrow argmin runs ONCE: the (partition × cluster) counts
-    aggregate first, and both the self-baseline and the statistic read
-    the ≤ P·K-row counts frame (an eager collect of the tiny aggregate),
+    aggregate first and are finished on the driver (``_psi_collected``),
     never rescanning the raw vectors.
     """
     from validate_xml_rust_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(
         df.filter(F.col(vec_col).isNotNull()), anchors, vec_col=vec_col
-    ).withColumn("cluster", F.col("cluster_id").cast("string"))
-    counts_rows = (
-        assigned.groupBy(
-            F.col(partition_col).cast("int").alias("__pid"),
-            F.col("cluster").alias("__cat"),
-        )
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .collect()  # ≤ partitions × n_anchors rows — the UDF scan runs once
     )
+    counts = assigned.groupBy(
+        F.col(partition_col).cast("int").alias("__pid"),
+        F.col("cluster_id").cast("string").alias("__cat"),
+    ).agg(F.count(F.lit(1)).alias("__n"))
+    return _psi_collected(counts, "cluster", baseline_counts, **psi_kw)
+
+
+def _psi_collected(
+    counts: DataFrame,
+    column: str,
+    baseline_counts: dict[str, int] | None,
+    **psi_kw,
+) -> DataFrame:
+    """``psi_from_counts`` over a ``(__pid, __cat, __n)`` count table that
+    is small by construction (≤ P·K rows), finished on the driver: the
+    rows are collected once, summed into the baseline when none is
+    given, and categories outside the baseline are folded into
+    ``__OTHER__`` (summing, so ``map_from_entries`` never sees a
+    duplicate key); the statistic then runs over a ``local_frame`` of
+    the folded rows. The pass behind ``counts`` runs once and leaves
+    nothing persisted. A NULL partition stays its own group."""
+    rows = counts.select("__pid", "__cat", "__n").collect()
     if baseline_counts is None:
         baseline_counts = {}
-        for r in counts_rows:
-            baseline_counts[r["__cat"]] = baseline_counts.get(r["__cat"], 0) + r["__n"]
-    # fold clusters outside the baseline into __OTHER__ (summing, so the
-    # downstream map_from_entries never sees duplicate keys)
-    folded: dict[tuple[int, str], int] = {}
-    for r in counts_rows:
-        cat = r["__cat"] if r["__cat"] in baseline_counts else "__OTHER__"
-        folded[(r["__pid"], cat)] = folded.get((r["__pid"], cat), 0) + r["__n"]
-    keys = sorted(folded)
-    counts = local_frame(
-        assigned.sparkSession, "__pid int, __cat string, __n long",
-        {"__pid": [p for p, _ in keys], "__cat": [c for _, c in keys],
-         "__n": [folded[k] for k in keys]},
+        for _, cat, n in rows:
+            baseline_counts[cat] = baseline_counts.get(cat, 0) + n
+    folded: dict[tuple, int] = {}
+    for pid, cat, n in rows:
+        k = (pid, cat if cat in baseline_counts else "__OTHER__")
+        folded[k] = folded.get(k, 0) + n
+    local = local_frame(
+        counts.sparkSession, "__pid int, __cat string, __n long",
+        {"__pid": [p for p, _ in folded], "__cat": [c for _, c in folded],
+         "__n": list(folded.values())},
     )
-    return psi_from_counts(counts, "cluster", baseline_counts, **psi_kw)
+    return psi_from_counts(local, column, baseline_counts, **psi_kw)
 
 
 def drift_violations(drift_df: DataFrame) -> DataFrame:
@@ -574,46 +599,32 @@ def vocab_drift(
     ``baseline_df=None`` baselines against this corpus's own global
     distribution; pass the prior snapshot's frame for corpus-vs-corpus.
 
-    Scale shape: ONE corpus pass — the (P × n_buckets) count aggregation
-    is eager-checkpointed (≤ P·n_buckets rows), and with
-    ``baseline_df=None`` the global baseline is summed from those same
-    counts instead of re-exploding the corpus (measured 9.8 s → 5.8 s at
-    1M pages); an explicit baseline corpus costs its own single pass.
-    Pass ``handles`` to receive ``ckpt_block_ids`` for release once the
-    result has materialized downstream."""
-    from validate_xml_rust_spark.ckpt import eager_checkpoint
-
+    Scale shape: ONE corpus pass — the (P × n_buckets) token counts
+    (≤ P·n_buckets rows) are collected and finished on the driver
+    (``_psi_collected``); with ``baseline_df=None`` the global baseline
+    is summed from those same rows instead of re-exploding the corpus,
+    and an explicit baseline corpus costs one pass of the same kernel.
+    ``handles`` is accepted for callers written against the older
+    checkpointing version and left empty: nothing stays persisted, so
+    there is nothing to release."""
     # Token counting runs in the Arrow partial-count kernel (one
     # mapInPandas pass + an exact integer sum); `vocab_bucket_counts`
     # remains the exploded reference twin, parity-tested, and the shape
     # the streaming vocab gate consumes.
     text, key, renamed = _vocab_columns(text_col, partition_col)
-    cnts = gram_bucket_counts(
-        df, text, partial(word_grams, bigrams=False), n_buckets, seed, key=key,
-    ).select(*renamed)
-    cnts, block_ids = eager_checkpoint(cnts)
-    if handles is not None:
-        handles["ckpt_block_ids"] = block_ids
-    if baseline_df is None:
+    grams = partial(word_grams, bigrams=False)
+    baseline = None
+    if baseline_df is not None:
         baseline = {
-            r["__cat"]: r["n"]
-            for r in cnts.groupBy("__cat")
-            .agg(F.sum("__n").alias("n"))
-            .collect()
+            str(b): n
+            for b, n in gram_bucket_counts(
+                baseline_df, text, grams, n_buckets, seed
+            ).collect()
         }
-    else:
-        baseline = categorical_baseline(
-            vocab_bucket_counts(
-                baseline_df, text_col, None, n_buckets=n_buckets, seed=seed
-            ),
-            "vocab",
-        )
-        # categories outside the baseline fold to __OTHER__
-        # (psi_from_counts' contract; self-baseline is a subset already)
-        cnts = cnts.withColumn(
-            "__cat", _fold_other("`__cat`", baseline)
-        ).groupBy("__pid", "__cat").agg(F.sum("__n").alias("__n"))
-    return psi_from_counts(
+    cnts = gram_bucket_counts(
+        df, text, grams, n_buckets, seed, key=key,
+    ).select(*renamed)
+    return _psi_collected(
         cnts, "vocab", baseline,
         threshold=threshold, min_rows=min_rows, stat=stat,
     )

@@ -257,19 +257,12 @@ def _table_violations_for(
             # no ctx.baselines entry is declared
             from validate_xml_rust_spark.operators.drift import vocab_drift
 
-            # thread the operator's count-checkpoint blocks into the
-            # result's release set — a long-lived validation service
-            # must not strand one block set per run (repo ckpt rule)
-            vd_handles: dict = {}
             d = vocab_drift(
                 df, text_col=c.column, partition_col=partition_col,
                 n_buckets=int(c.params.get("n_buckets", 256)),
                 stat=c.params.get("stat", "js"),
                 threshold=c.params.get("threshold", 0.1),
-                handles=vd_handles,
             )
-            if ckpt_ids is not None:
-                ckpt_ids |= vd_handles.get("ckpt_block_ids", frozenset())
         elif test == "ks":
             baseline = ctx.baselines[c.column]
             d = ks_drift_check(df, c.column, baseline, partition_col, alpha)

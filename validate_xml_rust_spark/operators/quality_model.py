@@ -25,8 +25,8 @@ Scale shape (the 100 TB story):
   (``score_quality_expr``: explode → broadcast join → DECIMAL-exact sum)
   exists for the DuckDB oracle gate and cross-checks the UDF in tests.
 
-Tokenization matches the engine's established rule everywhere (JVM
-``split(lower(trim(text)), '[^a-z0-9]+')``, Python ``re.split``, DuckDB
+Tokenization is the engine's one word tokenizer everywhere (JVM
+``texthash.tokens``, its Python twin ``grambuckets.word_tokens``, DuckDB
 ``regexp_split_to_array``) — identical on ASCII; exotic-unicode lowering
 differences are out of scope for the synthetic corpora.
 
@@ -39,7 +39,6 @@ identical).
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 import numpy as np
@@ -47,27 +46,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from validate_xml_rust_spark.functions.grambuckets import word_tokens
+from validate_xml_rust_spark.functions.texthash import tokens
 from validate_xml_rust_spark.session import local_frame
 
-TOKEN_SPLIT = r"[^a-z0-9]+"
 BIAS_TOKEN = "__bias__"
 WEIGHTS_SCHEMA = "token string, weight decimal(18,9)"
-
-
-def tokens_col(text_col: str) -> F.Column:
-    """The engine's standard word tokenizer as a Column expression."""
-    return F.filter(
-        F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), TOKEN_SPLIT),
-        lambda x: F.length(x) > 0,
-    )
-
-
-def _tokenize_py(text) -> list[str]:
-    """Python twin of tokens_col — must stay in lockstep (ASCII-identical).
-    Non-str (None / NaN from an all-null Arrow batch) → no tokens."""
-    if not isinstance(text, str):
-        return []
-    return [t for t in re.split(TOKEN_SPLIT, text.strip().lower()) if t]
 
 
 @dataclass(frozen=True)
@@ -80,10 +64,10 @@ class QualityModel:
     bias: float
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        tokens = sorted(self.weights)
+        toks = sorted(self.weights)
         return local_frame(spark, "token string, weight double", {
-            "token": [BIAS_TOKEN, *tokens],
-            "weight": [round(self.bias, 9), *(round(self.weights[t], 9) for t in tokens)],
+            "token": [BIAS_TOKEN, *toks],
+            "weight": [round(self.bias, 9), *(round(self.weights[t], 9) for t in toks)],
         }).select(
             "token", F.col("weight").cast("decimal(18,9)").alias("weight")
         )
@@ -111,7 +95,7 @@ def train_quality_model(
     docstring for the two bounded corpus passes."""
     base = df.select(
         F.col(label_col).cast("double").alias("__y"),
-        tokens_col(text_col).alias("__t"),
+        tokens(F.col(text_col)).alias("__t"),
         F.md5(F.coalesce(F.col(text_col), F.lit("")).cast("binary")).alias("__tk"),
     )
     # pass 1: document-frequency vocabulary (top-k over distinct tokens)
@@ -175,7 +159,8 @@ def score_quality(
         out = np.empty(len(texts), dtype=np.float64)
         for k, txt in enumerate(texts):
             z = bias
-            for t in _tokenize_py(txt):
+            # non-str (None / NaN from an all-null Arrow batch): no tokens
+            for t in word_tokens(txt.lower()) if isinstance(txt, str) else ():
                 z += weights.get(t, 0.0)
             out[k] = z
         return pd.Series(out)
@@ -204,7 +189,7 @@ def score_quality_expr(
     )
     bias_dec = bias[0][0] if bias else 0
     exploded = df.select(
-        F.col(id_col), F.explode(tokens_col(text_col)).alias("token")
+        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token")
     )
     sums = (
         exploded.join(F.broadcast(w), "token")

@@ -38,11 +38,8 @@ def _partial(op: str, col: str | None, alias: str):
     if op == "max":
         return F.max(col).alias(alias)
     if op == "approx_distinct":
-        # partial = per-salt HLL registers are not exposed; use the sketch
-        # agg when available so phase 2 merges losslessly
-        if hasattr(F, "hll_sketch_agg"):
-            return F.hll_sketch_agg(F.col(col).cast("string")).alias(alias)
-        return F.approx_count_distinct(col).alias(alias)
+        # per-salt HLL sketches, so phase 2 merges losslessly
+        return F.hll_sketch_agg(F.col(col).cast("string")).alias(alias)
     raise ValueError(f"unsupported salted agg op: {op}")
 
 
@@ -56,9 +53,7 @@ def _merge(op: str, alias: str):
     if op == "max":
         return F.max(alias).alias(alias)
     if op == "approx_distinct":
-        if hasattr(F, "hll_sketch_agg"):
-            return F.hll_sketch_estimate(F.hll_union_agg(alias)).alias(alias)
-        return F.max(alias).alias(alias)  # lossy fallback (upper-ish bound)
+        return F.hll_sketch_estimate(F.hll_union_agg(alias)).alias(alias)
     raise ValueError(f"unsupported salted agg op: {op}")
 
 

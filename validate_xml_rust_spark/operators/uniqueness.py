@@ -10,7 +10,8 @@ two-phase aggregation bounds any single task:
            — partial counts, each salt bucket ≤ 1/n_salts of the hot key
   phase 2: groupBy(key).sum(partial) — tiny input (≤ n_salts rows per key)
 
-AQE coalesces the (many, small) phase-2 partitions. Note AQE's skew-join
+Both phases are ``skew.salted_agg``'s count. AQE coalesces the (many,
+small) phase-2 partitions. Note AQE's skew-join
 splitting does NOT salt aggregations — this operator is why the engine
 salts by hand (SURVEY.md §4).
 """
@@ -25,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from validate_xml_rust_spark.colcache import per_context
+from validate_xml_rust_spark.operators.skew import salted_agg
 
 # two independent 64-bit key hashes (JVM-side xxhash64) seed the k Bloom
 # probe positions via double hashing: idx_i = h1 + i*h2 (mod m)
@@ -203,10 +205,9 @@ def duplicate_keys(
     if bloom:
         df = bloom_suspects(df, keys, bloom_bits=bloom_bits, stats=stats)
         bloom_bc = df._bloom_broadcast
-    cols = _dup_columns(tuple(keys), n_salts)
+    cols = _dup_columns()
     if salted:
-        partial = df.groupBy(*cols["salted_keys"]).agg(cols["partial"])
-        counts = partial.groupBy(*keys).agg(cols["merge"])
+        counts = salted_agg(df, keys, [("count", None, "n_dup")], n_salts)
     else:
         counts = df.groupBy(*keys).agg(cols["count"])
     out = counts.filter(cols["dup"])
@@ -247,14 +248,8 @@ def uniqueness_violations(
 
 
 @per_context
-def _dup_columns(keys: tuple, n_salts: int) -> dict:
-    salt = F.pmod(
-        F.xxhash64(F.monotonically_increasing_id(), F.lit(7)), F.lit(n_salts)
-    ).alias("__salt")
+def _dup_columns() -> dict:
     return {
-        "salted_keys": (*[F.col(k) for k in keys], salt),
-        "partial": F.count(F.lit(1)).alias("__partial"),
-        "merge": F.sum("__partial").alias("n_dup"),
         "count": F.count(F.lit(1)).alias("n_dup"),
         "dup": F.col("n_dup") > 1,
     }

@@ -3502,19 +3502,14 @@ def _replayed_stream(spark: SparkSession, sf_dir: str, table: str):
 def _run_to_memory(stream, prefix: str) -> str:
     """Run a streaming aggregation to completion (AvailableNow) into a
     complete-mode memory sink; returns the sink table name. State-store
-    shard count pinned low for the replay drain (the stateful.py
-    run_available_now rationale: per-trigger state commits scale with the
-    shuffle-partition count, results are partition-invariant; the env
-    knob raises it for real deployments)."""
-    import os
+    shard count pinned low for the replay drain
+    (``stateful.pinned_state_partitions``)."""
     import uuid
 
-    spark = stream.sparkSession
-    parts = os.environ.get("VXRS_STREAM_STATE_PARTITIONS", "8")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
-        name = prefix + uuid.uuid4().hex[:8]
+    from validate_xml_rust_spark.streaming.stateful import pinned_state_partitions
+
+    name = prefix + uuid.uuid4().hex[:8]
+    with pinned_state_partitions(stream.sparkSession):
         q = (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -3523,8 +3518,6 @@ def _run_to_memory(stream, prefix: str) -> str:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return name
 
 

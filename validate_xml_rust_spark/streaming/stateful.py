@@ -21,7 +21,9 @@ backend-agnostic.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -192,6 +194,34 @@ def streaming_near_dedup(
     )
 
 
+@contextmanager
+def pinned_state_partitions(
+    spark: SparkSession, n: int | None = None
+) -> Iterator[None]:
+    """Pin ``spark.sql.shuffle.partitions`` to ``n`` (default
+    ``$VXRS_STREAM_STATE_PARTITIONS``, else 8) for a stream started and
+    drained inside the block, then restore it — a NEW checkpoint bakes
+    this in as the state-store shard count. Every micro-batch commits
+    one state-store delta PER PARTITION, so a replay-style drain
+    (AvailableNow, a handful of triggers, bounded rows) at the session
+    default (= core count) pays 5-10x the state-commit/file I/O the data
+    needs; results are partition-invariant (keyed state — the shard only
+    decides WHERE a key lives). Production streams with large keyed
+    state raise the env knob (2-3x cores, the usual shuffle-partition
+    sizing) — the value is a deployment knob, not a semantics knob. An
+    EXISTING checkpoint keeps whatever count it was created with
+    (Structured Streaming ignores the conf then), so resumed streams are
+    unaffected."""
+    if n is None:
+        n = int(os.environ.get("VXRS_STREAM_STATE_PARTITIONS", "8"))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def run_available_now(
     sdf: "DataFrame",
     checkpoint_dir: str,
@@ -200,31 +230,9 @@ def run_available_now(
 ) -> None:
     """Drain the stream synchronously into an append parquet sink (the
     memory sink cannot recover from a checkpoint, so cross-RUN state
-    continuity requires a recoverable sink).
-
-    ``state_partitions`` (default ``$VXRS_STREAM_STATE_PARTITIONS``, else
-    8) pins ``spark.sql.shuffle.partitions`` for the stream's lifetime —
-    a NEW checkpoint bakes this in as the state-store shard count. Every
-    micro-batch commits one state-store delta PER PARTITION, so a
-    replay-style drain (AvailableNow, a handful of triggers, bounded
-    rows) at the session default (= core count) pays 5-10x the
-    state-commit/file I/O the data needs; results are partition-invariant
-    (keyed state — the shard only decides WHERE a key lives). Production
-    streams with large keyed state raise the env knob (2-3x cores, the
-    usual shuffle-partition sizing) — the value is a deployment knob, not
-    a semantics knob. An EXISTING checkpoint keeps whatever count it was
-    created with (Structured Streaming ignores the conf then), so resumed
-    streams are unaffected."""
-    spark = sdf.sparkSession
-    if state_partitions is None:
-        import os
-
-        state_partitions = int(
-            os.environ.get("VXRS_STREAM_STATE_PARTITIONS", "8")
-        )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    continuity requires a recoverable sink), with ``state_partitions``
+    state-store shards (``pinned_state_partitions``)."""
+    with pinned_state_partitions(sdf.sparkSession, state_partitions):
         q = (
             sdf.writeStream.outputMode("append")
             .format("parquet")
@@ -234,5 +242,3 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
