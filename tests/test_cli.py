@@ -136,8 +136,8 @@ def test_cli_manifest_missing_plus_empty_input_says_no_documents(tmp_path, capsy
 
 def test_cli_single_execution(tmp_path, spark, monkeypatch):
     """The verdicts pipeline executes ONCE per run even though summary,
-    manifest metrics, and the report all consume it (eager checkpoint in
-    main): a traced url column counts actual source evaluations — the
+    manifest metrics, the --output sink and the report all consume it
+    (eager checkpoint in main): a traced url column counts actual source evaluations — the
     pre-fix lazy chain re-derived the full pipeline per consumer (>=2n)."""
     from pyspark.sql import functions as F
 
@@ -156,14 +156,17 @@ def test_cli_single_execution(tmp_path, spark, monkeypatch):
 
     monkeypatch.setattr(pagesmod, "pages", traced_pages)
     n = 400
-    code = main([
-        f"synth:{n}", "--manifest", str(tmp_path / "m"),
-        "--partitions", "8", "--run-id", "r1",
-    ])
-    assert code in (0, 2, 3)
-    assert acc.value <= int(1.5 * n), (
-        f"url evaluated {acc.value} times for {n} rows — pipeline re-executed"
-    )
+    for extra in ([], ["--output", str(tmp_path / "out")]):
+        acc.value = 0
+        code = main([
+            f"synth:{n}", "--manifest", str(tmp_path / f"m{len(extra)}"),
+            "--partitions", "8", "--run-id", "r1", *extra,
+        ])
+        assert code in (0, 2, 3)
+        assert acc.value <= int(1.5 * n), (
+            f"url evaluated {acc.value} times for {n} rows with {extra} — "
+            "pipeline re-executed"
+        )
 
 
 def test_cli_prior_snapshot_diff_roundtrip(tmp_path, capsys):
@@ -608,3 +611,124 @@ def test_cli_redact_pii(tmp_path, capsys):
     assert rc in (0, 2, 3)
     m = re.search(r"Total:\s*(\d+)", capsys.readouterr().out)
     assert m is not None and int(m.group(1)) == 300
+
+
+UQ_URL = [
+    {"constraint_id": "url_nn", "column": "url", "kind": "not_null"},
+    {"constraint_id": "uq_url", "column": "url", "kind": "unique"},
+]
+
+
+def _spec_file(tmp_path, name: str, constraints: list[dict]) -> str:
+    p = tmp_path / f"{name}.json"
+    p.write_text(json.dumps({"spec_id": f"{name}-v1", "constraints": constraints}))
+    return str(p)
+
+
+def _four_pages(spark, tmp_path) -> str:
+    """4 pages, two of which share a url."""
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [(f"https://a.example/{k}", "en", text, f"<p>{text}</p>".encode())
+         for k, text in ((1, "one"), (1, "two"), (2, "three"), (3, "four"))],
+        "url string, lang string, text string, html binary",
+    ).write.parquet(path)
+    return path
+
+
+def test_cli_runs_table_constraints(tmp_path, spark, capsys):
+    """A --spec table constraint reaches the report, the violations sink
+    and the exit code: the four rows pass their row checks, the duplicate
+    url is two table violations, and the run exits 3 (it exited 0 and
+    wrote no uq_url row while the CLI ran row checks only)."""
+    out = str(tmp_path / "out")
+    spec = _spec_file(tmp_path, "uq", UQ_URL)
+    code = main([_four_pages(spark, tmp_path), "--spec", spec, "--output", out, "-v"])
+    printed = capsys.readouterr().out
+    assert code == 3
+    assert "Valid:   4" in printed and "Table violations: 2" in printed
+    uq = spark.read.parquet(f"{out}/violations/constraint_id=uq_url")
+    assert sorted(r["url"] for r in uq.collect()) == ["https://a.example/1"] * 2
+    assert spark.read.parquet(f"{out}/verdicts").count() == 4
+
+
+def test_cli_vocab_drift_spec_exits_nonzero(tmp_path, spark, capsys):
+    """A drift(vocab) table constraint over rows that all pass their row
+    checks yields violation rows and exit 3."""
+    spec = _spec_file(tmp_path, "vocab", [
+        {"constraint_id": "any", "column": "url", "kind": "expr",
+         "params": {"predicate": "1 = 1"}},
+        {"constraint_id": "vocab_text", "column": "text", "kind": "drift",
+         "params": {"test": "vocab", "threshold": 0.0, "n_buckets": 64}},
+    ])
+    out = str(tmp_path / "out")
+    code = main(["synth:600", "-q", "--partitions", "4", "--spec", spec,
+                 "--output", out])
+    assert code == 3
+    assert spark.read.parquet(f"{out}/violations/constraint_id=vocab_text").count() > 0
+    assert spark.read.parquet(f"{out}/verdicts/status=valid").count() == 600
+
+
+def test_cli_prior_reports_table_violations_every_run(tmp_path, spark, capsys):
+    """--prior carries row verdicts forward, but the table checks judge
+    the whole input on every run: both runs report the same rows."""
+    pages = _four_pages(spark, tmp_path)
+    spec = _spec_file(tmp_path, "uq", UQ_URL)
+    prior = str(tmp_path / "store")
+    got = []
+    for i in range(2):
+        out = str(tmp_path / f"out{i}")
+        code = main([pages, "--spec", spec, "--prior", prior, "--output", out])
+        printed = capsys.readouterr().out
+        assert code == 3 and "Table violations: 2" in printed
+        uq = spark.read.parquet(f"{out}/violations/constraint_id=uq_url")
+        got.append(sorted(r["url"] for r in uq.collect()))
+    assert "0 re-validated, 4 carried forward" in printed
+    assert got[0] == got[1] == ["https://a.example/1"] * 2
+
+
+def test_cli_refuses_table_constraints_it_cannot_run(tmp_path, spark, capsys):
+    """A referential spec needs a reference table the CLI cannot supply,
+    and --replay or a resumed --manifest run validates only a subset of
+    the table: each exits 1 and writes nothing."""
+    import os
+
+    pages = _four_pages(spark, tmp_path)
+    out, sheet = str(tmp_path / "out"), str(tmp_path / "sheet")
+    ref = _spec_file(tmp_path, "ref", [
+        {"constraint_id": "ref_host", "column": "url", "kind": "referential",
+         "params": {"ref_table": "hosts", "parent_key": "url"}},
+    ])
+    assert main([pages, "--spec", ref, "--output", out, "--datasheet", sheet]) == 1
+    assert "ref_host (referential) needs reference table 'hosts'" in capsys.readouterr().err
+    assert not os.path.exists(out) and not os.path.exists(sheet)
+
+    uq = _spec_file(tmp_path, "uq", UQ_URL)
+    strict = _spec_file(tmp_path, "strict", [
+        {"constraint_id": "strict", "column": "url", "kind": "expr",
+         "params": {"predicate": "url LIKE '%/1'"}},
+    ])
+    qdir = str(tmp_path / "q")
+    assert main([pages, "-q", "--spec", strict, "--quarantine", qdir]) == 3
+    before = sorted(os.listdir(qdir))
+    assert main([qdir, "--replay", "--spec", uq, "--quarantine", qdir,
+                 "--output", out]) == 1
+    assert "whole table" in capsys.readouterr().err
+    assert sorted(os.listdir(qdir)) == before and not os.path.exists(out)
+
+    manifest = str(tmp_path / "m")
+    assert main([pages, "-q", "--spec", strict, "--manifest", manifest]) == 3
+    assert main([pages, "--spec", uq, "--manifest", manifest, "--output", out]) == 1
+    assert not os.path.exists(out)
+
+
+def test_exit_code_counts_table_violations():
+    """Table violations climb the ladder like invalid rows: --fail-fast
+    returns 1, error rows still win with 2, otherwise 3."""
+    from validate_xml_rust_spark.operators.summary import exit_code
+
+    row = {"valid": 4, "invalid": 0, "error": 0, "skipped": 0, "table_violations": 2}
+    assert exit_code(row) == 3
+    assert exit_code(row, fail_fast=True) == 1
+    assert exit_code({**row, "error": 1}) == 2
+    assert exit_code({**row, "table_violations": 0}) == 0

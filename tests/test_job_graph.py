@@ -287,6 +287,45 @@ def test_warm_validate_full_stays_within_py4j_and_job_budgets(spark, tmp_path, m
     assert compiled <= 5, seen
 
 
+def test_cli_stays_within_job_budgets(spark, tmp_path, capsys):
+    """Three in-process CLI runs per mode over 3k synthetic pages: each run
+    stays within its Spark-job budget and leaves no persisted RDD behind.
+    Budgets are the counts measured in this test session before the CLI
+    wrote through ``write_results`` (a flat and a partitioned write of the
+    same checkpoint each take 2 jobs): --output 7, --prior --output 10 on
+    an empty store and 17 on a filled one, --quarantine --output 10. A
+    spec with a ``unique`` constraint adds its table-check jobs; it is
+    budgeted on leftover blocks only."""
+    import json
+
+    from validate_xml_rust_spark.cli import main
+
+    spec = tmp_path / "uq.json"
+    spec.write_text(json.dumps({"spec_id": "uq-v1", "constraints": [
+        {"constraint_id": "url_nn", "column": "url", "kind": "not_null"},
+        {"constraint_id": "uq_url", "column": "url", "kind": "unique"},
+    ]}))
+    store = str(tmp_path / "store")
+    modes = {
+        "output": ([], (7, 7, 7)),
+        "prior": (["--prior", store], (10, 17, 17)),
+        "quarantine": (["--quarantine", str(tmp_path / "q")], (10, 10, 10)),
+        "unique": (["--spec", str(spec)], None),
+    }
+    for mode, (extra, budgets) in modes.items():
+        for i in range(3):
+            before = _persistent_ids(spark)
+            mark = _status_mark(spark)
+            code = main(["synth:3000", "-q", *extra, "--output", str(tmp_path / f"{mode}{i}")])
+            seen = {"mode": mode, "run": i, "code": code,
+                    "jobs": _status_delta(spark, mark)["jobs"],
+                    "left": _persistent_ids(spark) - before}
+            assert code in (2, 3), seen
+            assert not seen["left"], seen
+            if budgets is not None:
+                assert seen["jobs"] <= budgets[i], seen
+
+
 def test_store_metadata_launches_no_spark_jobs(spark, tmp_path, monkeypatch):
     """The durable stores keep their commit state in a driver-side log:
     reading it (``SignatureStore.generations``) and publishing each commit

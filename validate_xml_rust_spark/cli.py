@@ -5,9 +5,12 @@
 
 Lifecycle mirrors the reference: parse+validate args (exit 1 on config
 error) → build services (session, spec registry/cache) → discovery
-(scan + filters) → validation (spec routing → compiled checks) →
-aggregation → report → exit code (0 all-valid/skipped, 1 fail-fast,
-2 errors, 3 invalid — src/main.rs:113-119).
+(scan + filters) → validation (spec routing → compiled row checks, plus
+the spec's table checks over the whole input) → aggregation → report →
+exit code (0 all-valid/skipped, 1 fail-fast, 2 errors, 3 invalid rows or
+table violations — src/main.rs:113-119). Every mode shares one tail
+after the row verdicts: checkpoint, ``write_results``, summary, manifest
+commit, store update, report, exit code.
 """
 
 from __future__ import annotations
@@ -37,7 +40,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--fail-fast", action="store_true")
     p.add_argument("--verbosity", "-v", action="count", default=0)
     p.add_argument("--quiet", "-q", action="store_true")
-    p.add_argument("--output", help="write verdicts+violations parquet under this dir")
+    p.add_argument(
+        "--output",
+        help="write verdicts (partitioned by status) and row + table "
+             "violations (partitioned by constraint_id) parquet under this dir",
+    )
     p.add_argument(
         "--quarantine",
         help="write non-valid rows (verdict + full payload — repair/replay "
@@ -189,12 +196,9 @@ def main(argv: list[str] | None = None) -> int:
     # --- shard-store audit mode: PATH is a --shards dir; no validation
     # pipeline runs — the manifest IS the spec and the shards the files
     if args.verify_shards:
-        from validate_xml_rust_spark.operators.outputs import verify_shards
-        from validate_xml_rust_spark.operators.summary import (
-            exit_code as _exit_code,
-        )
-
         from pyspark.errors import AnalysisException
+
+        from validate_xml_rust_spark.operators.outputs import verify_shards
 
         try:
             # existence probe only — "is this a shard store at all?"
@@ -233,7 +237,7 @@ def main(argv: list[str] | None = None) -> int:
                 f"{srow['valid']}/{srow['total']} shards valid, "
                 f"{srow['invalid']} invalid, {srow['error']} structural"
             )
-        return _exit_code(srow, fail_fast=args.fail_fast)
+        return exit_code(srow, fail_fast=args.fail_fast)
 
     # --- registry: default webpage spec; --spec loads+overrides (J1 + S6/S7)
     registry = SpecRegistry().add(
@@ -266,6 +270,16 @@ def main(argv: list[str] | None = None) -> int:
             return 1
         registry.add(spec)
         override_id = spec.spec_id
+    # the CLI has no way to pass reference tables or drift baselines:
+    # refuse a table constraint that needs one rather than drop it
+    from validate_xml_rust_spark.operators.orchestrate import missing_context
+
+    missing = missing_context(registry)
+    if missing:
+        print(
+            "Cannot run from the CLI: " + "; ".join(missing), file=sys.stderr
+        )
+        return 1
 
     # --- discovery phase (S1-S3)
     from validate_xml_rust_spark.operators.metrics import PhaseTracker, run_metrics_row
@@ -400,6 +414,17 @@ def main(argv: list[str] | None = None) -> int:
             file=sys.stderr,
         )
         return 1
+    # table-scope constraints judge the whole table; a replay or a resumed
+    # run validates a subset of it
+    if (args.replay or resumed) and any(
+        spec.table_constraints() for spec in registry.specs.values()
+    ):
+        print(
+            "Table-scope constraints need the whole table, but --replay and "
+            "a RESUMED --manifest run validate only a subset",
+            file=sys.stderr,
+        )
+        return 1
 
     # --- corpus datasheet of the scanned input (pre-validation
     # composition — what went IN, before any verdict routing). BEFORE
@@ -483,20 +508,32 @@ def main(argv: list[str] | None = None) -> int:
         if not args.quiet:
             print(f"Quarantined rows written to {args.quarantine}")
 
-    # --- row-level snapshot-diff mode: carry forward unchanged rows'
-    # verdicts from the --prior store, re-validate only the delta, and
-    # replace the store with this run's verdicts (chained runs).
-    # NOT in --replay: quarantined content is unchanged while the SPEC
-    # changed, so the (url, fp) reuse join would carry the stale failing
-    # verdicts forward and defeat the repair loop — replay re-validates
-    # everything and updates the store afterwards (below).
-    if args.prior and not args.replay:
-        phases.start("validation")
-        from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
-        from validate_xml_rust_spark.operators.resume import incremental_verdicts
-        from validate_xml_rust_spark.operators.validate import ValidationResult
+    # --- validation: row verdicts from validate(), or under --prior from
+    # the snapshot diff (carry forward the verdicts of unchanged rows,
+    # re-validate the delta). NOT in --replay: quarantined content is
+    # unchanged while the SPEC changed, so the reuse join would carry the
+    # stale failing verdicts forward — replay re-validates everything.
+    from pyspark.sql import Observation
 
-        fcols = [c for c in ("text", "lang") if c in df.columns] or ["url"]
+    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
+    from validate_xml_rust_spark.operators.orchestrate import (
+        FullValidationResult,
+        table_violations,
+    )
+    from validate_xml_rust_spark.operators.resume import (
+        content_fingerprint,
+        incremental_verdicts,
+    )
+    from validate_xml_rust_spark.operators.validate import ValidationResult
+
+    phases.start("validation")
+    route = {
+        "route_col": args.route_col, "route_mode": args.route_mode,
+        "override_spec_id": override_id,
+    }
+    fcols = [c for c in ("text", "lang") if c in df.columns] or ["url"]
+    prior = None
+    if args.prior:
         try:
             prior = spark.read.parquet(args.prior).select(
                 "url", "content_fp", "spec_id", "status", "error_count"
@@ -506,146 +543,50 @@ def main(argv: list[str] | None = None) -> int:
                 spark, "url string, content_fp string, spec_id string, "
                        "status string, error_count int",
             )
-        # full output (partition_id, details, violations) whenever a sink
-        # needs it: --output parquet, --manifest metrics, or a -v report.
-        # Carried-forward rows count toward statuses everywhere; violation
+    diff = prior is not None and not args.replay
+    if diff:
+        # carried-forward rows count toward statuses everywhere; violation
         # payloads exist only for the re-validated delta (the prior store
-        # keeps the verdict triple, not the violation rows).
-        full = bool(
-            args.output or args.manifest or args.verbosity or args.quarantine
+        # keeps the verdict triple, not the violation rows)
+        diff_obs = Observation()
+        verdicts = incremental_verdicts(
+            df, prior, spark, registry, fcols, full_output=True,
+            keep_cols=qcols, **route,
+        ).observe(
+            diff_obs, F.sum(F.col("revalidated").cast("long")).alias("n")
         )
-        inc = incremental_verdicts(
-            df, prior, spark, registry, fcols, full_output=full,
-            keep_cols=qcols,
-            route_col=args.route_col, route_mode=args.route_mode,
-            override_spec_id=override_id,
+    else:
+        keep = list(qcols or [])
+        if prior is not None:
+            # the store update below needs the content fingerprint
+            # alongside each replayed verdict — ride keep_cols
+            df = df.withColumn("content_fp", content_fingerprint(fcols))
+            keep.append("content_fp")
+        verdicts = validate(
+            df, spark, registry, keep_cols=keep or None, **route
+        ).verdicts
+    # Every sink below reads the verdicts: checkpoint once so the scan +
+    # constraint pipeline executes ONCE (with --quarantine the blocks
+    # carry the payload columns too; a cluster run swaps in a reliable
+    # checkpoint dir).
+    ck, ck_ids = eager_checkpoint(verdicts)
+    # table-scope constraints run over the whole scanned input, once
+    table_v, table_ids = table_violations(df, registry, **route)
+    if table_v is not None:
+        table_obs = Observation()
+        table_v, ids = eager_checkpoint(
+            table_v.observe(table_obs, F.count(F.lit(1)).alias("n"))
         )
-        ck, ck_ids = eager_checkpoint(inc)
-        phases.start("aggregation")
-        agg = ck.agg(
-            F.count(F.lit(1)).alias("total"),
-            *[
-                F.sum((F.col("status") == s).cast("long")).alias(s)
-                for s in ("valid", "invalid", "error", "skipped")
-            ],
-            F.sum(F.col("revalidated").cast("long")).alias("revalidated"),
-            # carried into the report's "Specs used" line (summarize()
-            # would have collected it; this agg replaces that job)
-            F.sort_array(
-                F.filter(F.collect_set("spec_id"), lambda x: x.isNotNull())
-            ).alias("schemas_used"),
-        ).collect()[0]
-        srow = agg.asDict()
-        if args.quarantine:
-            write_quarantine(ck)
-        if args.output:
-            ck.drop("violation_entries", *(qcols or [])).write.mode(
-                "overwrite"
-            ).parquet(f"{args.output}/verdicts")
-            ValidationResult(ck.filter(F.col("revalidated"))).violations().write.mode(
-                "overwrite"
-            ).parquet(f"{args.output}/violations")
-        phases.finish()
-        # commit this run's completed partitions (composes with the
-        # partition-level skip above: next --manifest run skips them,
-        # next --prior run carries their rows forward)
-        if args.manifest:
-            from validate_xml_rust_spark.operators.resume import (
-                partition_metrics,
-                write_manifest,
-            )
-
-            run_id = args.run_id or f"cli-{int(time.time())}"
-            sid = write_manifest(partition_metrics(ck, run_id), args.manifest)
-            if not args.quiet:
-                print(f"Committed snapshot {sid} (run {run_id}) to {args.manifest}")
-        # Replace the store with this run's verdicts, UNION the prior rows
-        # for ids absent from this run's input (a --manifest-filtered or
-        # partial-dir run must not shrink the store and defeat later
-        # carry-forward). Present-but-changed ids are superseded by ck.
-        # NULL-url prior rows are dropped outright: they can never match a
-        # future reuse join (SQL equality), and the anti-join below can
-        # never retire them (NULL matches nothing) — keeping them would
-        # accumulate one dead row per changed NULL-url doc per run.
-        # Both sides are materialized (ck is checkpointed; the union is
-        # eagerly checkpointed) before the overwrite of the dir prior reads.
-        keep_prior = prior.filter(F.col("url").isNotNull()).join(
-            df.select(F.col("url").cast("string").alias("url")).distinct(),
-            "url", "left_anti",
-        )
-        store, store_ids = eager_checkpoint(
-            ck.select("url", "content_fp", "spec_id", "status", "error_count")
-            .unionByName(keep_prior)
-            .dropDuplicates(["url", "content_fp"])
-        )
-        store.write.mode("overwrite").parquet(args.prior)
-        release_blocks(spark.sparkContext, store_ids)
-        wall_ms = (time.perf_counter() - t0) * 1000
-        if not args.quiet:
-            carried = srow["total"] - srow["revalidated"]
-            print(
-                f"Snapshot diff: {srow['revalidated']} re-validated, "
-                f"{carried} carried forward (prior: {args.prior})"
-            )
-            perf = run_metrics_row(
-                srow["total"], phases,
-                cache_stats=cache.stats() if cache else None,
-                concurrency=args.threads,
-            )
-            # verbosity > 0 implies full output (error_details present);
-            # the already-collected counts feed the report (one agg job,
-            # not two) — derive the rate fields summarize() would add
-            srow.setdefault(
-                "success_rate",
-                (srow["valid"] / srow["total"] * 100.0) if srow["total"] else 0.0,
-            )
-            print(report(
-                ck, verbosity=args.verbosity, wall_ms=wall_ms, perf=perf,
-                summary=srow,
-            ))
-        release_blocks(spark.sparkContext, ck_ids)
-        return exit_code(srow, fail_fast=args.fail_fast)
-
-    # --- validation + aggregation phases
-    phases.start("validation")
-    keep = list(qcols or [])
-    if args.replay and args.prior:
-        # the store update below needs the content fingerprint alongside
-        # each replayed verdict — compute it on the input, ride keep_cols
-        from validate_xml_rust_spark.operators.resume import (
-            content_fingerprint,
-        )
-
-        fcols = [c for c in ("text", "lang") if c in df.columns] or ["url"]
-        df = df.withColumn("content_fp", content_fingerprint(fcols))
-        keep.append("content_fp")
-    res = validate(
-        df, spark, registry,
-        route_col=args.route_col,
-        route_mode=args.route_mode,
-        override_spec_id=override_id,
-        keep_cols=keep or None,
+        table_ids |= ids
+    result = FullValidationResult(
+        ValidationResult(ck.drop(*(qcols or []))), table_v, table_ids
     )
-    # The verdicts frame feeds up to four consumers (parquet writes,
-    # summary, manifest metrics, report) — checkpoint once so the
-    # scan+constraint pipeline executes ONCE, not once per action (same
-    # one-pass rule as pipeline.curate; a production cluster run would
-    # swap the localCheckpoint for a reliable checkpoint dir).
-    from validate_xml_rust_spark.ckpt import eager_checkpoint, release_blocks
-    from validate_xml_rust_spark.operators.validate import ValidationResult
-
-    # (with --quarantine the checkpoint carries the payload columns too —
-    # the one-pass rule is kept at the cost of larger blocks; a cluster
-    # run swaps in a reliable checkpoint dir)
-    ck_verdicts, ck_ids = eager_checkpoint(res.verdicts)
-    res = ValidationResult(verdicts=ck_verdicts)
-    verdicts = res.verdicts
     if args.shards:
         from validate_xml_rust_spark.operators.outputs import (
             write_training_shards,
         )
 
-        clean = ck_verdicts.filter(F.col("status") == "valid")
+        clean = ck.filter(F.col("status") == "valid")
         if "text" in clean.columns:
             clean = clean.withColumn(
                 "n_tokens", F.coalesce(F.length("text"), F.lit(0))
@@ -655,9 +596,9 @@ def main(argv: list[str] | None = None) -> int:
                 "url", F.lit(None).cast("string").alias("text"),
                 F.lit(0).alias("n_tokens"),
             )
-        # checkpoint=False: clean is a narrow filter+select over
-        # ck_verdicts, already materialized blocks — a second inner
-        # checkpoint would double the payload's block memory
+        # checkpoint=False: clean is a narrow filter+select over ck,
+        # already materialized blocks — a second inner checkpoint would
+        # double the payload's block memory
         mshards = write_training_shards(
             clean, args.shards, args.shard_tokens, id_col="url",
             checkpoint=False,
@@ -667,21 +608,23 @@ def main(argv: list[str] | None = None) -> int:
                 f"Wrote {mshards.count()} training shards to {args.shards}"
             )
     if args.quarantine:
-        write_quarantine(verdicts)
-    if qcols:  # payload columns never reach --output/report frames
-        verdicts = verdicts.drop(*qcols)
-        res = ValidationResult(verdicts=verdicts)
+        write_quarantine(ck)
     if args.output:
-        verdicts.drop("violation_entries").write.mode("overwrite").parquet(
-            f"{args.output}/verdicts"
+        from validate_xml_rust_spark.operators.outputs import write_results
+
+        write_results(
+            result.row_result.verdicts, result.all_violations(), args.output
         )
-        res.violations().write.mode("overwrite").parquet(f"{args.output}/violations")
     phases.start("aggregation")
-    srow = summarize(verdicts).collect()[0].asDict()
+    srow = summarize(ck).collect()[0].asDict()
+    if table_v is not None:
+        srow["table_violations"] = table_obs.get["n"]
     phases.finish()
 
     # --- commit completed partitions (one snapshot generation per run;
-    # never from --replay, whose metrics cover only the quarantine subset)
+    # composes with the partition-level skip above: the next --manifest
+    # run skips them, the next --prior run carries their rows forward).
+    # Never from --replay, whose metrics cover only the quarantine subset.
     if args.manifest and not args.replay:
         from validate_xml_rust_spark.operators.resume import (
             partition_metrics,
@@ -689,54 +632,59 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         run_id = args.run_id or f"cli-{int(time.time())}"
-        # res.verdicts (not the --output re-read): the parquet drops
-        # violation_entries, which the per-partition metrics row needs
-        sid = write_manifest(partition_metrics(res.verdicts, run_id), args.manifest)
+        sid = write_manifest(partition_metrics(ck, run_id), args.manifest)
         if not args.quiet:
             print(f"Committed snapshot {sid} (run {run_id}) to {args.manifest}")
 
-    # --- replay store update: the replayed verdicts SUPERSEDE the store's
-    # rows for these urls (the content fp is unchanged, so a plain union
-    # + dedup could keep either — the anti-join removes the stale rows
-    # first). Rows absent from the replay keep their store verdicts.
-    if args.replay and args.prior:
-        try:
-            prior_store = spark.read.parquet(args.prior).select(
-                "url", "content_fp", "spec_id", "status", "error_count"
-            )
-        except Exception:
-            prior_store = local_frame(
-                spark, "url string, content_fp string, spec_id string, "
-                       "status string, error_count int",
-            )
-        new_rows = res.verdicts.select(
+    # --- replace the store with this run's verdicts, UNION the prior rows
+    # for urls absent from this run (a --manifest-filtered or partial-dir
+    # run must not shrink the store and defeat later carry-forward). The
+    # run's verdicts supersede the store's rows for their urls: replayed
+    # content keeps its fp, so a plain union + dedup could keep either.
+    # NULL-url prior rows are dropped outright: they can never match a
+    # future reuse join (SQL equality), and the anti-join can never
+    # retire them (NULL matches nothing). A --prior run writes its own
+    # NULL-url rows, which the next rewrite retires; replay drops them.
+    # Both sides are materialized (ck is checkpointed; the union is
+    # eagerly checkpointed) before the overwrite of the dir prior reads.
+    if prior is not None:
+        rows = ck.select(
             F.col("url").cast("string").alias("url"),
             "content_fp", "spec_id", "status", "error_count",
-        ).filter(F.col("url").isNotNull())
-        keep_prior = prior_store.filter(F.col("url").isNotNull()).join(
-            new_rows.select("url").distinct(), "url", "left_anti"
+        )
+        if args.replay:
+            rows = rows.filter(F.col("url").isNotNull())
+        keep_prior = prior.filter(F.col("url").isNotNull()).join(
+            rows.select("url").distinct(), "url", "left_anti"
         )
         store, store_ids = eager_checkpoint(
-            new_rows.unionByName(keep_prior)
-            .dropDuplicates(["url", "content_fp"])
+            rows.unionByName(keep_prior).dropDuplicates(["url", "content_fp"])
         )
         store.write.mode("overwrite").parquet(args.prior)
         release_blocks(spark.sparkContext, store_ids)
-        if not args.quiet:
+        if args.replay and not args.quiet:
             print(f"Replayed verdicts updated the store at {args.prior}")
     wall_ms = (time.perf_counter() - t0) * 1000
 
     # --- report + exit code (S8/S10)
     if not args.quiet:
+        if diff:
+            revalidated = diff_obs.get["n"]
+            print(
+                f"Snapshot diff: {revalidated} re-validated, "
+                f"{srow['total'] - revalidated} carried forward "
+                f"(prior: {args.prior})"
+            )
         perf = run_metrics_row(
             srow["total"], phases,
             cache_stats=cache.stats() if cache else None,
             concurrency=args.threads,
         )
         print(report(
-            res.verdicts, verbosity=args.verbosity, wall_ms=wall_ms, perf=perf,
-            summary=srow,
+            result.row_result.verdicts, verbosity=args.verbosity,
+            wall_ms=wall_ms, perf=perf, summary=srow,
         ))
+    result.release()
     release_blocks(spark.sparkContext, ck_ids)
     return exit_code(srow, fail_fast=args.fail_fast)
 

@@ -367,12 +367,8 @@ def validate_full(
     id_col: str = "url",
     partition_col: str = "partition_id",
 ) -> FullValidationResult:
-    """Row verdicts + every table-scope constraint of every registered spec.
-
-    Table checks run over the rows the spec actually governs (rows routed
-    to that spec), so a registry with per-route specs applies each spec's
-    uniqueness/referential/drift to its own slice — mirroring the
-    reference's per-schema scoping.
+    """Row verdicts (``validate``) + every table-scope constraint of every
+    registered spec (``table_violations``).
 
     Cost note: ``near_dup`` constraints execute their full MinHash+CC
     pipeline EAGERLY here (near-dedup materializes each intermediate as a
@@ -380,13 +376,40 @@ def validate_full(
     registry whose table_violations you never read. The materialized
     violation rows are localCheckpoint blocks — call ``result.release()``
     once they're consumed."""
-    ctx = context or TableContext()
     row_result = validate(
         df, spark, registry, route_col=route_col, route_mode=route_mode,
         override_spec_id=override_spec_id, id_col=id_col,
         partition_col=partition_col,
     )
+    table_v, ckpt_ids = table_violations(
+        df, registry, context, route_col=route_col, route_mode=route_mode,
+        override_spec_id=override_spec_id, id_col=id_col,
+        partition_col=partition_col,
+    )
+    return FullValidationResult(
+        row_result=row_result, table_violations=table_v, ckpt_block_ids=ckpt_ids
+    )
 
+
+def table_violations(
+    df: DataFrame,
+    registry: SpecRegistry,
+    context: TableContext | None = None,
+    route_col: str = "lang",
+    route_mode: str = "column",
+    override_spec_id: str | None = None,
+    id_col: str = "url",
+    partition_col: str = "partition_id",
+) -> tuple[DataFrame | None, frozenset]:
+    """Violations of every table-scope constraint of every registered spec
+    (``None`` when the registry declares none), plus the ids of the
+    checkpoint blocks backing them.
+
+    Table checks run over the rows the spec actually governs (rows routed
+    to that spec), so a registry with per-route specs applies each spec's
+    uniqueness/referential/drift to its own slice — mirroring the
+    reference's per-schema scoping."""
+    ctx = context or TableContext()
     # rows per spec: reuse the verdict spec_id by joining back? Cheaper:
     # recompute the routing predicate per spec on the input (narrow).
     table_v: DataFrame | None = None
@@ -412,12 +435,28 @@ def validate_full(
                 scoped, c, ctx, id_col, partition_col, ckpt_ids=ckpt_ids
             )
             table_v = v if table_v is None else table_v.unionByName(v)
+    return table_v, frozenset(ckpt_ids)
 
-    return FullValidationResult(
-        row_result=row_result,
-        table_violations=table_v,
-        ckpt_block_ids=frozenset(ckpt_ids),
-    )
+
+def missing_context(
+    registry: SpecRegistry, context: TableContext | None = None
+) -> list[str]:
+    """One message per table constraint whose reference table or baseline
+    ``context`` lacks (building its check would raise ``KeyError``)."""
+    ctx = context or TableContext()
+    out = []
+    for spec in registry.specs.values():
+        for c in spec.table_constraints():
+            if c.kind in ("referential", "lm_quality", "contamination"):
+                key = "benchmark" if c.kind == "contamination" else "ref_table"
+                need = ("reference table", c.params.get(key), ctx.ref_tables)
+            elif c.kind == "drift" and c.params.get("test") != "vocab":
+                need = ("baseline", c.column, ctx.baselines)
+            else:
+                continue
+            if need[1] not in need[2]:
+                out.append(f"{c.constraint_id} ({c.kind}) needs {need[0]} {need[1]!r}")
+    return out
 
 
 @per_context

@@ -28,15 +28,21 @@ def write_results(
     out_dir: str,
     mode: str = "overwrite",
 ) -> None:
+    _write_verdict_rows(verdicts, f"{out_dir}/verdicts", mode)
+    violations.write.mode(mode).partitionBy("constraint_id").parquet(
+        f"{out_dir}/violations"
+    )
+
+
+def _write_verdict_rows(verdicts: DataFrame, path: str, mode: str) -> None:
+    """The one on-disk verdict row shape: no violation array, details
+    joined by ``"; "``, partitioned by status."""
     (
         verdicts.drop("violation_entries")
         .withColumn("error_details", F.concat_ws("; ", "error_details"))
         .write.mode(mode)
         .partitionBy("status")
-        .parquet(f"{out_dir}/verdicts")
-    )
-    violations.write.mode(mode).partitionBy("constraint_id").parquet(
-        f"{out_dir}/violations"
+        .parquet(path)
     )
 
 
@@ -387,11 +393,5 @@ def quarantine_split(
     clean = verdicts.filter(keep)
     quarantined = verdicts.filter(~keep)
     if quarantine_dir is not None:
-        (
-            quarantined.drop("violation_entries")
-            .withColumn("error_details", F.concat_ws("; ", "error_details"))
-            .write.mode(mode)
-            .partitionBy("status")
-            .parquet(quarantine_dir)
-        )
+        _write_verdict_rows(quarantined, quarantine_dir, mode)
     return clean, quarantined

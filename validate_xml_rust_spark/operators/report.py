@@ -53,6 +53,11 @@ def format_summary(
         f"{colorize('Invalid:', '31', c)} {summary['invalid']}",
         f"{colorize('Errors:', '33', c)}  {summary['error']}",
         f"{colorize('Skipped:', '36', c)} {summary['skipped']}",
+        # present when the registry declares a table-scope constraint
+        *(
+            [f"Table violations: {summary['table_violations']}"]
+            if "table_violations" in summary else []
+        ),
         f"Success rate: {summary['success_rate']:.1f}%",
         f"Specs used: {', '.join(summary.get('schemas_used') or []) or '(none)'}",
     ]

@@ -65,13 +65,15 @@ def exit_code(summary_row: dict, fail_fast: bool = False) -> int:
 
     fail_fast & has_errors → 1; error rows → 2; invalid rows → 3; else 0.
     (The reference consults fail_fast only after the full run — no mid-run
-    abort — and we replicate that faithfully, SURVEY.md §7.)"""
-    has_errors = summary_row["error"] > 0 or summary_row["invalid"] > 0
-    if fail_fast and has_errors:
+    abort — and we replicate that faithfully, SURVEY.md §7.) Table-scope
+    violations (``table_violations``, when the row carries it) count like
+    invalid rows."""
+    invalid = summary_row["invalid"] + summary_row.get("table_violations", 0)
+    if fail_fast and (summary_row["error"] > 0 or invalid > 0):
         return 1
     if summary_row["error"] > 0:
         return 2
-    if summary_row["invalid"] > 0:
+    if invalid > 0:
         return 3
     return 0
 
