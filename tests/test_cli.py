@@ -138,7 +138,9 @@ def test_cli_single_execution(tmp_path, spark, monkeypatch):
     """The verdicts pipeline executes ONCE per run even though summary,
     manifest metrics, the --output sink and the report all consume it
     (eager checkpoint in main): a traced url column counts actual source evaluations — the
-    pre-fix lazy chain re-derived the full pipeline per consumer (>=2n)."""
+    pre-fix lazy chain re-derived the full pipeline per consumer (>=2n).
+    The tracer is nondeterministic so a filter on url is not pushed below
+    it (which would evaluate it twice in one pass over the input)."""
     from pyspark.sql import functions as F
 
     import validate_xml_rust_spark.sources.pages as pagesmod
@@ -146,24 +148,30 @@ def test_cli_single_execution(tmp_path, spark, monkeypatch):
     real_pages = pagesmod.pages
     acc = spark.sparkContext.accumulator(0)
 
-    @F.udf("string")
-    def traced(t):
+    def trace(t):
         acc.add(1)
         return t
+
+    traced = F.udf(trace, "string").asNondeterministic()
 
     def traced_pages(sp, n, *a, **k):
         return real_pages(sp, n, *a, **k).withColumn("url", traced(F.col("url")))
 
     monkeypatch.setattr(pagesmod, "pages", traced_pages)
     n = 400
-    for extra in ([], ["--output", str(tmp_path / "out")]):
+    uq = ["--spec", _spec_file(tmp_path, "uq", UQ_URL)]
+    # table checks read the scanned input after the verdict checkpoint:
+    # a unique constraint reads it twice (the duplicate-key aggregate and
+    # the join back to the offending rows), so 2n more per constraint
+    for extra, table_passes in (([], 0), (["--output", str(tmp_path / "out")], 0),
+                                ([*uq, "--output", str(tmp_path / "out")], 2)):
         acc.value = 0
         code = main([
             f"synth:{n}", "--manifest", str(tmp_path / f"m{len(extra)}"),
             "--partitions", "8", "--run-id", "r1", *extra,
         ])
         assert code in (0, 2, 3)
-        assert acc.value <= int(1.5 * n), (
+        assert acc.value <= int(1.5 * n) + table_passes * n, (
             f"url evaluated {acc.value} times for {n} rows with {extra} — "
             "pipeline re-executed"
         )
@@ -718,7 +726,17 @@ def test_cli_refuses_table_constraints_it_cannot_run(tmp_path, spark, capsys):
 
     manifest = str(tmp_path / "m")
     assert main([pages, "-q", "--spec", strict, "--manifest", manifest]) == 3
+    # a no-op resume validates nothing: it is not refused
+    assert main([pages, "--spec", uq, "--manifest", manifest, "--output", out]) == 0
+    assert "Nothing pending" in capsys.readouterr().out
+    # new hosts land in partitions the manifest has not committed
+    spark.createDataFrame(
+        [(f"https://{h}.example/1", "en", h, f"<p>{h}</p>".encode())
+         for h in ("b", "c", "d", "e")],
+        "url string, lang string, text string, html binary",
+    ).write.mode("append").parquet(pages)
     assert main([pages, "--spec", uq, "--manifest", manifest, "--output", out]) == 1
+    assert "whole table" in capsys.readouterr().err
     assert not os.path.exists(out)
 
 

@@ -272,13 +272,11 @@ def main(argv: list[str] | None = None) -> int:
         override_id = spec.spec_id
     # the CLI has no way to pass reference tables or drift baselines:
     # refuse a table constraint that needs one rather than drop it
-    from validate_xml_rust_spark.operators.orchestrate import missing_context
+    from validate_xml_rust_spark.operators.orchestrate import context_needs
 
-    missing = missing_context(registry)
-    if missing:
-        print(
-            "Cannot run from the CLI: " + "; ".join(missing), file=sys.stderr
-        )
+    needs = context_needs(registry)
+    if needs:
+        print("Cannot run from the CLI: " + "; ".join(needs), file=sys.stderr)
         return 1
 
     # --- discovery phase (S1-S3)
@@ -415,9 +413,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 1
     # table-scope constraints judge the whole table; a replay or a resumed
-    # run validates a subset of it
-    if (args.replay or resumed) and any(
-        spec.table_constraints() for spec in registry.specs.values()
+    # run validates a subset of it (a no-op resume validates nothing)
+    if any(spec.table_constraints() for spec in registry.specs.values()) and (
+        args.replay or (resumed and df.limit(1).count() > 0)
     ):
         print(
             "Table-scope constraints need the whole table, but --replay and "

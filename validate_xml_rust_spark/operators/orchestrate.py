@@ -61,6 +61,23 @@ class TableContext:
     baselines: dict[str, object] = field(default_factory=dict)
 
 
+def _context_need(c: Constraint) -> tuple[str, str] | None:
+    """What a table constraint's check reads from the ``TableContext``:
+    ``("reference table", name)``, ``("baseline", column)``, or ``None``."""
+    if c.kind in ("referential", "lm_quality"):
+        return "reference table", c.params.get("ref_table")
+    if c.kind == "contamination":
+        return "reference table", c.params.get("benchmark")
+    if c.kind == "drift" and c.params.get("test", "chi2") != "vocab":
+        return "baseline", c.column
+    return None
+
+
+def _from_context(ctx: TableContext, c: Constraint):
+    what, name = _context_need(c)
+    return (ctx.ref_tables if what == "reference table" else ctx.baselines)[name]
+
+
 def _table_violations_for(
     df: DataFrame,
     c: Constraint,
@@ -84,7 +101,7 @@ def _table_violations_for(
             referential_violations,
         )
 
-        parent = ctx.ref_tables[c.params["ref_table"]]
+        parent = _from_context(ctx, c)
         child = df
         # composite keys: {"child_keys": [...], "parent_key": [...]}
         if "key_expr" in c.params and "child_keys" in c.params:
@@ -108,7 +125,7 @@ def _table_violations_for(
             contamination_sweep,
         )
 
-        bench = ctx.ref_tables[c.params["benchmark"]]
+        bench = _from_context(ctx, c)
         if "primary_n" in c.params or c.params.get("sweep"):
             flags = contamination_sweep(
                 df, bench,
@@ -221,7 +238,7 @@ def _table_violations_for(
         # max_log_ppl filter). Unscorable docs (<2 tokens) never violate.
         from validate_xml_rust_spark.operators.textstats import lm_perplexity
 
-        ref = ctx.ref_tables[c.params["ref_table"]]
+        ref = _from_context(ctx, c)
         budget = float(c.params.get("max_log_ppl", 10.0))
         scores = lm_perplexity(
             df, ref, id_col=id_col, text_col=c.column,
@@ -264,18 +281,18 @@ def _table_violations_for(
                 threshold=c.params.get("threshold", 0.1),
             )
         elif test == "ks":
-            baseline = ctx.baselines[c.column]
+            baseline = _from_context(ctx, c)
             d = ks_drift_check(df, c.column, baseline, partition_col, alpha)
         elif test == "psi":
             from validate_xml_rust_spark.operators.drift import psi_drift_check
 
-            baseline = ctx.baselines[c.column]
+            baseline = _from_context(ctx, c)
             d = psi_drift_check(
                 df, c.column, baseline, partition_col,
                 threshold=c.params.get("threshold", 0.2),
             )
         else:
-            baseline = ctx.baselines[c.column]
+            baseline = _from_context(ctx, c)
             d = chi2_drift_check(df, c.column, baseline, partition_col, alpha)
         # carry the SPEC's constraint id (like every other table kind) —
         # drift_violations' derived drift_<test>_<col> id is for direct
@@ -438,25 +455,14 @@ def table_violations(
     return table_v, frozenset(ckpt_ids)
 
 
-def missing_context(
-    registry: SpecRegistry, context: TableContext | None = None
-) -> list[str]:
-    """One message per table constraint whose reference table or baseline
-    ``context`` lacks (building its check would raise ``KeyError``)."""
-    ctx = context or TableContext()
-    out = []
-    for spec in registry.specs.values():
-        for c in spec.table_constraints():
-            if c.kind in ("referential", "lm_quality", "contamination"):
-                key = "benchmark" if c.kind == "contamination" else "ref_table"
-                need = ("reference table", c.params.get(key), ctx.ref_tables)
-            elif c.kind == "drift" and c.params.get("test") != "vocab":
-                need = ("baseline", c.column, ctx.baselines)
-            else:
-                continue
-            if need[1] not in need[2]:
-                out.append(f"{c.constraint_id} ({c.kind}) needs {need[0]} {need[1]!r}")
-    return out
+def context_needs(registry: SpecRegistry) -> list[str]:
+    """One message per table constraint whose check reads a reference
+    table or a baseline from the ``TableContext``."""
+    needs = [
+        (c, _context_need(c))
+        for spec in registry.specs.values() for c in spec.table_constraints()
+    ]
+    return [f"{c.constraint_id} ({c.kind}) needs {n[0]} {n[1]!r}" for c, n in needs if n]
 
 
 @per_context
